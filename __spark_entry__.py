@@ -59,13 +59,13 @@ def _ship_package(spark: SparkSession) -> None:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     _ship_package(spark)
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
     from legal_ner_spark.operators import extract as ops
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     n = max(16, min(64, docs.count() // 10))
-    corpus = pipeline.synthetic_corpus(spark, n)
-    return ops.triples(pipeline.extract_records(corpus))
+    corpus = synth.synthetic_corpus(spark, n)
+    return ops.triples(ops.extract_records(corpus))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

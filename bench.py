@@ -1,7 +1,7 @@
 """Benchmark harness — one JSON line to stdout.
 
 Headline metric: end-to-end KG triple extraction (corpus → fused
-mapInPandas → triples count) in docs/sec, plus representative relational /
+mapInArrow → triples count) in docs/sec, plus representative relational /
 training-data operators from the driver contract.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     from legal_ner_spark.session import get_spark
-    from legal_ner_spark import pipeline, queries
+    from legal_ner_spark import queries, synth
     from legal_ner_spark.operators import extract as ops
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -37,8 +37,8 @@ def main() -> None:
     # once per core and import the package; steady-state throughput is what
     # the bench reports)
     spark.range(1000).selectExpr("sum(id)").collect()
-    warm = pipeline.synthetic_corpus(spark, cpus * 4, partitions=cpus)
-    pipeline.extract_triples(warm).count()
+    warm = synth.synthetic_corpus(spark, cpus * 4, partitions=cpus)
+    ops.triples(ops.extract_records(warm)).count()
 
     n_docs = int(os.environ.get("BENCH_N_DOCS", "0"))
     if not n_docs:
@@ -69,8 +69,8 @@ def main() -> None:
 
     def run_kg():
         nonlocal n_triples
-        corpus = pipeline.synthetic_corpus(spark, n_docs, partitions=n_parts)
-        n_triples = ops.triples(pipeline.extract_records(corpus)).count()
+        corpus = synth.synthetic_corpus(spark, n_docs, partitions=n_parts)
+        n_triples = ops.triples(ops.extract_records(corpus)).count()
 
     kg_sec = best_of(run_kg)
     timings["kg_extract_triples"] = round(kg_sec, 3)
@@ -79,8 +79,8 @@ def main() -> None:
     # doc-vs-sent latency trade the reference documents (README.md:159-165)
     # measured under the SAME warm-up + best-of-N loop as everything else
     def run_sent():
-        corpus = pipeline.synthetic_corpus(spark, n_docs, partitions=n_parts)
-        ops.triples(pipeline.extract_records(corpus, text_type="sent")).count()
+        corpus = synth.synthetic_corpus(spark, n_docs, partitions=n_parts)
+        ops.triples(ops.extract_records(corpus, text_type="sent")).count()
 
     sent_sec = best_of(run_sent)
 

@@ -60,7 +60,7 @@ def main() -> None:
     high_cpus = int(sys.argv[4]) if len(sys.argv) > 4 else 16
 
     from legal_ner_spark.session import get_spark
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
 
     tmp = tempfile.mkdtemp(prefix="lns_scaling_")
     corpus_path = f"{tmp}/corpus"
@@ -70,7 +70,7 @@ def main() -> None:
     # when each straggler owns its own split; 4-8 tasks per core at the high
     # parallelism level
     n_parts = max(128, min(512, n_docs // 8))
-    pipeline.synthetic_corpus(spark, n_docs, partitions=n_parts) \
+    synth.synthetic_corpus(spark, n_docs, partitions=n_parts) \
         .write.mode("overwrite").parquet(corpus_path)
     spark.stop()
 

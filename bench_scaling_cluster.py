@@ -86,13 +86,13 @@ def main() -> None:
 
     sys.path.insert(0, ".")
     from legal_ner_spark.session import get_spark
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
 
     tmp = tempfile.mkdtemp(prefix="lns_scaling_lc_")
     corpus_path = f"{tmp}/corpus"
     spark = get_spark(app_name="scaling-gen", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
-    pipeline.synthetic_corpus(spark, n_docs, partitions=128) \
+    synth.synthetic_corpus(spark, n_docs, partitions=128) \
         .write.mode("overwrite").parquet(corpus_path)
     spark.stop()
 

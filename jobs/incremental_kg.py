@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from legal_ner_spark import pipeline  # noqa: E402
 from legal_ner_spark.operators import extract as ops  # noqa: E402
 from legal_ner_spark.plans import publish  # noqa: E402
 
@@ -86,17 +85,14 @@ def read_triples(spark: SparkSession, root: str) -> DataFrame:
              if t.startswith(_BATCH_PREFIX)]
     if not parts:
         raise FileNotFoundError(f"no {_BATCH_PREFIX}* tables under {root}")
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    return _union(parts)
 
 
 def ingest_batch(spark: SparkSession, root: str, corpus: DataFrame,
                  snapshot_id: str) -> dict:
     """Extract one batch and publish the next snapshot.  Returns the new
     manifest."""
-    recs = pipeline.extract_records(corpus)
+    recs = ops.extract_records(corpus)
     tri = ops.triples(recs)
     delta = triple_degrees(tri)
 

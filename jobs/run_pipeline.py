@@ -9,6 +9,11 @@ Cluster usage (north_rule deployment shape):
         --buckets 256                         # resume granularity
         --tasks-per-core 6                    # CPU-split sizing
 
+Each bucket job is one ``operators.extract.extract_records`` pass: the JVM
+assembles each document's text and the original span arrays ride through
+the Arrow stage onto the records' doc rows unchanged.  The triples table
+is written by ``sources.corpus.write_triples`` (partitioned by pred).
+
 The job is resumable: re-submitting with the same --out skips completed
 buckets via the lineage ledger (plans/ledger.py).  Model weights (production
 spaCy pipeline) ship via --archives and load lazily per executor; the
@@ -34,16 +39,13 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=16)
     ap.add_argument("--tasks-per-core", type=int, default=6)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--no-carry-spans", action="store_true",
-                    help="JVM-side text assembly; spans never cross the "
-                         "Arrow boundary (+16%% — use when the corpus "
-                         "table remains the span store)")
     args = ap.parse_args()
 
     from legal_ner_spark.session import get_spark
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
     from legal_ner_spark.plans import ledger
     from legal_ner_spark.operators import extract as ops
+    from legal_ner_spark.sources import corpus as src
 
     # local-mode robustness when launched from outside the repo root: the
     # driver's sys.path insert does not reach Python WORKERS — point them
@@ -59,17 +61,15 @@ def main() -> None:
         # shuffle before the per-bucket one)
         corpus = spark.read.parquet(args.corpus)
     else:
-        corpus = pipeline.synthetic_corpus(
+        corpus = synth.synthetic_corpus(
             spark, args.n_docs, partitions=cores * args.tasks_per_core)
 
     processed = ledger.run_with_resume(corpus, args.out,
                                        n_buckets=args.buckets,
-                                       tasks_per_core=args.tasks_per_core,
-                                       carry_spans=not args.no_carry_spans)
+                                       tasks_per_core=args.tasks_per_core)
     records = ledger.read_all_records(spark, args.out)
     triples_path = os.path.join(args.out, "triples")
-    (ops.triples(records).write.mode("overwrite")
-     .partitionBy("pred").parquet(triples_path))
+    src.write_triples(ops.triples(records), triples_path)
     summary = {
         "buckets_processed_this_run": processed,
         "n_records": records.count(),

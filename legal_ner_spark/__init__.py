@@ -4,7 +4,7 @@ engine with the query/data-processing capabilities of Legal-NLP-EkStep/legal_NER
 NOT a port: the reference is a single-process spaCy pipeline
 (/root/reference/legal_ner.py, postprocessing_utils.py, data_preparation.py);
 this engine re-expresses its operator semantics (SURVEY.md §2) as Spark
-DataFrame plans plus two Arrow-vectorized pandas stages, designed for a
+DataFrame plans plus Arrow-vectorized Python stages, designed for a
 multi-executor cluster over an Iceberg corpus of interleaved text+media docs.
 
 Layout
@@ -20,9 +20,10 @@ operators/   DataFrame-native operator library: the fused extract stage,
 functions/   Catalyst column-expression builders (pure F.* — no Python UDFs).
 plans/       lineage ledger + checkpointed resume.
 streaming/   Structured Streaming wrapper reusing the batch operators.
-pipeline.py  end-to-end KG construction entry points.
 synth.py     deterministic synthetic corpus generator (BASELINE.json input_hint
-             shape); distributed via mapInPandas, seeded per doc_id.
+             shape); ``synthetic_corpus`` distributes it via mapInPandas,
+             seeded per doc_id.  End-to-end KG construction is
+             ``operators.extract.extract_records`` → ``triples``.
 """
 
 __version__ = "0.1.0"

@@ -3,7 +3,7 @@
 emission, as one pure function.
 
 This is the unit the Spark engine vectorizes: one call per document inside a
-fused ``mapInPandas`` stage (zero-shuffle — SURVEY.md §3.1 lifecycle), and
+fused ``mapInArrow`` stage (zero-shuffle — SURVEY.md §3.1 lifecycle), and
 the same function is the single-doc oracle for pipeline equality tests.
 """
 

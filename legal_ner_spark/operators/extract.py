@@ -1,4 +1,4 @@
-"""The fused KG-extraction operator — one Arrow-vectorized ``mapInPandas``
+"""The fused KG-extraction operator — one Arrow-vectorized ``mapInArrow``
 pass over the corpus.
 
 Scale rationale (SURVEY.md §2.3): every reference operator is strictly
@@ -19,27 +19,25 @@ its partition.
 
 from __future__ import annotations
 
-from collections.abc import Iterator  # noqa: F401 (kept for API typing)
-
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import RECORDS_SCHEMA, RECORD_COLUMNS
 from ..core.extract import extract_document
-from ..synth import assemble_text
 
 
 class _ColumnBuffer:
     """Columnar record accumulator: appending into per-column lists and
     building one Arrow RecordBatch per input batch is ~5x cheaper than
     pd.DataFrame(list_of_dicts) row materialization — this is the Arrow
-    boundary of the hot path."""
+    boundary of the hot path.  The ``spans`` column is not buffered: it
+    is taken from the input batch's Arrow column (see _records_batch)."""
 
     def __init__(self):
-        self.cols: dict[str, list] = {c: [] for c in RECORD_COLUMNS}
+        self.cols: dict[str, list] = {c: [] for c in _BUFFERED_COLUMNS}
         self.n = 0
 
     def add(self, doc_id: str, ok: bool, rec_type: str, **kw):
@@ -47,19 +45,17 @@ class _ColumnBuffer:
         kw["doc_id"] = doc_id
         kw["postprocess_ok"] = ok
         kw["rec_type"] = rec_type
-        for c in RECORD_COLUMNS:
+        for c in _BUFFERED_COLUMNS:
             cols[c].append(kw.get(c))
         self.n += 1
 
-    def frame(self) -> pd.DataFrame:
-        return pd.DataFrame(self.cols, columns=RECORD_COLUMNS)
-
-    def record_batch(self) -> "pa.RecordBatch":
+    def record_batch(self, spans: "pa.Array") -> "pa.RecordBatch":
         """Typed Arrow batch — skipping the pandas intermediate on the
         OUTPUT side is worth ~19% end-to-end (measured 9.12 s → 7.66 s
         over 32k docs at 32 cores): no object-dtype Series, no
         pandas→Arrow re-conversion in the worker."""
-        arrays = [pa.array(self.cols[f.name], type=f.type)
+        arrays = [spans if f.name == "spans"
+                  else pa.array(self.cols[f.name], type=f.type)
                   for f in _PA_RECORDS_SCHEMA]
         return pa.RecordBatch.from_arrays(arrays, schema=_PA_RECORDS_SCHEMA)
 
@@ -82,15 +78,17 @@ def _spark_to_arrow(t):
 _PA_RECORDS_SCHEMA = pa.schema(
     [pa.field(f.name, _spark_to_arrow(f.dataType))
      for f in RECORDS_SCHEMA.fields])
+_PA_SPANS_TYPE = _PA_RECORDS_SCHEMA.field("spans").type
+_BUFFERED_COLUMNS = [c for c in RECORD_COLUMNS if c != "spans"]
 
 
 # Catalyst equivalent of synth.assemble_text: concat of kind='text' span
-# texts in offset order — lets the no-passthrough profile ship ONE string
-# column across the Arrow boundary instead of the whole struct array.
-# Null offsets sort FIRST (stable within), matching assemble_text's
-# (offset is not None, offset) key — a bare a.offset < b.offset comparator
-# would evaluate to null on dirty rows and leave null-offset spans in
-# place, so the two carry_spans profiles could assemble different texts.
+# texts in offset order — the document text is assembled JVM-side, so the
+# spans never become Python objects.  Null offsets sort FIRST (stable
+# within), matching assemble_text's (offset is not None, offset) key — a
+# bare a.offset < b.offset comparator would evaluate to null on dirty rows
+# and leave null-offset spans in place, so the JVM and the Python oracle
+# could assemble different texts.
 TEXT_ASSEMBLY_EXPR = (
     "array_join(transform(array_sort(filter(spans, s -> s.kind = 'text'), "
     "(a, b) -> CASE WHEN a.offset IS NULL AND b.offset IS NULL THEN 0 "
@@ -101,33 +99,33 @@ TEXT_ASSEMBLY_EXPR = (
     "s -> s.text), '')")
 
 
-def _records_for_doc(doc_id: str, spans, buf: _ColumnBuffer,
-                     text_type: str = "doc",
-                     strict_compat: bool = True,
-                     tagger=None) -> None:
-    # null-tolerant: NULL spans array / NULL struct elements degrade to an
-    # empty doc instead of failing the partition (same as the JVM-side
-    # assembly path, where Catalyst filter/array_join skip nulls).
-    # Offsets stay EXACTLY as read — including None — so the passthrough
-    # spans on the doc row are byte-identical to the input (span-sequence
-    # invariant); null offsets only matter for the assembly sort key.
-    spans_list = [dict(kind=s["kind"], text=s["text"],
-                       media_ref=s["media_ref"], offset=s["offset"])
-                  for s in (spans if spans is not None else [])
-                  if s is not None]
-    text = assemble_text(spans_list)
-    r = extract_document(doc_id, text, text_type=text_type,
-                         strict_compat=strict_compat,
-                         **({"tagger": tagger} if tagger else {}))
-    # span passthrough — the original spans array travels through the Arrow
-    # boundary untouched (span-sequence invariant: kind, text, media_ref,
-    # offset, order)
-    _emit_records(doc_id, r, spans_list, buf)
+def _records_batch(batch: "pa.RecordBatch", text_type: str = "doc",
+                   strict_compat: bool = True,
+                   tagger=None) -> "pa.RecordBatch":
+    """One input batch ``(doc_id, spans, text)`` → one RECORDS_SCHEMA
+    batch.  Only ``doc_id`` and the JVM-assembled ``text`` become Python
+    values.  The doc rows' ``spans`` are one ``take`` over the input
+    Arrow column (index = source row at doc rows, null elsewhere), so the
+    span sequence — null arrays, null elements and null fields included —
+    comes back unchanged by construction."""
+    buf = _ColumnBuffer()
+    src_row: list[int | None] = []
+    for i, (doc_id, text) in enumerate(zip(batch.column("doc_id").to_pylist(),
+                                           batch.column("text").to_pylist())):
+        r = extract_document(doc_id, text, text_type=text_type,
+                             strict_compat=strict_compat,
+                             **({"tagger": tagger} if tagger else {}))
+        n0 = buf.n
+        _emit_records(doc_id, r, buf)
+        src_row.append(i)                       # the doc row comes first
+        src_row.extend([None] * (buf.n - n0 - 1))
+    spans = pc.take(batch.column("spans"), pa.array(src_row, pa.int32()))
+    return buf.record_batch(spans.cast(_PA_SPANS_TYPE))
 
 
-def _emit_records(doc_id: str, r, spans_list, buf: _ColumnBuffer) -> None:
+def _emit_records(doc_id: str, r, buf: _ColumnBuffer) -> None:
     add = buf.add
-    add(doc_id, r.ok, "doc", n_sentences=r.n_sentences, spans=spans_list)
+    add(doc_id, r.ok, "doc", n_sentences=r.n_sentences)
     for m in r.mentions:
         add(doc_id, r.ok, "mention", ent_id=m.ent_id, sent_id=m.sent_id,
             start_char=m.start_char, end_char=m.end_char, text=m.text,
@@ -145,22 +143,18 @@ def _emit_records(doc_id: str, r, spans_list, buf: _ColumnBuffer) -> None:
             norm_provision=npro, norm_statute=nsta)
 
 
-def extract_records(corpus: DataFrame, carry_spans: bool = True,
-                    text_type: str = "doc",
+def extract_records(corpus: DataFrame, text_type: str = "doc",
                     strict_compat: bool = True,
                     tagger=None) -> DataFrame:
     """corpus(doc_id, spans) → long records table (RECORDS_SCHEMA).
     Narrow: no shuffle is introduced by this operator.
 
-    ``carry_spans=True`` (default): the original span array rides through
-    the Arrow boundary untouched and lands on the 'doc' rows — the
-    materialized span-sequence invariant.  ``carry_spans=False`` is the
-    production profile when the Iceberg corpus table itself remains the
-    span store: text assembly runs JVM-side (TEXT_ASSEMBLY_EXPR) and only
-    ONE string column crosses into Python — spans cannot be corrupted
-    because they never leave the JVM (the invariant holds by
-    construction); doc rows carry null spans.  Measured ~15% faster at 32
-    cores (the spans struct conversion is the bulk of the Arrow cost).
+    One ``mapInArrow`` pass: the JVM assembles each document's text
+    (TEXT_ASSEMBLY_EXPR), and the original ``spans`` column crosses the
+    Arrow boundary as Arrow and lands on the 'doc' rows through one
+    ``pyarrow.compute.take`` — spans never become Python objects, so the
+    span-sequence invariant (kind, text, media_ref, offset, order, nulls)
+    holds by construction.
 
     ``text_type`` ∈ {'doc','sent'} is the reference's headline
     accuracy/latency knob (legal_ner.py:24-27, README.md:159-165): 'sent'
@@ -184,38 +178,16 @@ def extract_records(corpus: DataFrame, carry_spans: bool = True,
     if text_type not in ("doc", "sent"):
         raise ValueError(f"text_type must be 'doc' or 'sent', got {text_type!r}")
 
-    if carry_spans:
-        def fn(batches):
-            for b in batches:
-                buf = _ColumnBuffer()
-                for doc_id, spans in zip(b.column("doc_id").to_pylist(),
-                                         b.column("spans").to_pylist()):
-                    _records_for_doc(doc_id, spans, buf, text_type=text_type,
-                                     strict_compat=strict_compat,
-                                     tagger=tagger)
-                yield buf.record_batch()
-
-        # explicit projection: extra corpus columns must not cross Arrow
-        return corpus.select("doc_id", "spans").mapInArrow(fn, RECORDS_SCHEMA)
-
+    # explicit projection: extra corpus columns must not cross Arrow
     assembled = corpus.select(
-        "doc_id",
+        "doc_id", "spans",
         F.coalesce(F.expr(TEXT_ASSEMBLY_EXPR), F.lit("")).alias("text"))
 
-    def fn_text(batches):
+    def fn(batches):
         for b in batches:
-            buf = _ColumnBuffer()
-            for doc_id, text in zip(b.column("doc_id").to_pylist(),
-                                    b.column("text").to_pylist()):
-                r = extract_document(doc_id, text if text is not None else "",
-                                     text_type=text_type,
-                                     strict_compat=strict_compat,
-                                     **({"tagger": tagger} if tagger
-                                        else {}))
-                _emit_records(doc_id, r, None, buf)
-            yield buf.record_batch()
+            yield _records_batch(b, text_type, strict_compat, tagger)
 
-    return assembled.mapInArrow(fn_text, RECORDS_SCHEMA)
+    return assembled.mapInArrow(fn, RECORDS_SCHEMA)
 
 
 # -- cheap projections over the (materialized) records table ----------------

@@ -314,10 +314,11 @@ def skyline_2d(df: DataFrame, d1: str, d2: str,
     back.  Work: two keyed shuffles + one ≤n_buckets window — the
     standard distributed-skyline local/global split expressed
     declaratively.  ``d1`` must be integral (the strict RANGE frame
-    needs unit steps); extend to k dims by iterating: skyline(k) ⊆
-    skyline on any 2 of the dims."""
+    needs unit steps); ``d2`` may be any orderable numeric — negative
+    and fractional values compare as given.  Extend to k dims by
+    iterating: skyline(k) ⊆ skyline on any 2 of the dims."""
     d = df.withColumn("_d1", F.col(d1).cast("bigint")) \
-          .withColumn("_d2", F.col(d2).cast("bigint"))
+          .withColumn("_d2", F.col(d2))
     mx = d.agg(F.max("_d1").alias("m")).collect()[0][0]
     if mx is None:
         return df.limit(0)
@@ -335,9 +336,12 @@ def skyline_2d(df: DataFrame, d1: str, d2: str,
     out = (d.withColumn("_s1", F.max("_d2").over(wstrict))
            .join(F.broadcast(boff.select("_bk", "_hi")), "_bk")
            .join(ties, "_d1")
-           .withColumn("_dom1", F.greatest(
-               F.coalesce("_s1", F.lit(-1)),
-               F.coalesce("_hi", F.lit(-1))) >= F.col("_d2"))
+           # null-safe: a null _s1/_hi means no row with a larger d1
+           # exists, which dominates nothing whatever the sign of d2
+           .withColumn("_dom1",
+                       F.coalesce(F.col("_s1") >= F.col("_d2"), F.lit(False))
+                       | F.coalesce(F.col("_hi") >= F.col("_d2"),
+                                    F.lit(False)))
            .withColumn("_dom2", F.col("_tm") > F.col("_d2"))
            .filter(~F.col("_dom1") & ~F.col("_dom2")))
     return out.drop("_d1", "_d2", "_bk", "_s1", "_hi", "_tm", "_tc",

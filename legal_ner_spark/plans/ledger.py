@@ -57,9 +57,7 @@ def _write_ledger_row(out_path: str, row: dict) -> None:
 
 def run_with_resume(corpus: DataFrame, out_path: str, n_buckets: int = 8,
                     fail_after: int | None = None,
-                    tasks_per_core: int = 2,
-                    carry_spans: bool = True,
-                    n_docs: int | None = None) -> list[int]:
+                    tasks_per_core: int = 2) -> list[int]:
     """Process corpus → records parquet bucket-by-bucket with resume.
 
     Each bucket job repartitions ITS OWN slice to ``tasks_per_core`` tasks
@@ -71,11 +69,7 @@ def run_with_resume(corpus: DataFrame, out_path: str, n_buckets: int = 8,
     cost of partition-atomic writes.
 
     ``fail_after`` aborts after K buckets (test hook for kill/restart).
-    ``n_docs`` is an optional corpus-size hint: callers with a catalog
-    (Iceberg snapshot summary, Hive stats) should pass it so split sizing
-    never runs a count() pass over a transformed corpus plan — on a
-    crash/restart cycle that pass would otherwise repeat per resume
-    attempt.  Returns the bucket ids processed in this run.
+    Returns the bucket ids processed in this run.
     """
     done = completed_buckets(out_path)
     pending = [b for b in range(n_buckets) if b not in done]
@@ -85,12 +79,10 @@ def run_with_resume(corpus: DataFrame, out_path: str, n_buckets: int = 8,
     cores = corpus.sparkSession.sparkContext.defaultParallelism
     # split sizing: never more splits than ~64 docs/task can fill — a
     # bucket smaller than the cluster runs on fewer tasks rather than
-    # paying 32 empty Python-worker round trips.  Without an ``n_docs``
-    # hint this is one count() pass over the corpus plan (a metadata read
-    # on a bare parquet/Iceberg scan); it only runs when buckets are
-    # pending.
-    est_bucket_docs = max(1, (n_docs if n_docs is not None
-                              else corpus.count()) // n_buckets)
+    # paying 32 empty Python-worker round trips.  This is one count() pass
+    # over the corpus plan (a metadata read on a bare parquet/Iceberg
+    # scan); it only runs when buckets are pending.
+    est_bucket_docs = max(1, corpus.count() // n_buckets)
     n_splits = max(1, min(cores * tasks_per_core, est_bucket_docs // 64 or 1))
     bucketed = corpus.withColumn(
         "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
@@ -98,7 +90,7 @@ def run_with_resume(corpus: DataFrame, out_path: str, n_buckets: int = 8,
         t0 = time.time()
         recs = ops.extract_records(
             bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-            .repartition(n_splits, "doc_id"), carry_spans=carry_spans)
+            .repartition(n_splits, "doc_id"))
         part_path = os.path.join(out_path, "records", f"bucket={b}")
         recs.write.mode("overwrite").parquet(part_path)
         spark = corpus.sparkSession

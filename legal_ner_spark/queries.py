@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .core.postprocess import STATUTE_CANON
 from .functions.text import statute_canon, normalize_entity_text, VS_RE, CIT_RE
-from . import pipeline
+from . import synth
 from .operators import extract as ops
 
 # --------------------------------------------------------------------------
@@ -2888,13 +2888,15 @@ GROUP BY token ORDER BY n DESC, token ASC LIMIT 50"""
 
 def q_collocations(spark, sf_dir):
     """Collocation mining: adjacent word bigrams with count ≥ 5 scored
-    by PMI against unigram marginals — the classic corpus-linguistics
+    by PMI − ln 2 against unigram marginals — the classic corpus-linguistics
     signal for multiword expressions ('supreme court', 'penal code').
     Bigrams come from the zip-shift device (two O(1) field reads per
     position, the shingle_rows trick at n=2); counts are grouped
     aggregates; marginals and the total broadcast into one projection;
-    PMI is a single log, rounded — the statute-PMI shape applied to
-    the token stream."""
+    the score is a single log, rounded — the statute-PMI shape applied
+    to the token stream.  The unigram marginals count both bigram slots
+    (total 2t), so log(n·2t / (c1·c2)) is PMI − ln 2: rankings are PMI's,
+    the ``pmi`` column is offset by the constant ln 2."""
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     toks = docs.select(F.split(F.lower("text"), " ").alias("toks"))
     big = (toks.select(F.explode(F.expr(
@@ -4542,8 +4544,8 @@ SELECT html, trim({footers}) AS text FROM assembled"""
 def _kg_records(spark, sf_dir):
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     n = max(24, min(120, docs.count() // 8))
-    corpus = pipeline.synthetic_corpus(spark, n)
-    return pipeline.extract_records(corpus)
+    corpus = synth.synthetic_corpus(spark, n)
+    return ops.extract_records(corpus)
 
 
 # The kg_* aggregates run over a records table MATERIALIZED to a fixed

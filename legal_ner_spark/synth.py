@@ -8,7 +8,7 @@ media spans carry ``media_ref`` and empty text and must pass through the
 engine untouched (span-sequence invariant).
 
 Seeded **per document id** (not per run), so generation distributes
-embarrassingly: the Spark builder fans ``gen_doc`` out over a ``spark.range``
+embarrassingly: ``synthetic_corpus`` fans ``gen_doc`` out over a ``spark.range``
 via mapInPandas — no driver-side materialization, works at any scale.
 Document shapes follow the reference corpus structure (preamble with parties/
 court/judges + keyword line, data_preparation.py:37; judgment sentences with
@@ -202,13 +202,30 @@ def assemble_text(spans: list[dict]) -> str:
     (BASELINE.json input_hint).  Null-tolerant like the Catalyst form
     (operators/extract.TEXT_ASSEMBLY_EXPR): a null spans array, null
     struct elements, and null text values all degrade to '' rather than
-    raising — both profiles must treat dirty rows identically."""
+    raising — the oracle and the JVM assembly treat dirty rows
+    identically."""
     if not spans:
         return ""
     # null offsets sort FIRST, stably — the same total order as the
     # Catalyst comparator in operators/extract.TEXT_ASSEMBLY_EXPR, so both
-    # carry_spans profiles assemble identical text on dirty rows
+    # assemble identical text on dirty rows
     return "".join(s["text"] for s in sorted(
         (s for s in spans if s is not None),
         key=lambda s: (0, 0) if s["offset"] is None else (1, s["offset"]))
         if s["kind"] == "text" and s["text"] is not None)
+
+
+def synthetic_corpus(spark, n_docs: int, partitions: int | None = None):
+    """Distributed deterministic corpus DataFrame(doc_id, spans):
+    spark.range fan-out, one gen_doc per id, seeded by id — no driver
+    materialization, scales to any n_docs."""
+    import pandas as pd
+    from .schema import CORPUS_SCHEMA
+
+    def gen(batches):
+        for pdf in batches:
+            yield pd.DataFrame([gen_doc(int(i)) for i in pdf["id"]],
+                               columns=["doc_id", "spans"])
+
+    rng = spark.range(n_docs, numPartitions=partitions)
+    return rng.mapInPandas(gen, CORPUS_SCHEMA)

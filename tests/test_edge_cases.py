@@ -4,7 +4,6 @@ holding the span-sequence invariant (kind, text, media_ref, order)."""
 
 from pyspark.sql import functions as F
 
-from legal_ner_spark import pipeline
 from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.schema import CORPUS_SCHEMA
 
@@ -38,28 +37,34 @@ def test_all_media_doc_passes_spans_through_untouched(spark):
 
 def test_null_spans_rows_degrade_not_crash(spark):
     """NULL spans arrays, NULL struct elements, and NULL text values must
-    degrade to empty docs in BOTH extraction profiles (a real corpus
-    always contains dirty rows; one bad row must not fail a partition)."""
+    degrade to empty docs (a real corpus always contains dirty rows; one
+    bad row must not fail a partition) — and the doc row's spans must
+    equal the input exactly: a null array stays null, null elements stay
+    in place."""
+    good = {"kind": "text", "text": "Section 302 of the Indian Penal Code. ",
+            "media_ref": None, "offset": 1}
     rows = [
         ("doc_null_arr", None),
         ("doc_null_text", [{"kind": "text", "text": None,
-                            "media_ref": None, "offset": 0},
-                           {"kind": "text",
-                            "text": "Section 302 of the Indian Penal Code. ",
-                            "media_ref": None, "offset": 1}]),
+                            "media_ref": None, "offset": 0}, good]),
+        ("doc_null_elem", [None, good, None]),
     ]
-    corpus = _corpus(spark, rows)
-    for carry in (True, False):
-        recs = ops.extract_records(corpus, carry_spans=carry).cache()
-        docs = {r.doc_id for r in
-                recs.filter(F.col("rec_type") == "doc").collect()}
-        assert docs == {"doc_null_arr", "doc_null_text"}, (carry, docs)
-        # the null-text span is skipped; the good span still extracts
-        assert recs.filter("rec_type = 'triple' AND pred = 'part_of' "
-                           "AND doc_id = 'doc_null_text'").count() >= 1
-        assert recs.filter("doc_id = 'doc_null_arr' "
-                           "AND rec_type = 'triple'").count() == 0
-        recs.unpersist()
+    recs = ops.extract_records(_corpus(spark, rows)).cache()
+    spans = {r.doc_id: r.spans for r in
+             recs.filter(F.col("rec_type") == "doc").collect()}
+    assert set(spans) == {r[0] for r in rows}
+    for doc_id, want in rows:
+        got = spans[doc_id]
+        assert (None if got is None else
+                [s if s is None else s.asDict() for s in got]) == want, doc_id
+    # the null-text span and the null elements are skipped; the good span
+    # still extracts
+    for doc_id in ("doc_null_text", "doc_null_elem"):
+        assert recs.filter(f"rec_type = 'triple' AND pred = 'part_of' "
+                           f"AND doc_id = '{doc_id}'").count() >= 1
+    assert recs.filter("doc_id = 'doc_null_arr' "
+                       "AND rec_type = 'triple'").count() == 0
+    recs.unpersist()
 
 
 def test_wide_span_array_roundtrips(spark):

@@ -4,7 +4,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from legal_ner_spark import pipeline
+from legal_ner_spark import synth
 from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.operators import graph
 from legal_ner_spark.sources import corpus as src
@@ -12,8 +12,8 @@ from legal_ner_spark.sources import corpus as src
 
 @pytest.fixture(scope="module")
 def triples(spark):
-    c = pipeline.synthetic_corpus(spark, 24, partitions=4)
-    t = ops.triples(pipeline.extract_records(c)).cache()
+    c = synth.synthetic_corpus(spark, 24, partitions=4)
+    t = ops.triples(ops.extract_records(c)).cache()
     t.count()
     yield t
     t.unpersist()

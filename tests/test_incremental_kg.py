@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from legal_ner_spark import pipeline
+from legal_ner_spark import synth
 from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.plans import publish
 from jobs.incremental_kg import (ingest_batch, read_triples,
@@ -17,7 +17,7 @@ from jobs.incremental_kg import (ingest_batch, read_triples,
 
 @pytest.fixture()
 def corpora(spark):
-    full = pipeline.synthetic_corpus(spark, 24, partitions=4).cache()
+    full = synth.synthetic_corpus(spark, 24, partitions=4).cache()
     b1 = full.filter(F.col("doc_id") < "doc_00000012")
     b2 = full.filter(F.col("doc_id") >= "doc_00000012")
     yield full, b1, b2
@@ -34,7 +34,7 @@ def test_two_batches_equal_full_recompute(spark, tmp_path, corpora):
     ingest_batch(spark, root, b1, "day1")
     ingest_batch(spark, root, b2, "day2")
     got = read_triples(spark, root)
-    want = ops.triples(pipeline.extract_records(full))
+    want = ops.triples(ops.extract_records(full))
     assert _sorted_rows(got) == _sorted_rows(want)
     # incremental degree fold == recompute over the whole corpus
     deg_inc = publish.read_published(spark, root, "kg_degrees")
@@ -150,7 +150,7 @@ def test_stream_kg_ingest_matches_batch_and_restart_noop(spark, tmp_path,
     q = stream_kg_ingest(spark, in_dir, root, ckpt)
     assert q.awaitTermination(180)
     got = _sorted_rows(read_triples(spark, root))
-    want = _sorted_rows(ops.triples(pipeline.extract_records(full)))
+    want = _sorted_rows(ops.triples(ops.extract_records(full)))
     assert got == want
     man1 = publish.current_manifest(root)
     deg1 = sorted(map(tuple, publish.read_published(

@@ -5,7 +5,7 @@ correctness gates."""
 import pandas as pd
 import pytest
 
-from legal_ner_spark import pipeline, synth
+from legal_ner_spark import synth
 from legal_ner_spark.core.extract import extract_document
 from legal_ner_spark.operators import extract as ops
 
@@ -14,8 +14,8 @@ N_DOCS = 24
 
 @pytest.fixture(scope="module")
 def records(spark):
-    corpus = pipeline.synthetic_corpus(spark, N_DOCS, partitions=6)
-    recs = pipeline.extract_records(corpus).cache()
+    corpus = synth.synthetic_corpus(spark, N_DOCS, partitions=6)
+    recs = ops.extract_records(corpus).cache()
     recs.count()
     yield recs
     recs.unpersist()
@@ -61,11 +61,11 @@ def test_mentions_well_formed(records):
 def test_determinism_across_parallelism(spark):
     """Same input ⇒ identical triples at different partition counts
     (catches order-sensitivity leaks from the greedy stages)."""
-    t1 = {(r.doc_id, r.subj, r.pred, r.obj) for r in pipeline.extract_triples(
-        pipeline.synthetic_corpus(spark, 12, partitions=1)).collect()}
-    t8 = {(r.doc_id, r.subj, r.pred, r.obj) for r in pipeline.extract_triples(
-        pipeline.synthetic_corpus(spark, 12, partitions=8)).collect()}
-    assert t1 == t8
+    def triples(partitions):
+        corpus = synth.synthetic_corpus(spark, 12, partitions=partitions)
+        return {(r.doc_id, r.subj, r.pred, r.obj)
+                for r in ops.triples(ops.extract_records(corpus)).collect()}
+    assert triples(1) == triples(8)
 
 
 def test_reference_aggregations(records):
@@ -89,7 +89,7 @@ def test_jvm_text_assembly_matches_python(spark):
     from pyspark.sql import functions as F
     from legal_ner_spark import synth
     from legal_ner_spark.operators.extract import TEXT_ASSEMBLY_EXPR
-    corpus = pipeline.synthetic_corpus(spark, 32, partitions=4)
+    corpus = synth.synthetic_corpus(spark, 32, partitions=4)
     got = {r.doc_id: r.text for r in corpus.select(
         "doc_id", F.expr(TEXT_ASSEMBLY_EXPR).alias("text")).collect()}
     for i in range(32):
@@ -97,28 +97,15 @@ def test_jvm_text_assembly_matches_python(spark):
         assert got[d["doc_id"]] == synth.assemble_text(d["spans"])
 
 
-def test_no_passthrough_profile_matches_default(spark):
-    """carry_spans=False must produce the identical records minus the
-    spans column (null on doc rows)."""
-    from pyspark.sql import functions as F
-    corpus = pipeline.synthetic_corpus(spark, 24, partitions=4)
-    cols = [c for c in ops.RECORD_COLUMNS if c != "spans"]
-    a = ops.extract_records(corpus, carry_spans=True).select(*cols)
-    b = ops.extract_records(corpus, carry_spans=False).select(*cols)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    nospans = ops.extract_records(corpus, carry_spans=False)
-    assert nospans.filter("rec_type = 'doc' AND spans IS NOT NULL").count() == 0
-
-
 def test_sent_mode_end_to_end_matches_core(spark):
     """text_type='sent' plumbed through the Spark operator (legal_ner.py:
     24-27 run_type knob): the fused stage's triples must exactly match the
     single-doc core in sent mode, and the knob must be live (sent vs doc
     may differ on boundary-spanning entities)."""
-    corpus = pipeline.synthetic_corpus(spark, 16, partitions=4)
+    corpus = synth.synthetic_corpus(spark, 16, partitions=4)
     got = {(r.doc_id, r.subj, r.pred, r.obj)
            for r in ops.triples(
-               pipeline.extract_records(corpus, text_type="sent")).collect()}
+               ops.extract_records(corpus, text_type="sent")).collect()}
     golden = set()
     for i in range(16):
         d = synth.gen_doc(i)
@@ -130,10 +117,9 @@ def test_sent_mode_end_to_end_matches_core(spark):
 
 def test_null_offset_spans_pass_through_and_assemble_identically(spark):
     """Dirty rows: a null offset must survive the Arrow round trip as null
-    (not 0) on the doc row's passthrough spans, and both carry_spans
-    profiles must assemble the same text (null-offset spans sort first,
-    stably, in both the Python and Catalyst comparators)."""
-    from pyspark.sql import types as T
+    (not 0) on the doc row's passthrough spans, and the JVM assembly must
+    equal the Python oracle (null-offset spans sort first, stably, in
+    both the Python and Catalyst comparators)."""
     from legal_ner_spark.schema import CORPUS_SCHEMA
     rows = [
         ("d0", [{"kind": "text", "text": "b ", "media_ref": None, "offset": 5},
@@ -142,7 +128,7 @@ def test_null_offset_spans_pass_through_and_assemble_identically(spark):
                 {"kind": "text", "text": "a ", "media_ref": None, "offset": 1}]),
     ]
     corpus = spark.createDataFrame(rows, CORPUS_SCHEMA)
-    doc = ops.extract_records(corpus, carry_spans=True) \
+    doc = ops.extract_records(corpus) \
         .filter("rec_type = 'doc'").collect()[0]
     offsets = [s.offset for s in doc.spans]
     assert offsets == [5, None, None, 1]          # untouched, including nulls
@@ -157,10 +143,9 @@ def test_extract_records_strict_compat_toggle(spark):
     """The fixed-quirk mode must run end-to-end through the Spark
     operator and produce a records table of the same shape; strict mode
     stays the default (the parity gates depend on it)."""
-    from legal_ner_spark import pipeline
-    corpus = pipeline.synthetic_corpus(spark, 12, partitions=4)
-    strict = pipeline.extract_records(corpus).cache()
-    fixed = pipeline.extract_records(corpus, strict_compat=False).cache()
+    corpus = synth.synthetic_corpus(spark, 12, partitions=4)
+    strict = ops.extract_records(corpus).cache()
+    fixed = ops.extract_records(corpus, strict_compat=False).cache()
     assert strict.schema == fixed.schema
     assert fixed.filter("rec_type = 'doc'").count() == 12
     # fixed mode never degrades MORE docs than strict (the guarded

@@ -134,9 +134,9 @@ def test_fused_extract_is_narrow_zero_exchange(spark):
     fused mapInPandas → triples projection introduces NO shuffle.  The
     only allowed Exchange would come from an explicit repartition the
     caller adds; the operator itself must stay narrow."""
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
     from legal_ner_spark.operators import extract as ops
-    corpus = pipeline.synthetic_corpus(spark, 8, partitions=2)
+    corpus = synth.synthetic_corpus(spark, 8, partitions=2)
     p = physical(ops.triples(ops.extract_records(corpus)))
     assert "Exchange" not in p, p[:3000]
     assert "MapInPandas" in p, p[:2000]

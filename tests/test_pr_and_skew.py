@@ -5,7 +5,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from legal_ner_spark import pipeline, synth
+from legal_ner_spark import synth
 from legal_ner_spark.core.extract import extract_document
 from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.operators.skew import (salted_two_phase_count,
@@ -19,9 +19,9 @@ def test_triple_precision_recall_gate(spark):
     fixtures (golden = single-doc core over the same corpus).  The engine
     is the same semantics distributed, so the measured value is 1.0 — any
     drop indicates a distribution artifact."""
-    corpus = pipeline.synthetic_corpus(spark, N_DOCS, partitions=8)
+    corpus = synth.synthetic_corpus(spark, N_DOCS, partitions=8)
     got = {(r.doc_id, r.subj, r.pred, r.obj)
-           for r in pipeline.extract_triples(corpus).collect()}
+           for r in ops.triples(ops.extract_records(corpus)).collect()}
     golden = set()
     for i in range(N_DOCS):
         d = synth.gen_doc(i)

@@ -151,16 +151,22 @@ _span_st = st.one_of(
 def test_records_total_on_arbitrary_span_arrays(spans):
     """The Python side of the fused stage never raises on dirty span
     arrays (null arrays, null elements, null fields, negative offsets,
-    unknown kinds) — one bad row must degrade, not kill its partition."""
-    from legal_ner_spark.operators.extract import _ColumnBuffer, _records_for_doc
-    from legal_ner_spark.synth import assemble_text
-    buf = _ColumnBuffer()
-    # kind=None comparisons: assemble_text treats non-'text' as media
-    _records_for_doc("fuzz", spans, buf)
-    pdf = buf.frame()
-    assert (pdf["rec_type"] == "doc").sum() == 1
-    if spans:
-        assert isinstance(assemble_text([s for s in spans if s]), str)
+    unknown kinds) — one bad row must degrade, not kill its partition —
+    and the doc row's spans come back exactly as given."""
+    import pyarrow as pa
+    from legal_ner_spark.operators.extract import (_PA_SPANS_TYPE,
+                                                   _records_batch)
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": ["fuzz"], "spans": [spans],
+         "text": [synth.assemble_text(spans)]},
+        schema=pa.schema([("doc_id", pa.string()), ("spans", _PA_SPANS_TYPE),
+                          ("text", pa.string())]))
+    out = _records_batch(batch).to_pydict()
+    doc_rows = [i for i, t in enumerate(out["rec_type"]) if t == "doc"]
+    assert len(doc_rows) == 1
+    assert out["spans"][doc_rows[0]] == spans
+    assert all(s is None for i, s in enumerate(out["spans"])
+               if i != doc_rows[0])
 
 
 def test_simhash_pigeonhole_banding_is_complete(spark):

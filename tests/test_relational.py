@@ -5,15 +5,15 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from legal_ner_spark import pipeline
+from legal_ner_spark import synth
 from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.operators import relational as rel
 
 
 @pytest.fixture(scope="module")
 def mentions(spark):
-    corpus = pipeline.synthetic_corpus(spark, 20, partitions=4)
-    recs = pipeline.extract_records(corpus).cache()
+    corpus = synth.synthetic_corpus(spark, 20, partitions=4)
+    recs = ops.extract_records(corpus).cache()
     recs.count()
     yield ops.mentions(recs)
     recs.unpersist()
@@ -71,8 +71,8 @@ def test_precedent_clusters_cc_agrees_with_core_on_pairs(spark, mentions):
     transitive chains don't occur), modulo supra members which the
     relational form doesn't ingest."""
     cc = rel.precedent_clusters_cc(mentions).toPandas()
-    corpus = pipeline.synthetic_corpus(spark, 20, partitions=4)
-    recs = pipeline.extract_records(corpus)
+    corpus = synth.synthetic_corpus(spark, 20, partitions=4)
+    recs = ops.extract_records(corpus)
     core = ops.precedent_clusters(recs).toPandas()
     # core clusters restricted to PRECEDENT-text members (exclude supra
     # person-name members): every such pair must share a CC cluster
@@ -212,16 +212,19 @@ def test_session_window_gap_boundary(spark):
 
 
 def test_skyline_2d_fuzz_vs_bruteforce(spark):
-    """Random integer point sets (with deliberate duplicates and
-    ties): the bucketed strict-cummax skyline must equal brute-force
-    dominance filtering exactly — duplicates of a frontier point all
-    survive (neither strictly dominates the other)."""
+    """Random point sets (with deliberate duplicates and ties; integer
+    d1, and d2 drawn non-negative, negative, and fractional): the
+    bucketed strict-cummax skyline must equal brute-force dominance
+    filtering exactly — duplicates of a frontier point all survive
+    (neither strictly dominates the other)."""
     import random
     from legal_ner_spark.operators import relational
     rng = random.Random(11)
-    for trial in range(4):
-        pts = [(i, rng.randrange(20), rng.randrange(20))
-               for i in range(60)]
+    draws = [lambda: rng.randrange(20), lambda: rng.randrange(20),
+             lambda: rng.randrange(-30, 0), lambda: rng.randrange(-20, 20),
+             lambda: rng.randrange(40) / 8, lambda: rng.randrange(-40, 40) / 8]
+    for trial, draw_b in enumerate(draws):
+        pts = [(i, rng.randrange(20), draw_b()) for i in range(60)]
         pts += [(100 + i, pts[i][1], pts[i][2]) for i in range(5)]
         df = spark.createDataFrame(pts, ["pid", "a", "b"])
         got = sorted((r.pid, r.a, r.b)

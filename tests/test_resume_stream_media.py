@@ -5,7 +5,7 @@ import os
 
 import pytest
 
-from legal_ner_spark import pipeline
+from legal_ner_spark import synth
 from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.operators import multimodal
 from legal_ner_spark.plans import ledger
@@ -14,7 +14,7 @@ from legal_ner_spark.streaming.stream import stream_extract
 
 @pytest.fixture()
 def corpus(spark):
-    return pipeline.synthetic_corpus(spark, 16, partitions=4)
+    return synth.synthetic_corpus(spark, 16, partitions=4)
 
 
 def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
@@ -32,7 +32,7 @@ def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
     resumed = {(r.doc_id, r.subj, r.pred, r.obj) for r in ops.triples(
         ledger.read_all_records(spark, out)).collect()}
     direct = {(r.doc_id, r.subj, r.pred, r.obj)
-              for r in pipeline.extract_triples(corpus).collect()}
+              for r in ops.triples(ops.extract_records(corpus)).collect()}
     assert resumed == direct
     # lineage rows carry metrics
     row = next(iter(ledger.completed_buckets(out).values()))
@@ -55,7 +55,7 @@ def test_stream_extract_matches_batch(spark, corpus, tmp_path):
     got = {(r.doc_id, r.subj, r.pred, r.obj)
            for r in ops.triples(spark.read.parquet(out_dir)).collect()}
     want = {(r.doc_id, r.subj, r.pred, r.obj)
-            for r in pipeline.extract_triples(corpus).collect()}
+            for r in ops.triples(ops.extract_records(corpus)).collect()}
     assert got == want
     # availableNow + checkpoint: restarting processes nothing new
     q2 = stream_extract(spark, corpus_dir, out_dir, ckpt)

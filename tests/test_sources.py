@@ -4,7 +4,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from legal_ner_spark import pipeline
+from legal_ner_spark import synth
+from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.sources import corpus as src
 
 
@@ -12,16 +13,16 @@ def test_jsonl_roundtrip_preserves_records(spark, tmp_path):
     """corpus → JSONL (gzip) → read back: the extraction output over
     the roundtripped corpus equals the original's — spans (media
     included) survive the JSON boundary intact."""
-    corpus = pipeline.synthetic_corpus(spark, 12, partitions=2)
+    corpus = synth.synthetic_corpus(spark, 12, partitions=2)
     loc = str(tmp_path / "corpus_jsonl")
     src.write_corpus_jsonl(corpus, loc)
     back = src.read_corpus_jsonl(spark, loc)
     a = sorted(str(r) for r in
-               pipeline.extract_records(corpus)
+               ops.extract_records(corpus)
                .select("doc_id", "rec_type", "subj", "pred", "obj")
                .collect())
     b = sorted(str(r) for r in
-               pipeline.extract_records(back)
+               ops.extract_records(back)
                .select("doc_id", "rec_type", "subj", "pred", "obj")
                .collect())
     assert a == b and len(a) > 0

@@ -3,7 +3,7 @@ guard path."""
 
 import pytest
 
-from legal_ner_spark import pipeline
+from legal_ner_spark import synth
 from legal_ner_spark.sources import corpus as src
 from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.core.extract import extract_document
@@ -12,7 +12,7 @@ from legal_ner_spark import synth
 
 
 def test_corpus_roundtrip_parquet(spark, tmp_path):
-    c = pipeline.synthetic_corpus(spark, 8, partitions=2)
+    c = synth.synthetic_corpus(spark, 8, partitions=2)
     loc = str(tmp_path / "corpus")
     src.write_corpus(c, loc)
     back = src.read_corpus(spark, loc)
@@ -23,8 +23,8 @@ def test_corpus_roundtrip_parquet(spark, tmp_path):
 
 
 def test_records_and_triples_layout(spark, tmp_path):
-    c = pipeline.synthetic_corpus(spark, 8, partitions=2)
-    recs = pipeline.extract_records(c)
+    c = synth.synthetic_corpus(spark, 8, partitions=2)
+    recs = ops.extract_records(c)
     src.write_records(recs, str(tmp_path / "records"))
     src.write_triples(ops.triples(recs), str(tmp_path / "triples"))
     r = spark.read.parquet(str(tmp_path / "records"))

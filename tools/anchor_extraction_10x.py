@@ -58,7 +58,7 @@ def _tree_peak_rss_mb() -> int:
 
 def main() -> None:
     from legal_ner_spark.session import get_spark
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
     from legal_ner_spark.operators import extract as ops
     from legal_ner_spark.plans import ledger
 
@@ -70,7 +70,7 @@ def main() -> None:
 
     corpus_path = f"{tmp}/corpus"
     t0 = time.time()
-    pipeline.synthetic_corpus(spark, n_docs, partitions=256) \
+    synth.synthetic_corpus(spark, n_docs, partitions=256) \
         .write.mode("overwrite").parquet(corpus_path)
     t_gen = time.time() - t0
 
@@ -85,16 +85,14 @@ def main() -> None:
 
     out = f"{tmp}/ledgered"
     t0 = time.time()
-    done = ledger.run_with_resume(corpus, out, n_buckets=n_buckets,
-                                  n_docs=n_docs)
+    done = ledger.run_with_resume(corpus, out, n_buckets=n_buckets)
     wall_ledger = time.time() - t0
     rows = ledger.completed_buckets(out)
     n_records = sum(r["n_records"] for r in rows.values())
     ledger_docs = sum(r["n_docs"] for r in rows.values())
     # resume property at this N: an immediate re-submit must be a no-op
     t0 = time.time()
-    again = ledger.run_with_resume(corpus, out, n_buckets=n_buckets,
-                                   n_docs=n_docs)
+    again = ledger.run_with_resume(corpus, out, n_buckets=n_buckets)
     t_resubmit = time.time() - t0
 
     print(json.dumps({

@@ -1,8 +1,9 @@
 #!/bin/bash
 # One-command reproduction of every round gate, in order:
 #   1. pytest suite (unit + golden + property + plan-audit + resume)
-#   2. Spark-vs-DuckDB oracle parity at sf0.01 (the driver's gate)
-#   3. bench.py (throughput + attached scaling evidence)
+#   2. the KG-construction benchmark's own tests (kgbench/)
+#   3. Spark-vs-DuckDB oracle parity at sf0.01 (the driver's gate)
+#   4. bench.py (throughput + attached scaling evidence)
 # Optional slow extras (pass --full): sf0.001 oracle parity, the
 # two-parallelism scaling run, and the multi-executor scaling run.
 set -e
@@ -10,6 +11,9 @@ cd "$(dirname "$0")/.."
 
 echo "== pytest =="
 python -m pytest tests/ -q
+
+echo "== kgbench tests =="
+python3 -m pytest kgbench -q
 
 echo "== oracle parity (sf0.01) =="
 python tools/check_oracles.py /root/testdata/sf0.01

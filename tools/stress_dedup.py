@@ -16,7 +16,7 @@ sys.path.insert(0, ".")
 def main() -> None:
     from legal_ner_spark.session import get_spark
     from pyspark.sql import functions as F
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
     from legal_ner_spark.operators import dedup
     from legal_ner_spark.operators.extract import TEXT_ASSEMBLY_EXPR
 
@@ -24,7 +24,7 @@ def main() -> None:
     threshold = float(sys.argv[2]) if len(sys.argv) > 2 else 0.5
     spark = get_spark(master="local[32]", shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
-    corpus = pipeline.synthetic_corpus(spark, n, partitions=max(64, n // 256))
+    corpus = synth.synthetic_corpus(spark, n, partitions=max(64, n // 256))
     docs = corpus.select(
         "doc_id",
         F.coalesce(F.expr(TEXT_ASSEMBLY_EXPR), F.lit("")).alias("text"))
@@ -56,13 +56,13 @@ def passages(n: int = 65536) -> None:
     re-join stage).  Usage: python tools/stress_dedup.py passages [n]."""
     from legal_ner_spark.session import get_spark
     from pyspark.sql import functions as F
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
     from legal_ner_spark.operators import dedup
     from legal_ner_spark.operators.extract import TEXT_ASSEMBLY_EXPR
 
     spark = get_spark(master="local[32]", shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
-    corpus = pipeline.synthetic_corpus(spark, n, partitions=max(64, n // 256))
+    corpus = synth.synthetic_corpus(spark, n, partitions=max(64, n // 256))
     docs = corpus.select(
         "doc_id",
         F.coalesce(F.expr(TEXT_ASSEMBLY_EXPR), F.lit("")).alias("text"))

@@ -27,7 +27,7 @@ def main() -> None:
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 12
     per = int(sys.argv[2]) if len(sys.argv) > 2 else 1000
     from legal_ner_spark.session import get_spark
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
     from legal_ner_spark.operators import extract as ops
     from legal_ner_spark.plans import publish
     from jobs.incremental_kg import (ingest_batch, read_triples, compact,
@@ -38,8 +38,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="lns_ikg_") + "/kg"
 
-    full = pipeline.synthetic_corpus(spark, n_batches * per,
-                                     partitions=128).cache()
+    full = synth.synthetic_corpus(spark, n_batches * per,
+                                  partitions=128).cache()
     full.count()
     ids = sorted(r.doc_id for r in full.select("doc_id").collect())
     walls = []
@@ -55,13 +55,13 @@ def main() -> None:
     publish.vacuum(root)
 
     got = read_triples(spark, root).count()
-    want = ops.triples(pipeline.extract_records(full)).count()
+    want = ops.triples(ops.extract_records(full)).count()
     deg_inc = {r.node: (r.out_degree, r.in_degree)
                for r in publish.read_published(
                    spark, root, "kg_degrees").collect()}
     deg_full = {r.node: (r.out_degree, r.in_degree)
                 for r in triple_degrees(
-                    ops.triples(pipeline.extract_records(full))).collect()}
+                    ops.triples(ops.extract_records(full))).collect()}
     half = n_batches // 2
     drift = (sum(walls[half:]) / (n_batches - half)) / \
             (sum(walls[1:half]) / (half - 1))

@@ -30,7 +30,8 @@ sys.path.insert(0, ".")
 
 def main() -> None:
     from legal_ner_spark.session import get_spark
-    from legal_ner_spark import pipeline
+    from legal_ner_spark import synth
+    from legal_ner_spark.operators import extract as ops
     from legal_ner_spark.schema import CORPUS_SCHEMA
 
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 8192
@@ -54,14 +55,14 @@ def main() -> None:
         [("mega_doc", [{"kind": "text", "text": mega_text,
                         "media_ref": None, "offset": 0}])], CORPUS_SCHEMA)
 
-    base = pipeline.synthetic_corpus(spark, n_docs, partitions=64)
+    base = synth.synthetic_corpus(spark, n_docs, partitions=64)
 
     def wall(corpus):
         t0 = time.time()
-        n = pipeline.extract_records(corpus).count()
+        n = ops.extract_records(corpus).count()
         return time.time() - t0, n
 
-    wall(pipeline.synthetic_corpus(spark, 512, partitions=16))  # warm-up
+    wall(synth.synthetic_corpus(spark, 512, partitions=16))  # warm-up
     t_base, n_base = wall(base)
     t_solo, n_solo = wall(mega)
     t_mixed, n_mixed = wall(base.unionByName(mega))
