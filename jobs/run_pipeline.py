@@ -7,12 +7,15 @@ Cluster usage (north_rule deployment shape):
         --corpus  <iceberg-or-parquet path>   # omit to synthesize
         --out     <output path>               # records + _ledger + triples
         --buckets 256                         # resume granularity
-        --tasks-per-core 6                    # CPU-split sizing
+        --tasks-per-core 6                    # synthetic corpus splits
 
-Each bucket job is one ``operators.extract.extract_records`` pass: the JVM
-assembles each document's text and the original span arrays ride through
-the Arrow stage onto the records' doc rows unchanged.  The triples table
-is written by ``sources.corpus.write_triples`` (partitioned by pred).
+One run writes every pending bucket with one
+``operators.extract.extract_records`` pass over the corpus scan's own
+splits: the JVM assembles each document's text and the original span
+arrays ride through the Arrow stage onto the records' doc rows unchanged.
+``--tasks-per-core`` only sizes the synthetic corpus (``--corpus``
+omitted); a given corpus keeps its scan splits.  The triples table is
+written by ``sources.corpus.write_triples`` (partitioned by pred).
 
 The job is resumable: re-submitting with the same --out skips completed
 buckets via the lineage ledger (plans/ledger.py).  Model weights (production
@@ -56,17 +59,16 @@ def main() -> None:
                       extra_conf={"spark.executorEnv.PYTHONPATH": repo_root})
     cores = spark.sparkContext.defaultParallelism
     if args.corpus:
-        # no repartition here: run_with_resume sizes each bucket job's own
-        # splits (an outer repartition would just add a second full-corpus
-        # shuffle before the per-bucket one)
+        # no repartition here: the ledger extracts on the scan's own
+        # splits (a shuffle before the Python stage costs more than it
+        # spreads)
         corpus = spark.read.parquet(args.corpus)
     else:
         corpus = synth.synthetic_corpus(
             spark, args.n_docs, partitions=cores * args.tasks_per_core)
 
     processed = ledger.run_with_resume(corpus, args.out,
-                                       n_buckets=args.buckets,
-                                       tasks_per_core=args.tasks_per_core)
+                                       n_buckets=args.buckets)
     records = ledger.read_all_records(spark, args.out)
     triples_path = os.path.join(args.out, "triples")
     src.write_triples(ops.triples(records), triples_path)

@@ -70,6 +70,14 @@ __all__ = ["bgp_match", "bgp_match_delta", "property_path", "path_edges",
 _TERM_COLS = ("subj", "pred", "obj", "doc_id")
 
 
+def _pred_counts(triples: DataFrame) -> dict:
+    """``{pred: row count}`` of a triple table: the selectivity probe
+    behind join order and broadcast hints, one ≤|preds|-row aggregate
+    collected as literals."""
+    return {r["pred"]: r["n"] for r in
+            triples.groupBy("pred").agg(F.count("*").alias("n")).collect()}
+
+
 def _is_var(term) -> bool:
     return isinstance(term, str) and term.startswith("?")
 
@@ -256,9 +264,8 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
     pats, opats, mpats = _norm(patterns), _norm(optional), _norm(minus)
 
     # selectivity probe: one ≤|preds|-row aggregate, collected as literals
-    pred_counts = pred_stats if pred_stats is not None else {
-        r["pred"]: r["n"] for r in
-        triples.groupBy("pred").agg(F.count("*").alias("n")).collect()}
+    pred_counts = pred_stats if pred_stats is not None \
+        else _pred_counts(triples)
     total = sum(pred_counts.values()) or 1
 
     def _compile(p, src=None):
@@ -781,9 +788,7 @@ def bgp_match_delta(full: DataFrame, delta: DataFrame, patterns, *,
                 "pinned leg would enumerate them — rematch path "
                 "queries per batch instead")
     if pred_stats is None:
-        pred_stats = {r["pred"]: r["n"] for r in
-                      full.groupBy("pred").agg(F.count("*").alias("n"))
-                      .collect()}
+        pred_stats = _pred_counts(full)
     out = None
     for i in range(len(pats)):
         srcs = [delta if j == i else None for j in range(len(pats))]
@@ -980,11 +985,8 @@ def path_relation(triples: DataFrame, expr: str, *, max_hops: int = 8,
     left side), splitting the runs.  Every shuffle is keyed — no
     product shape anywhere."""
     steps = _parse_path(expr)
-    need_probe = pred_stats is None and len(steps) > 1
-    if need_probe:
-        pred_stats = {r["pred"]: r["n"] for r in
-                      triples.groupBy("pred")
-                      .agg(F.count("*").alias("n")).collect()}
+    if pred_stats is None and len(steps) > 1:
+        pred_stats = _pred_counts(triples)
     total = float(sum(pred_stats.values())) if pred_stats else 1.0
 
     def _est(alts, neg):
@@ -2095,9 +2097,7 @@ def _rules_seminaive(compiled, known3, new, trunc, max_rounds,
         known3 = trunc(known3.unionByName(new), f"rules_known{k}")
         full = known3.withColumn("doc_id", F.lit(None).cast("string"))
         delta = new.withColumn("doc_id", F.lit(None).cast("string"))
-        stats = {r["pred"]: r["n"] for r in
-                 full.groupBy("pred").agg(F.count("*").alias("n"))
-                 .collect()}
+        stats = _pred_counts(full)
         new = (_rule_heads(compiled,
                            lambda body, v, f:
                            bgp_match_delta(full, delta, body, values=v,
@@ -2144,9 +2144,7 @@ def materialize_rules_delta(full: DataFrame, delta: DataFrame, rules, *,
     full4 = known3.withColumn("doc_id", F.lit(None).cast("string"))
     delta4 = (delta.select("subj", "pred", "obj").distinct()
               .withColumn("doc_id", F.lit(None).cast("string")))
-    stats = {r["pred"]: r["n"] for r in
-             full4.groupBy("pred").agg(F.count("*").alias("n"))
-             .collect()}
+    stats = _pred_counts(full4)
     new = (_rule_heads(compiled,
                        lambda body, v, f:
                        bgp_match_delta(full4, delta4, body, values=v,
@@ -2207,9 +2205,7 @@ def materialize_rules_retract(asserted: DataFrame, derived: DataFrame,
     old_fix3 = trunc(a3.unionByName(del3).unionByName(drv3).distinct(),
                      "dred_oldfix")
     old_full4 = old_fix3.withColumn("doc_id", F.lit(None).cast("string"))
-    stats = {r["pred"]: r["n"] for r in
-             old_full4.groupBy("pred").agg(F.count("*").alias("n"))
-             .collect()}
+    stats = _pred_counts(old_full4)
 
     # phase 1: over-delete
     d = trunc(del3.join(a3, on=["subj", "pred", "obj"], how="left_anti"),
@@ -2624,9 +2620,7 @@ def materialize_rules_stratified(triples: DataFrame, rules, *,
             known3 = trunc(known3.unionByName(new), f"strat{lv}_known{k}")
             full = known3.withColumn("doc_id", F.lit(None).cast("string"))
             delta = new.withColumn("doc_id", F.lit(None).cast("string"))
-            stats = {r["pred"]: r["n"] for r in
-                     full.groupBy("pred").agg(F.count("*").alias("n"))
-                     .collect()}
+            stats = _pred_counts(full)
             new = None
             for body, heads, mpats, v, f, _ in loop_rules:
                 b = bgp_match_delta(full, delta, body, values=v,
@@ -2712,11 +2706,6 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
     def four(df3):
         return df3.withColumn("doc_id", F.lit(None).cast("string"))
 
-    def pstats(df4):
-        return {r["pred"]: r["n"] for r in
-                df4.groupBy("pred").agg(F.count("*").alias("n"))
-                .collect()}
-
     def pin_pattern(m, body):
         # A MINUS atom appended to the body as a pinned positive
         # pattern must NOT capture the atom's existential variables:
@@ -2772,7 +2761,7 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
         f_old3 = trunc(v_old.unionByName(p_old).distinct(),
                        f"sm{lv}_fold")
         f_old4 = four(f_old3)
-        so = pstats(f_old4)
+        so = _pred_counts(f_old4)
         di4, dd4 = four(d_ins), four(d_del)
 
         # ---- endangered seed: deleted same-pred base facts + bindings
@@ -2824,7 +2813,7 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
         f_surv3 = trunc(v_new.unionByName(p_kept).distinct(),
                         f"sm{lv}_surv")
         f_surv4 = four(f_surv3)
-        sn = pstats(f_surv4)
+        sn = _pred_counts(f_surv4)
 
         # ---- (re)derivation seeds over the NEW store
         seeds = None
@@ -2866,7 +2855,7 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
                 known3 = trunc(known3.unionByName(new), f"sm{lv}_k{k}")
                 full4 = four(known3)
                 delta4 = four(new)
-                st = pstats(full4)
+                st = _pred_counts(full4)
                 new = None
                 for body, heads, mpats, v, f, _ in sub_na:
                     b = bgp_match_delta(full4, delta4, body, values=v,

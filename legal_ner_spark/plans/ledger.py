@@ -1,16 +1,17 @@
 """Checkpointed resume with per-partition lineage (north_rule requirement).
 
-The corpus is processed in doc-id hash buckets.  Each completed bucket
-appends (a) its records under ``records/bucket=<k>/`` and (b) a ledger row
-``(bucket, status, n_docs, n_records, span_checksum, wall_ms)``.  A restart
-anti-joins pending buckets against the ledger and recomputes nothing that
-finished — the driver-side loop is per-*bucket* (hundreds at 100 TB), never
-per-row, and each bucket is a fully distributed job.
+The corpus is processed in doc-id hash buckets.  One run writes every
+pending bucket in one Spark write under ``records/bucket=<k>/``, reads it
+back once, then commits one ledger row ``(bucket, status, n_docs,
+n_records, span_checksum, approx_distinct_objs, wall_ms)`` per bucket.
+A restart skips the buckets with a row: the row is the unit of resume,
+while a crash before a run's last row recomputes every bucket that run
+had pending.
 
 This is deliberately not Structured Streaming: the reference is strictly
 batch (SURVEY.md §2.8) and bucket-level idempotent restart is the
 checkpoint model that matches Iceberg-partitioned batch jobs (atomic
-replace of one partition per bucket).
+replace of the written partitions).
 """
 
 from __future__ import annotations
@@ -21,10 +22,14 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import extract as ops
+from ..schema import RECORDS_SCHEMA
 
 LEDGER_NAME = "_ledger"
+_BUCKETED_RECORDS = T.StructType(
+    RECORDS_SCHEMA.fields + [T.StructField("bucket", T.IntegerType())])
 
 
 def _ledger_path(out_path: str) -> str:
@@ -58,71 +63,65 @@ def _write_ledger_row(out_path: str, row: dict) -> None:
 def run_with_resume(corpus: DataFrame, out_path: str, n_buckets: int = 8,
                     fail_after: int | None = None,
                     tasks_per_core: int = 2) -> list[int]:
-    """Process corpus → records parquet bucket-by-bucket with resume.
+    """Process corpus → records parquet, resumable per bucket.
 
-    Each bucket job repartitions ITS OWN slice to ``tasks_per_core`` tasks
-    per core before the Arrow stage: without this, every bucket job
-    inherits the full corpus partitioning and runs all N splits on 1/K of
-    the docs — a few docs per task, where the Python-worker round-trip
-    overhead dominates (measured 2.4x at 32 cores; see BENCH.md).  The
-    per-bucket shuffle moves only that bucket's docs and is the standard
-    cost of partition-atomic writes.
+    Four Spark jobs for any number of buckets, five once ``records/``
+    holds more than 32 bucket directories (Spark then lists files in a
+    job).  One scan of the pending buckets is extracted on its own
+    splits, rebalanced by bucket (AQE merges small buckets into one
+    write task and splits large ones) and written with dynamic partition
+    overwrite.  One grouped read-back gives the counters.  Rows commit in
+    bucket order (a zero row for an empty bucket); ``wall_ms`` is the
+    wall time of the run that committed the row.
 
-    ``fail_after`` aborts after K buckets (test hook for kill/restart).
-    Returns the bucket ids processed in this run.
+    ``fail_after`` raises once K rows are committed (test hook for
+    kill/restart).  ``tasks_per_core`` sizes nothing and is kept for
+    callers.  Returns the bucket ids processed in this run.
     """
     done = completed_buckets(out_path)
     pending = [b for b in range(n_buckets) if b not in done]
     if not pending:
-        return []   # fully-resumed re-submit: no sizing pass, no work
-    processed: list[int] = []
-    cores = corpus.sparkSession.sparkContext.defaultParallelism
-    # split sizing: never more splits than ~64 docs/task can fill — a
-    # bucket smaller than the cluster runs on fewer tasks rather than
-    # paying 32 empty Python-worker round trips.  This is one count() pass
-    # over the corpus plan (a metadata read on a bare parquet/Iceberg
-    # scan); it only runs when buckets are pending.
-    est_bucket_docs = max(1, corpus.count() // n_buckets)
-    n_splits = max(1, min(cores * tasks_per_core, est_bucket_docs // 64 or 1))
-    bucketed = corpus.withColumn(
-        "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
-    for b in pending:
-        t0 = time.time()
-        recs = ops.extract_records(
-            bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-            .repartition(n_splits, "doc_id"))
-        part_path = os.path.join(out_path, "records", f"bucket={b}")
-        recs.write.mode("overwrite").parquet(part_path)
-        spark = corpus.sparkSession
-        written = spark.read.parquet(part_path)
-        stats = written.agg(
-            F.count("*").alias("n_records"),
-            F.sum((F.col("rec_type") == "doc").cast("int")).alias("n_docs"),
-            F.sum(F.when(F.col("rec_type") == "doc",
-                         F.crc32(F.to_json("spans"))).otherwise(0))
-            .alias("span_checksum"),
-            # monitoring metric, not a correctness gate (SURVEY.md §2.4):
-            # HLL sketch of distinct triple objects per bucket — a cheap
-            # drift signal (a bucket whose distinct-entity count collapses
-            # or explodes flags tagger/corpus anomalies at 100 TB without
-            # a distinct-count shuffle)
-            F.approx_count_distinct(
-                F.when(F.col("rec_type") == "triple", F.col("obj")))
-            .alias("approx_distinct_objs")).collect()[0]
+        return []   # fully-resumed re-submit: no work
+    t0 = time.time()
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    if len(pending) < n_buckets:
+        corpus = corpus.filter(bucket.isin(pending))
+    (ops.extract_records(corpus).withColumn("bucket", bucket)
+     .hint("rebalance", "bucket").write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("bucket").parquet(os.path.join(out_path, "records")))
+
+    written = read_all_records(corpus.sparkSession, out_path).filter(
+        F.col("bucket").isin(pending))
+    is_doc = F.col("rec_type") == "doc"
+    stats = {r.bucket: r for r in written.groupBy("bucket").agg(
+        F.count("*").alias("n_records"),
+        F.sum(is_doc.cast("int")).alias("n_docs"),
+        F.sum(F.when(is_doc, F.crc32(F.to_json("spans"))).otherwise(0))
+        .alias("span_checksum"),
+        # monitoring metric, not a correctness gate (SURVEY.md §2.4): HLL
+        # of distinct triple objects, a cheap per-bucket drift signal
+        F.approx_count_distinct(
+            F.when(F.col("rec_type") == "triple", F.col("obj")))
+        .alias("approx_distinct_objs")).collect()}
+    wall_ms = int((time.time() - t0) * 1000)
+    for i, b in enumerate(pending, 1):
+        s = stats.get(b)
         _write_ledger_row(out_path, {
             "bucket": b, "status": "done",
-            "n_docs": int(stats.n_docs or 0),
-            "n_records": int(stats.n_records or 0),
-            "span_checksum": int(stats.span_checksum or 0),
-            "approx_distinct_objs": int(stats.approx_distinct_objs or 0),
-            "wall_ms": int((time.time() - t0) * 1000),
-        })
-        processed.append(b)
-        if fail_after is not None and len(processed) >= fail_after:
+            **{k: int(s[k] or 0) if s else 0 for k in (
+                "n_docs", "n_records", "span_checksum",
+                "approx_distinct_objs")},
+            "wall_ms": wall_ms})
+        if fail_after is not None and i >= fail_after:
             raise RuntimeError(f"injected failure after {fail_after} buckets")
-    return processed
+    return pending
 
 
 def read_all_records(spark: SparkSession, out_path: str) -> DataFrame:
-    return spark.read.option("basePath", os.path.join(out_path, "records")) \
+    """Every written record plus its ``bucket`` partition column.  The
+    schema is given, not inferred: no footer-probing job, and a run that
+    wrote no partition reads as an empty table."""
+    return spark.read.schema(_BUCKETED_RECORDS) \
+        .option("basePath", os.path.join(out_path, "records")) \
         .parquet(os.path.join(out_path, "records"))

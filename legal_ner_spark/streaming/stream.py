@@ -16,6 +16,7 @@ a batch-id partition, or MERGE on doc_id.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -929,7 +930,8 @@ def read_stratified_facts(spark: SparkSession, state_dir: str,
 
 def stream_components(spark: SparkSession, edges_dir: str,
                       state_dir: str, checkpoint_dir: str, *,
-                      keep_snapshots: int = 2) -> StreamingQuery:
+                      keep_snapshots: int = 2,
+                      edge_schema=None) -> StreamingQuery:
     """Continuous connected-components maintenance over streaming edge
     batches — the streaming twin of `graph.wcc_incremental`.  Edge
     arrivals only MERGE components (insert-only, monotone), so the
@@ -954,7 +956,11 @@ def stream_components(spark: SparkSession, edges_dir: str,
     snapshot (covering a crash after the flip) — hence
     ``keep_snapshots`` ≥ 2, same argument as the stratified twin.
     Deletes are refused by the underlying maintainer's contract
-    (component splits need a from-scratch run)."""
+    (component splits need a from-scratch run).
+
+    ``edge_schema`` (a ``StructType`` or DDL string with ``src``/``dst``)
+    lets the stream start before the first edge file lands; without it
+    the schema is read from the files already in ``edges_dir``."""
     import json
     import os
     import shutil
@@ -966,8 +972,15 @@ def stream_components(spark: SparkSession, edges_dir: str,
             "keep_snapshots must be >= 2: a replayed batch resolves its "
             "prior state through the SUPERSEDED snapshot, which must "
             "survive until the next batch's commit")
-    schema = spark.read.parquet(edges_dir).schema
-    stream = (spark.readStream.schema(schema)
+    if edge_schema is None:
+        try:
+            edge_schema = spark.read.parquet(edges_dir).schema
+        except AnalysisException as e:
+            raise ValueError(
+                f"cannot read an edge schema from {edges_dir}: pass "
+                "edge_schema to start the stream before the first batch"
+            ) from e
+    stream = (spark.readStream.schema(edge_schema)
               .option("maxFilesPerTrigger", 1).parquet(edges_dir))
     e_store = os.path.join(state_dir, "edges")
     cidx = os.path.join(state_dir, "comp_index")

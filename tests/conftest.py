@@ -1,3 +1,5 @@
+import uuid
+
 import pytest
 
 from legal_ner_spark.session import get_spark
@@ -15,3 +17,20 @@ def spark():
                   extra_conf={"spark.sql.codegen.cache.maxEntries": "5000"})
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` returns ``fn()`` and the number of Spark jobs it
+    submitted, counted through a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run

@@ -807,6 +807,30 @@ def test_stream_components_matches_batch(spark, tmp_path):
         stream_components(spark, in_dir, state, ckpt, keep_snapshots=1)
 
 
+def test_stream_components_starts_on_empty_dir(spark, tmp_path):
+    """With an explicit edge schema the stream starts before the first
+    edge file lands; edges written later are picked up by the restart.
+    Without one, an empty directory is refused with a clear error."""
+    import os
+    from legal_ner_spark.streaming.stream import (stream_components,
+                                                  read_components)
+
+    in_dir, state, ckpt = (str(tmp_path / d) for d in ("in", "st", "ck"))
+    os.makedirs(in_dir)
+    with pytest.raises(ValueError, match="edge_schema"):
+        stream_components(spark, in_dir, state, ckpt)
+    schema = "src bigint, dst bigint"
+    q = stream_components(spark, in_dir, state, ckpt, edge_schema=schema)
+    assert q.awaitTermination(240)
+    spark.createDataFrame([(3, 4), (4, 7)], schema) \
+        .coalesce(1).write.mode("append").parquet(in_dir)
+    q = stream_components(spark, in_dir, state, ckpt, edge_schema=schema)
+    assert q.awaitTermination(240)
+    assert sorted((r.node, r.component) for r in
+                  read_components(spark, state).collect()) \
+        == [(3, 3), (4, 3), (7, 3)]
+
+
 def test_select_landmarks_chain_and_disconnected(spark):
     """5-chain: seed 0 → farthest 4 → midpoint 2.  Disconnected
     {0-1},{5-6}: unreached counts as infinitely far (5 picked second),

@@ -4,6 +4,7 @@ and multimodal plumbing tests."""
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from legal_ner_spark import synth
 from legal_ner_spark.operators import extract as ops
@@ -17,6 +18,21 @@ def corpus(spark):
     return synth.synthetic_corpus(spark, 16, partitions=4)
 
 
+def _bucket_recompute(spark, out, n_buckets):
+    """Per-bucket counters recomputed from the written records, after
+    checking each record sits in its doc id's hash bucket."""
+    recs = ledger.read_all_records(spark, out)
+    assert recs.filter(F.col("bucket") != F.pmod(
+        F.xxhash64("doc_id"), F.lit(n_buckets))).count() == 0
+    is_doc = F.col("rec_type") == "doc"
+    return {r.bucket: (r.n_docs, r.n_records, r.span_checksum)
+            for r in recs.groupBy("bucket").agg(
+                F.sum(is_doc.cast("int")).alias("n_docs"),
+                F.count("*").alias("n_records"),
+                F.sum(F.when(is_doc, F.crc32(F.to_json("spans")))
+                      .otherwise(0)).alias("span_checksum")).collect()}
+
+
 def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
     out = str(tmp_path / "kg")
     # first run dies after 3 buckets
@@ -26,23 +42,50 @@ def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
     assert len(done1) == 3
     # restart completes only the remaining buckets
     processed = ledger.run_with_resume(corpus, out, n_buckets=6)
-    assert len(processed) == 3
-    assert set(processed).isdisjoint(done1)
+    assert sorted(processed) == sorted(set(range(6)) - set(done1))
     # final triples identical to a straight run
     resumed = {(r.doc_id, r.subj, r.pred, r.obj) for r in ops.triples(
         ledger.read_all_records(spark, out)).collect()}
     direct = {(r.doc_id, r.subj, r.pred, r.obj)
               for r in ops.triples(ops.extract_records(corpus)).collect()}
     assert resumed == direct
-    # lineage rows carry metrics
-    row = next(iter(ledger.completed_buckets(out).values()))
-    assert row["n_records"] > 0 and row["wall_ms"] >= 0
+    # lineage rows carry metrics equal to a recompute from the records
+    rows = ledger.completed_buckets(out)
+    assert {b: (r["n_docs"], r["n_records"], r["span_checksum"])
+            for b, r in rows.items() if r["n_docs"]} \
+        == _bucket_recompute(spark, out, 6)
+    assert sum(r["n_docs"] for r in rows.values()) == 16
+    assert all(r["wall_ms"] >= 0 for r in rows.values())
 
 
 def test_resume_is_idempotent_when_all_done(spark, corpus, tmp_path):
     out = str(tmp_path / "kg2")
     ledger.run_with_resume(corpus, out, n_buckets=4)
     assert ledger.run_with_resume(corpus, out, n_buckets=4) == []
+
+
+def test_more_buckets_than_docs_writes_zero_rows(spark, corpus, tmp_path):
+    out = str(tmp_path / "kg4")
+    assert ledger.run_with_resume(corpus, out, n_buckets=32) \
+        == list(range(32))
+    rows = ledger.completed_buckets(out)
+    assert sorted(rows) == list(range(32))
+    assert sum(r["n_docs"] for r in rows.values()) == 16
+    written = _bucket_recompute(spark, out, 32)
+    for b, r in rows.items():
+        if b not in written:
+            assert (r["n_docs"], r["n_records"], r["span_checksum"],
+                    r["approx_distinct_objs"]) == (0, 0, 0, 0)
+    assert {b for b, r in rows.items() if r["n_docs"]} == set(written)
+
+
+def test_ledger_run_is_bucket_count_independent_in_jobs(corpus, tmp_path,
+                                                         count_jobs):
+    """One run is one write plus one read-back, however many buckets:
+    the job count is the same at 4 and 16 buckets, two per shuffle."""
+    jobs = {n: count_jobs(lambda n=n: ledger.run_with_resume(
+        corpus, str(tmp_path / f"j{n}"), n_buckets=n))[1] for n in (4, 16)}
+    assert jobs[4] == jobs[16] <= 4, jobs
 
 
 def test_stream_extract_matches_batch(spark, corpus, tmp_path):
