@@ -10,12 +10,19 @@ atomic snapshot in which
     previous degrees folded with the batch delta via one full-outer sum,
     never recomputed from the corpus (equivalence to full recompute is
     pinned by tests/test_incremental_kg.py);
-  - the manifest flip stays the single commit point: a reader sees the
-    old corpus until the instant the new one is complete, and a crash
-    mid-ingest leaves the published snapshot untouched (resume = re-run
-    the same --snapshot-id, which is idempotent: a replay of the
-    CURRENT snapshot's id reuses its batch-table name instead of
-    minting a new one).
+  - the batch is EXTRACTED ONCE: its triple table is written first,
+    and the predicate counts and the degree delta are computed from
+    the written table, never by re-running extraction;
+  - every triple table carries its ``{pred: rows}`` counts in
+    ``_pred_counts.json`` (`plans/publish.py`), so a reader of
+    ``read_triples`` plans its joins without a count probe;
+  - writes go data → counts → ``kg_degrees`` → manifest flip, and the
+    flip stays the single commit point: a reader sees the old corpus
+    until the instant the new one is complete, and a crash mid-ingest
+    leaves the published snapshot untouched (resume = re-run the same
+    --snapshot-id, which is idempotent: a replay of the CURRENT
+    snapshot's id reuses its batch-table name instead of minting a new
+    one).
 
 Cluster usage:
 
@@ -38,8 +45,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from legal_ner_spark.operators import extract as ops  # noqa: E402
 from legal_ner_spark.plans import publish  # noqa: E402
+from legal_ner_spark.schema import TRIPLES_SCHEMA  # noqa: E402
 
 _BATCH_PREFIX = "triples_b"
+
+DEGREES_SCHEMA = "node string, out_degree bigint, in_degree bigint"
 
 
 def triple_degrees(triples: DataFrame) -> DataFrame:
@@ -74,70 +84,71 @@ def fold_degrees(base: DataFrame, delta: DataFrame) -> DataFrame:
                     .alias("in_degree")))
 
 
+def read_batches(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Batch triple tables as ONE pinned-schema parquet relation: no
+    schema-inference job, and a bare scan whose stored predicate counts
+    `kgquery` reads instead of probing."""
+    return spark.read.schema(TRIPLES_SCHEMA).parquet(*paths)
+
+
 def read_triples(spark: SparkSession, root: str) -> DataFrame:
-    """Union of every published batch table — the reader's view of the
-    whole triple corpus (batch dirs are leaf parquet scans; Spark unions
-    them without shuffling)."""
+    """Every published batch table — the reader's view of the whole
+    triple corpus, submitting no Spark job."""
     man = publish.current_manifest(root)
     if man is None:
         raise FileNotFoundError(f"no published snapshot under {root}")
-    parts = [spark.read.parquet(p) for t, p in sorted(man["tables"].items())
+    paths = [p for t, p in sorted(man["tables"].items())
              if t.startswith(_BATCH_PREFIX)]
-    if not parts:
+    if not paths:
         raise FileNotFoundError(f"no {_BATCH_PREFIX}* tables under {root}")
-    return _union(parts)
+    return read_batches(spark, paths)
 
 
 def ingest_batch(spark: SparkSession, root: str, corpus: DataFrame,
                  snapshot_id: str) -> dict:
     """Extract one batch and publish the next snapshot.  Returns the new
-    manifest."""
-    recs = ops.extract_records(corpus)
-    tri = ops.triples(recs)
-    delta = triple_degrees(tri)
+    manifest.
 
+    The extraction runs once, into the batch triple table; its
+    predicate counts (stored beside it) and the ``kg_degrees`` delta
+    are computed from the written table.  Write order: batch data →
+    counts → ``kg_degrees`` → manifest flip."""
     man = publish.current_manifest(root)
     prev_batches = sorted(
         t for t in (man["tables"] if man else {})
         if t.startswith(_BATCH_PREFIX))
-    if man is not None and man.get("snapshot") == snapshot_id:
+    replay = man is not None and man.get("snapshot") == snapshot_id
+    if replay:
         # replay of the current snapshot (crash after flip, rerun):
-        # rewrite ITS batch table instead of minting a new one, and fold
-        # the delta onto the degrees of the snapshot BEFORE it — which is
-        # exactly current degrees minus the replayed delta; since the
-        # replayed batch is identical, re-folding from the prior base
-        # reproduces the same table.  The prior base is recoverable from
-        # the carried batches, so recompute it from them.
-        replay_name = prev_batches[-1]
-        carried = prev_batches[:-1]
-        if carried:
-            base = triple_degrees(
-                _union([spark.read.parquet(man["tables"][t])
-                        for t in carried]))
-            new_deg = fold_degrees(base, delta)
-        else:
-            new_deg = delta
-        bname = replay_name
+        # rewrite ITS batch table instead of minting a new one
+        bname, carried = prev_batches[-1], prev_batches[:-1]
     else:
-        carried = prev_batches
         bname = f"{_BATCH_PREFIX}{len(prev_batches):05d}"
-        if man is not None:
-            base = publish.read_published(spark, root, "kg_degrees")
-            new_deg = fold_degrees(base, delta)
-        else:
-            new_deg = delta
-
+        carried = prev_batches
     carry = {t: man["tables"][t] for t in carried} if man else {}
+
+    bpath = os.path.join(root, bname, f"snap={snapshot_id}")
+    publish.drop_pred_counts(bpath)
+    ops.triples(ops.extract_records(corpus)).write.mode(
+        "overwrite").parquet(bpath)
+    tri = read_batches(spark, [bpath])
+    publish.write_pred_counts(bpath, publish.count_preds(tri))
+
+    delta = triple_degrees(tri)
+    if replay and carried:
+        # fold the delta onto the degrees of the snapshot BEFORE the
+        # replayed one — current degrees minus the replayed delta —
+        # recomputed from the carried batches
+        base = triple_degrees(read_batches(spark, list(carry.values())))
+    elif not replay and man is not None:
+        base = spark.read.schema(DEGREES_SCHEMA).parquet(
+            man["tables"]["kg_degrees"])
+    else:
+        base = None
+    new_deg = delta if base is None else fold_degrees(base, delta)
     return publish.publish_tables(
-        {bname: tri, "kg_degrees": new_deg}, root, snapshot_id,
-        carry=carry)
-
-
-def _union(dfs: list[DataFrame]) -> DataFrame:
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+        {"kg_degrees": new_deg}, root, snapshot_id,
+        carry={**carry, bname: bpath})
 
 
 def main() -> None:
@@ -175,7 +186,9 @@ def compact(spark: SparkSession, root: str, snapshot_id: str) -> dict:
     still the commit point (readers see either all batches or the one
     compacted table, never a mix), old snapshots stay readable until
     vacuum, and the small kg_degrees table is carried BY REFERENCE —
-    compaction rewrites bytes, it must not change any answer."""
+    compaction rewrites bytes, it must not change any answer.  Write
+    order: compacted data → its counts (the sum of its sources' stored
+    counts, no job) → manifest flip."""
     man = publish.current_manifest(root)
     if man is None:
         raise FileNotFoundError(f"no published snapshot under {root}")
@@ -195,21 +208,24 @@ def compact(spark: SparkSession, root: str, snapshot_id: str) -> dict:
                      if t.startswith(_BATCH_PREFIX))
     if len(batches) <= 1:
         return man
-    target = os.path.normpath(os.path.join(
-        root, f"{_BATCH_PREFIX}00000", f"snap={snapshot_id}"))
-    sources = {os.path.normpath(man["tables"][t]) for t in batches}
-    if target in sources:
+    target = os.path.join(root, f"{_BATCH_PREFIX}00000",
+                          f"snap={snapshot_id}")
+    sources = [man["tables"][t] for t in batches]
+    if os.path.normpath(target) in {os.path.normpath(p) for p in sources}:
         # same hazard via a CARRIED dir: b00000 may sit at an older
         # snapshot than the manifest's — the current-snapshot check
         # above cannot see that collision
         raise ValueError(
             f"compact target {target} is one of the batch dirs being "
             "read — pick a snapshot id no batch table was written under")
-    all_tri = _union([spark.read.parquet(man["tables"][t])
-                      for t in batches])
+    publish.drop_pred_counts(target)
+    read_batches(spark, sources).write.mode("overwrite").parquet(target)
+    # the compacted rows are exactly its sources' rows: their stored
+    # counts sum to its counts, with no job
+    publish.write_pred_counts(target, publish.sum_pred_counts(sources))
     # publish_tables builds the manifest from carry + written tables
     # ONLY, so the stale batch entries vanish with the same atomic flip
-    carry = {"kg_degrees": man["tables"]["kg_degrees"]}
     return publish.publish_tables(
-        {f"{_BATCH_PREFIX}00000": all_tri}, root, snapshot_id,
-        carry=carry)
+        {}, root, snapshot_id,
+        carry={"kg_degrees": man["tables"]["kg_degrees"],
+               f"{_BATCH_PREFIX}00000": target})

@@ -41,9 +41,12 @@ CONSUMER side — the operators a user points at the finished graph:
 
 Scale shape: everything here is pure DataFrame filter/equi-join/aggregate.
 Pattern scans are `pred = literal` filters that reach the parquet scan as
-PushedFilters; join order comes from a ≤|preds|-row predicate-count probe
-(the same broadcast-stats idiom as `search.py`'s term buckets — the probe
-result is a handful of literals, never data); path expansion is one
+PushedFilters; join order comes from per-predicate row counts — read from
+the ``_pred_counts.json`` a published triple table stores beside its data
+when the input is a bare scan of such tables (see `plans/publish.py`),
+else from a ≤|preds|-row predicate-count probe (the same broadcast-stats
+idiom as `search.py`'s term buckets — the probe result is a handful of
+literals, never data); path expansion is one
 (dst=src)-keyed shuffle per hop, bounded by the DISTINCT frontier and the
 seen-pair anti-join so a dense core never re-expands.  No operator in this
 module ever builds a cartesian product — disconnected patterns are refused
@@ -54,6 +57,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans import publish
 
 __all__ = ["bgp_match", "bgp_match_delta", "property_path", "path_edges",
            "path_sequence", "construct", "closure", "to_ntriples",
@@ -71,11 +76,13 @@ _TERM_COLS = ("subj", "pred", "obj", "doc_id")
 
 
 def _pred_counts(triples: DataFrame) -> dict:
-    """``{pred: row count}`` of a triple table: the selectivity probe
-    behind join order and broadcast hints, one ≤|preds|-row aggregate
-    collected as literals."""
-    return {r["pred"]: r["n"] for r in
-            triples.groupBy("pred").agg(F.count("*").alias("n")).collect()}
+    """``{pred: row count}`` of a triple table, behind join order and
+    broadcast hints: the counts stored with the table when ``triples``
+    is a bare scan of published tables (no Spark job), else the
+    selectivity probe, one ≤|preds|-row aggregate collected as
+    literals."""
+    stored = publish.stored_pred_counts(triples)
+    return stored if stored is not None else publish.count_preds(triples)
 
 
 def _is_var(term) -> bool:
@@ -176,8 +183,13 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
     filter still lands on that pattern's scan without this compiler
     doing anything.  Expressions must reference declared variables only.
 
-    ``pred_stats`` (``{pred: row_count}``) skips the count probe — pass a
-    precomputed dict when issuing many queries against one snapshot.
+    ``pred_stats`` (``{pred: row_count}``) overrides the counts.  Without
+    it, a bare scan of published triple tables (``read_triples``, a
+    ``write_triples`` table read whole) uses the counts stored with its
+    tables and submits no job before the query; any other input
+    (filtered, aliased, joined, in-memory, or a table whose counts file
+    is missing) runs the count probe.  Pass a precomputed dict when
+    issuing many queries against one derived table.
 
     A predicate term containing path metacharacters is a PROPERTY-PATH
     EXPRESSION (``"part_of/same_as?"``, ``"same_as+"``,
@@ -1876,11 +1888,10 @@ def update_graph_commit(spark, root: str, *, snapshot_id: str,
     to leave history intact.
     """
     import os
-    from ..plans import publish as pub
-    cur = pub.read_published(spark, root, table)
+    cur = publish.read_published(spark, root, table)
     new = update_graph(cur, where=where, delete=delete, insert=insert,
                        **update_kwargs)
-    man = pub.publish_tables({table: new}, root, snapshot_id=snapshot_id)
+    man = publish.publish_tables({table: new}, root, snapshot_id=snapshot_id)
     if retain is not None:
         if retain < 1:
             raise ValueError("retain must be >= 1")
@@ -1890,7 +1901,7 @@ def update_graph_commit(spark, root: str, *, snapshot_id: str,
                        key=lambda e: os.path.getmtime(
                            os.path.join(tdir, e)))
         keep = {e.split("=", 1)[1] for e in snaps[-retain:]}
-        pub.vacuum(root, keep_ids=keep)
+        publish.vacuum(root, keep_ids=keep)
     return man
 
 

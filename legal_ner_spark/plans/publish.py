@@ -30,6 +30,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _MANIFEST = "_current.json"
 
@@ -141,6 +142,161 @@ def read_snapshot(spark: SparkSession, root: str, name: str,
             f"under {root} (retained: {have}) — it was vacuumed, or "
             "never published")
     return spark.read.parquet(path)
+
+
+# ---------------------------------------------------------------------
+# Stored predicate counts: a published triple table carries its
+# ``{pred: rows}`` in ``_pred_counts.json`` beside its data files (table
+# statistics in the table's own metadata, like Iceberg's per-file stats
+# in its manifests).  Spark's file listing skips ``_``-prefixed names,
+# so the file is invisible to every reader of the data.  Writers keep
+# the order  drop stale counts → data → counts → manifest flip,  so a
+# crash anywhere leaves either exact counts or none: readers then fall
+# back to the count probe, never to wrong counts.
+# ---------------------------------------------------------------------
+
+PRED_COUNTS = "_pred_counts.json"
+
+# reader options that narrow a directory to a subset of its files: a
+# relation read with any of them is not the table the counts describe
+_FILE_FILTER_OPTIONS = {"pathglobfilter", "recursivefilelookup",
+                        "modifiedbefore", "modifiedafter"}
+
+
+def count_preds(triples: DataFrame) -> dict:
+    """``{pred: row count}`` by one ≤|preds|-row aggregate (the probe)."""
+    return {r["pred"]: r["n"] for r in
+            triples.groupBy("pred").agg(F.count("*").alias("n")).collect()}
+
+
+def _local_dir(path: str) -> str | None:
+    """The local directory behind a table path (plain or ``file:``
+    URI); None for any other filesystem, whose tables carry no counts."""
+    if path.startswith("file:"):
+        from urllib.parse import urlparse
+        return urlparse(path).path
+    return None if "://" in path else path
+
+
+def drop_pred_counts(path: str) -> None:
+    """Remove the counts of the table at ``path`` before its data is
+    rewritten, so a crash mid-write cannot leave stale counts behind."""
+    d = _local_dir(path)
+    if d is not None and os.path.exists(os.path.join(d, PRED_COUNTS)):
+        os.remove(os.path.join(d, PRED_COUNTS))
+
+
+def write_pred_counts(path: str, counts: dict | None) -> None:
+    """Store ``counts`` beside the (already written) data of the table at
+    ``path``, atomically.  Writes nothing for None, for a null predicate
+    (JSON keys are strings) or for a non-local path."""
+    d = _local_dir(path)
+    if d is None or counts is None or None in counts:
+        return
+    tmp = os.path.join(d, f".{PRED_COUNTS}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump({p: int(n) for p, n in counts.items()}, fh)
+    os.rename(tmp, os.path.join(d, PRED_COUNTS))
+
+
+def read_pred_counts(path: str) -> dict | None:
+    """The counts stored with the table at ``path``, or None."""
+    d = _local_dir(path)
+    if d is None:
+        return None
+    try:
+        with open(os.path.join(d, PRED_COUNTS)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def sum_pred_counts(paths) -> dict | None:
+    """Summed stored counts of several tables; None if any has none."""
+    total: dict = {}
+    for p in paths:
+        counts = read_pred_counts(p)
+        if counts is None:
+            return None
+        for pred, n in counts.items():
+            total[pred] = total.get(pred, 0) + n
+    return total
+
+
+def footer_pred_counts(path: str) -> dict | None:
+    """Counts of a ``partitionBy("pred")`` parquet table at a local
+    ``path``, summed from the footer row counts of each ``pred=``
+    directory on the driver: no Spark job.  None for a non-local path
+    or a null-predicate partition."""
+    import pyarrow.parquet as pq
+    from urllib.parse import unquote
+    d = _local_dir(path)
+    if d is None:
+        return None
+    counts = {}
+    for entry in os.listdir(d):
+        if not entry.startswith("pred="):
+            continue
+        pred = unquote(entry[len("pred="):])
+        if pred == "__HIVE_DEFAULT_PARTITION__":
+            return None
+        pdir = os.path.join(d, entry)
+        counts[pred] = sum(pq.read_metadata(os.path.join(pdir, f)).num_rows
+                           for f in os.listdir(pdir)
+                           if not f.startswith(("_", ".")))
+    return counts
+
+
+def stored_pred_counts(triples: DataFrame) -> dict | None:
+    """``{pred: rows}`` of ``triples`` from the counts stored with its
+    tables, or None when they cannot be trusted to be exact.
+
+    They are trusted only when the analyzed plan is a bare scan of
+    published tables: parquet ``LogicalRelation``s over an
+    ``InMemoryFileIndex``, possibly under ``Union``s and ``Project``s of
+    plain attributes, with every root directory local and carrying a
+    counts file.  Anything that can change the row multiset — a
+    ``Filter``, an alias, a join, an in-memory or derived relation —
+    returns None, and so does a table whose counts are missing (a crash
+    between its data and counts writes).  A root path given twice is
+    scanned twice, so it is counted twice."""
+    roots: list[str] = []
+
+    def walk(plan) -> bool:
+        cls = plan.getClass().getSimpleName()
+        kids = plan.children()
+        if cls == "Union":
+            return all(walk(kids.apply(i)) for i in range(kids.size()))
+        if cls == "Project":
+            exprs = plan.projectList()
+            return (all(exprs.apply(i).getClass().getSimpleName()
+                        == "AttributeReference" for i in range(exprs.size()))
+                    and walk(kids.apply(0)))
+        if cls != "LogicalRelation":
+            return False
+        rel = plan.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return False
+        index = rel.location()
+        if (rel.fileFormat().getClass().getSimpleName()
+                != "ParquetFileFormat"
+                or index.getClass().getSimpleName() != "InMemoryFileIndex"):
+            return False
+        opts = {k.lower() for k in
+                rel.options().keys().mkString("\n").split("\n")}
+        if opts & _FILE_FILTER_OPTIONS:
+            return False
+        paths = index.rootPaths()
+        for i in range(paths.size()):
+            uri = paths.apply(i).toUri()
+            if uri.getScheme() != "file":
+                return False
+            roots.append(uri.getPath())
+        return True
+
+    if not walk(triples._jdf.queryExecution().analyzed()):
+        return None
+    return sum_pred_counts(roots)
 
 
 # ---------------------------------------------------------------------

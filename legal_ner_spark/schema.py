@@ -55,3 +55,9 @@ RECORDS_SCHEMA = T.StructType([
 RECORD_COLUMNS = [f.name for f in RECORDS_SCHEMA.fields]
 
 TRIPLES_COLUMNS = ["subj", "pred", "obj", "doc_id"]
+
+# The flat triple table as `operators.extract.triples` writes it.  Readers
+# of published triple tables pin it: parquet schema inference costs one
+# Spark job per table read.
+TRIPLES_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in TRIPLES_COLUMNS])

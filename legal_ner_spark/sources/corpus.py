@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans import publish
 from ..schema import CORPUS_SCHEMA
 
 
@@ -57,11 +58,20 @@ def write_records(records: DataFrame, location: str,
 
 def write_triples(triples: DataFrame, location: str,
                   fmt: str = "parquet") -> None:
-    """The KG graph table, partitioned by predicate.  Idempotent replace."""
+    """The KG graph table, partitioned by predicate.  Idempotent replace.
+
+    The parquet branch also stores the table's ``{pred: rows}`` in
+    ``_pred_counts.json`` at its root (`plans/publish.py`), summed from
+    the footer row counts under each ``pred=`` directory on the driver —
+    no extra Spark job — so BGP readers of the whole table skip the
+    count probe.  Order: stale counts dropped → data → counts."""
     if fmt == "iceberg":
         triples.writeTo(location).overwritePartitions()
     else:
+        publish.drop_pred_counts(location)
         triples.write.mode("overwrite").partitionBy("pred").parquet(location)
+        publish.write_pred_counts(location,
+                                  publish.footer_pred_counts(location))
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str,

@@ -161,3 +161,100 @@ def test_stream_kg_ingest_matches_batch_and_restart_noop(spark, tmp_path,
     assert publish.current_manifest(root) == man1
     assert sorted(map(tuple, publish.read_published(
         spark, root, "kg_degrees").collect())) == deg1
+
+
+# ---------------------------------------------------------------------
+# Stored predicate counts and the extract-once ingest
+# ---------------------------------------------------------------------
+
+def _probe(df):
+    return {r["pred"]: r["n"] for r in
+            df.groupBy("pred").agg(F.count("*").alias("n")).collect()}
+
+
+def _batch_paths(root):
+    man = publish.current_manifest(root)
+    return [p for t, p in sorted(man["tables"].items())
+            if t.startswith("triples_b")]
+
+
+def test_stored_counts_equal_probe_through_lifecycle(spark, tmp_path,
+                                                     corpora):
+    """Every published batch table stores exactly its groupBy counts:
+    after a first and a second ingest, a replay of the current
+    snapshot id, and a compaction."""
+    from jobs.incremental_kg import compact
+    _, b1, b2 = corpora
+    root = str(tmp_path / "kg")
+
+    def check():
+        for p in _batch_paths(root):
+            assert publish.read_pred_counts(p) == \
+                _probe(spark.read.parquet(p)), p
+        assert publish.stored_pred_counts(read_triples(spark, root)) == \
+            _probe(read_triples(spark, root))
+
+    ingest_batch(spark, root, b1, "day1")
+    check()
+    ingest_batch(spark, root, b2, "day2")
+    check()
+    ingest_batch(spark, root, b2, "day2")          # replay
+    check()
+    compact(spark, root, "day3-compact")
+    assert len(_batch_paths(root)) == 1
+    check()
+
+
+def test_snapshot_reads_submit_no_job(spark, tmp_path, corpora, count_jobs):
+    """read_triples is one pinned-schema relation (no schema-inference
+    job per batch table) and its predicate counts come from the stored
+    files (no probe job)."""
+    from legal_ner_spark.operators.kgquery import _pred_counts
+    _, b1, b2 = corpora
+    root = str(tmp_path / "kg")
+    ingest_batch(spark, root, b1, "day1")
+    ingest_batch(spark, root, b2, "day2")
+    tri, n_read = count_jobs(lambda: read_triples(spark, root))
+    assert n_read == 0
+    counts, n_counts = count_jobs(lambda: _pred_counts(tri))
+    assert n_counts == 0
+    assert counts == _probe(tri)
+
+
+def test_ingest_extracts_each_doc_once(spark, tmp_path):
+    """ingest_batch runs the extraction once: the corpus generator sees
+    every document exactly once per ingest (the batch table is written
+    first; counts and the degree delta read the written table)."""
+    import pandas as pd
+    from legal_ner_spark.schema import CORPUS_SCHEMA
+    seen = str(tmp_path / "generated.txt")
+
+    def gen(batches):
+        for pdf in batches:
+            docs = [synth.gen_doc(int(i)) for i in pdf["id"]]
+            with open(seen, "a") as fh:
+                fh.write("".join(d["doc_id"] + "\n" for d in docs))
+            yield pd.DataFrame(docs, columns=["doc_id", "spans"])
+
+    def corpus(lo, hi):
+        return spark.range(lo, hi, numPartitions=2).mapInPandas(
+            gen, CORPUS_SCHEMA)
+
+    def generated():
+        with open(seen) as fh:
+            ids = fh.read().split()
+        os.remove(seen)
+        return ids
+
+    root = str(tmp_path / "kg")
+    ingest_batch(spark, root, corpus(0, 6), "day1")
+    first = generated()
+    assert sorted(first) == [f"doc_{i:08d}" for i in range(6)]
+    ingest_batch(spark, root, corpus(6, 12), "day2")
+    second = generated()
+    assert sorted(second) == [f"doc_{i:08d}" for i in range(6, 12)]
+    # answers unchanged: degrees still equal the recompute
+    deg = sorted(map(tuple, publish.read_published(
+        spark, root, "kg_degrees").collect()))
+    assert deg == sorted(map(tuple, triple_degrees(
+        read_triples(spark, root)).collect()))
