@@ -1,9 +1,9 @@
 """Multi-executor scaling evidence (north_rule: ≥0.8 throughput scaling
 efficiency between N and 4N executors).
 
-Unlike ``bench_scaling.py`` (single-JVM ``local[N]`` thread scaling), this
-uses Spark's ``local-cluster[n_exec, cores, mem]`` manager: each executor
-is a SEPARATE JVM with its own Python worker pool — true multi-executor
+Unlike single-JVM ``local[N]`` thread scaling, this uses Spark's
+``local-cluster[n_exec, cores, mem]`` manager: each executor is a
+SEPARATE JVM with its own Python worker pool — true multi-executor
 task scheduling, serialization, and shuffle paths, i.e. the closest
 sandbox analogue of "N executors vs 4N executors on a real cluster".
 (What it cannot separate is host memory bandwidth: all executors share
@@ -96,8 +96,8 @@ def main() -> None:
         .write.mode("overwrite").parquet(corpus_path)
     spark.stop()
 
-    # ~256 docs/split (see bench_scaling.py: oversplitting serializes
-    # Python-worker round-trip overhead); identical plan at both levels
+    # ~256 docs/split (oversplitting serializes Python-worker
+    # round-trip overhead); identical plan at both levels
     n_splits = max(128, min(256, n_docs // 256))
     low = run_at(n_exec, cores, corpus_path, n_docs, n_splits)
     high = run_at(n_exec * 4, cores, corpus_path, n_docs, n_splits)

@@ -7,9 +7,9 @@ atomic snapshot in which
     an ingest writes O(batch), never O(corpus): the append-only Iceberg
     shape over the existing manifest machinery);
   - the small ``kg_degrees`` stats table is maintained INCREMENTALLY —
-    previous degrees folded with the batch delta via one full-outer sum,
-    never recomputed from the corpus (equivalence to full recompute is
-    pinned by tests/test_incremental_kg.py);
+    one aggregate sums the previous degrees with the batch's degree
+    rows, with no join and no recompute from the corpus (equivalence to
+    full recompute is pinned by tests/test_incremental_kg.py);
   - the batch is EXTRACTED ONCE: its triple table is written first,
     and the predicate counts and the degree delta are computed from
     the written table, never by re-running extraction;
@@ -52,36 +52,30 @@ _BATCH_PREFIX = "triples_b"
 DEGREES_SCHEMA = "node string, out_degree bigint, in_degree bigint"
 
 
+def degree_rows(triples: DataFrame) -> DataFrame:
+    """One degree contribution row per triple end: ``(subj, 1, 0)`` and
+    ``(obj, 0, 1)``, in the ``kg_degrees`` schema."""
+    one, zero = F.lit(1).cast("bigint"), F.lit(0).cast("bigint")
+    ends = F.array(
+        F.struct(F.col("subj").alias("node"), one.alias("out_degree"),
+                 zero.alias("in_degree")),
+        F.struct(F.col("obj").alias("node"), zero.alias("out_degree"),
+                 one.alias("in_degree")))
+    return triples.select(F.explode(ends).alias("e")).select("e.*")
+
+
+def sum_degrees(rows: DataFrame) -> DataFrame:
+    """Sum degree rows per node.  A ``kg_degrees`` table is itself a set
+    of degree rows, so summing the union of the published table with a
+    batch's rows equals a recompute over the whole corpus."""
+    return rows.groupBy("node").agg(
+        F.sum("out_degree").alias("out_degree"),
+        F.sum("in_degree").alias("in_degree"))
+
+
 def triple_degrees(triples: DataFrame) -> DataFrame:
-    """(node, out_degree, in_degree) over one triple set — the delta the
-    incremental fold consumes."""
-    out = (triples.groupBy(F.col("subj").alias("node"))
-           .agg(F.count(F.lit(1)).alias("out_degree")))
-    inn = (triples.groupBy(F.col("obj").alias("node"))
-           .agg(F.count(F.lit(1)).alias("in_degree")))
-    return (out.join(inn, "node", "full_outer")
-            .select("node",
-                    F.coalesce("out_degree", F.lit(0)).cast("bigint")
-                    .alias("out_degree"),
-                    F.coalesce("in_degree", F.lit(0)).cast("bigint")
-                    .alias("in_degree")))
-
-
-def fold_degrees(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """base ⊕ delta: one full-outer join summing both degree columns —
-    degree maintenance is a semigroup fold, so batch-at-a-time
-    application equals recompute over the whole corpus."""
-    d = delta.select(F.col("node").alias("dnode"),
-                     F.col("out_degree").alias("d_out"),
-                     F.col("in_degree").alias("d_in"))
-    return (base.join(d, base.node == d.dnode, "full_outer")
-            .select(F.coalesce("node", "dnode").alias("node"),
-                    (F.coalesce("out_degree", F.lit(0))
-                     + F.coalesce("d_out", F.lit(0))).cast("bigint")
-                    .alias("out_degree"),
-                    (F.coalesce("in_degree", F.lit(0))
-                     + F.coalesce("d_in", F.lit(0))).cast("bigint")
-                    .alias("in_degree")))
+    """(node, out_degree, in_degree) over one triple set."""
+    return sum_degrees(degree_rows(triples))
 
 
 def read_batches(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -134,18 +128,16 @@ def ingest_batch(spark: SparkSession, root: str, corpus: DataFrame,
     tri = read_batches(spark, [bpath])
     publish.write_pred_counts(bpath, publish.count_preds(tri))
 
-    delta = triple_degrees(tri)
+    rows = degree_rows(tri)
     if replay and carried:
-        # fold the delta onto the degrees of the snapshot BEFORE the
-        # replayed one — current degrees minus the replayed delta —
-        # recomputed from the carried batches
-        base = triple_degrees(read_batches(spark, list(carry.values())))
+        # the degrees of the snapshot BEFORE the replayed one, recomputed
+        # from the carried batches
+        rows = rows.unionByName(
+            degree_rows(read_batches(spark, list(carry.values()))))
     elif not replay and man is not None:
-        base = spark.read.schema(DEGREES_SCHEMA).parquet(
-            man["tables"]["kg_degrees"])
-    else:
-        base = None
-    new_deg = delta if base is None else fold_degrees(base, delta)
+        rows = rows.unionByName(spark.read.schema(DEGREES_SCHEMA).parquet(
+            man["tables"]["kg_degrees"]))
+    new_deg = sum_degrees(rows)
     return publish.publish_tables(
         {"kg_degrees": new_deg}, root, snapshot_id,
         carry={**carry, bname: bpath})

@@ -852,12 +852,11 @@ def dedup_index_reconcile(window_docs: DataFrame, path: str,
                           num_files: int | None = None,
                           keep_snapshots: int = 1) -> dict:
     """Keeper-drift reconciliation for the frozen-keeper index — the
-    mitigation the measured trade demands
-    (``tools/measure_incremental_recall.py``: drift recall 0.0000
-    incremental vs 0.8555 full): re-run near-dedup over ``window_docs``
-    ∪ the frozen KEEPER surface and REBASE every stored assignment,
-    publishing the rebased index under the same atomic manifest flip
-    compaction uses.
+    mitigation the measured trade demands (BENCH.md: drift recall
+    0.0000 incremental vs 0.8555 full): re-run near-dedup over
+    ``window_docs`` ∪ the frozen KEEPER surface and REBASE every stored
+    assignment, publishing the rebased index under the same atomic
+    manifest flip compaction uses.
 
     Why drift happens: ``dedup_index_append`` keeps only keeper
     surfaces, so a new doc whose sole above-threshold match is a
@@ -891,8 +890,8 @@ def dedup_index_reconcile(window_docs: DataFrame, path: str,
     Cost shape: the expensive tiers (shingle, band, verify, WCC) are
     O(|window| + |keepers|), NOT O(corpus) — the corpus-sized work is
     only the keepers-table metadata rewrite (one map-side join, no
-    surface recompute); ``tools/measure_reconcile_cost.py`` measures
-    the window scaling.  Readers that resolved table paths BEFORE the
+    surface recompute); BENCH.md records the measured window
+    scaling.  Readers that resolved table paths BEFORE the
     flip: see ``dedup_index_compact`` note 3 (vacuum invalidates them).
 
     Returns the published manifest dict."""
@@ -1634,8 +1633,7 @@ def semantic_index_build(emb: DataFrame, path: str, n_clusters: int = 8,
     - ``reps`` (vec_id, v, centroid_id) — the keeper SURFACE new
       batches compare against (near-dups of a dropped non-keeper
       member are missed: the same frozen-keeper recall trade as the
-      MinHash index, measured there by
-      tools/measure_incremental_recall.py).
+      MinHash index, measured in BENCH.md).
 
     Returns the keepers assignment of the build batch."""
     labeled, cents = _semantic_label(

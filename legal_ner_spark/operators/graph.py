@@ -469,7 +469,7 @@ def random_walks(edges: DataFrame, n_walks: int = 2, walk_len: int = 3,
       come from a per-node window over ≤256 count rows, so a
       10⁷-degree hub is 256 normal tasks instead of one straggler
       sorting 10⁷ rows (measured: 30.6 s → 16.0 s at a 16M-degree
-      star, tools/stress_walks.py).
+      star, BENCH.md).
 
     Each step is then ONE equi-join of the frontier against
     (src, rank), so a length-L walk is L narrow joins with frontier

@@ -737,7 +737,7 @@ def _chain_doc(base: list[str], positions: tuple[int, ...],
                salt: str) -> list[str]:
     """Mutate 2 of 40 tokens → J = 32/44 = 0.727 vs the original and
     26/50 = 0.52 vs the original's other 2-token mutants — the drift
-    chain from tools/measure_incremental_recall.py."""
+    chain whose measured recall trade BENCH.md records."""
     out = list(base)
     for p in positions:
         out[p] = f"mut{salt}p{p}"

@@ -104,9 +104,13 @@ def test_triangles_both_orientations_agree(spark):
     """The adaptive probe picks id-oriented (small graphs) or
     degree-oriented (hubby graphs) wedges — both must enumerate the
     IDENTICAL triangle set.  hub_threshold=0 forces the degree path on
-    the same input the default resolves to the id path."""
+    the same input the default resolves to the id path.  A hub star
+    with a ring closing pairs of its leaves holds exactly the ring's
+    triangles, each through the hub."""
     edges = [(a, b) for a in range(5) for b in range(5) if a < b]  # K5
     edges += [(0, 9), (9, 10), (10, 0), (7, 8)]  # extra tri + tail
+    edges += [(100, leaf) for leaf in range(101, 141)]  # hub star
+    edges += [(101, 102), (103, 104), (105, 106)]  # ring of 3 triangles
     df = spark.createDataFrame(edges, ["src", "dst"])
     fast = sorted((r.node_a, r.node_b, r.node_c)
                   for r in graph.triangles(df).collect())
@@ -114,7 +118,8 @@ def test_triangles_both_orientations_agree(spark):
                       for r in graph.triangles(
                           df, hub_threshold=0).collect())
     assert fast == hubproof
-    assert len(fast) == 10 + 1  # C(5,3) in the K5 plus (0,9,10)
+    assert len(fast) == 10 + 1 + 3  # C(5,3) in the K5, (0,9,10), ring
+    assert all(100 in t for t in fast if max(t) > 100)
 
 
 def test_bfs_distances_frontier_semantics(spark, tmp_path):
@@ -566,13 +571,17 @@ def test_butterfly_counts_hand_example(spark):
 
 def test_butterfly_counts_hub_cap(spark):
     """max_left_degree=2 drops the 3-statute doc BEFORE the pair join;
-    the remaining single-doc pairs close no butterflies → empty."""
+    the remaining single-doc pairs close no butterflies → empty.  A cap
+    no left node exceeds changes nothing."""
     rows = [("d1", "s1"), ("d1", "s2"), ("d1", "s3"),
             ("d2", "s1"), ("d2", "s2"),
             ("d3", "s2"), ("d3", "s3")]
     bip = spark.createDataFrame(rows, ["left", "right"])
     out = graph.butterfly_counts(bip, max_left_degree=2).collect()
     assert out == []
+    uncapped = sorted(graph.butterfly_counts(bip).collect())
+    assert sorted(graph.butterfly_counts(
+        bip, max_left_degree=3).collect()) == uncapped
 
 
 def _py_biased_walks(edges, n_walks, walk_len, ret_w, com_w, far_w,

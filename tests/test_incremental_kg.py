@@ -12,7 +12,7 @@ from legal_ner_spark import synth
 from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.plans import publish
 from jobs.incremental_kg import (ingest_batch, read_triples,
-                                 triple_degrees, fold_degrees)
+                                 sum_degrees, triple_degrees)
 
 
 @pytest.fixture()
@@ -89,7 +89,7 @@ def test_fold_degrees_is_semigroup(spark):
                               "node string, out_degree bigint,"
                               " in_degree bigint")
     got = {r.node: (r.out_degree, r.in_degree)
-           for r in fold_degrees(a, b).collect()}
+           for r in sum_degrees(a.unionByName(b)).collect()}
     assert got == {"x": (2, 1), "y": (5, 4), "z": (1, 0)}
 
 
@@ -208,12 +208,14 @@ def test_stored_counts_equal_probe_through_lifecycle(spark, tmp_path,
 def test_snapshot_reads_submit_no_job(spark, tmp_path, corpora, count_jobs):
     """read_triples is one pinned-schema relation (no schema-inference
     job per batch table) and its predicate counts come from the stored
-    files (no probe job)."""
+    files (no probe job).  An ingest onto a published snapshot folds
+    ``kg_degrees`` with one aggregate and no join: at most 5 jobs."""
     from legal_ner_spark.operators.kgquery import _pred_counts
     _, b1, b2 = corpora
     root = str(tmp_path / "kg")
     ingest_batch(spark, root, b1, "day1")
-    ingest_batch(spark, root, b2, "day2")
+    _, n_ingest = count_jobs(lambda: ingest_batch(spark, root, b2, "day2"))
+    assert n_ingest <= 5
     tri, n_read = count_jobs(lambda: read_triples(spark, root))
     assert n_read == 0
     counts, n_counts = count_jobs(lambda: _pred_counts(tri))

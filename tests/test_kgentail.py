@@ -162,6 +162,20 @@ def test_owl_max_hops_bounds_closure(spark):
     got = spo_set(kq.owl_extend(g, max_hops=2, derived_only=True))
     assert ("n0", "cites", "n2") in got
     assert ("n0", "cites", "n3") not in got
+    # two disjoint 6-node chains with an inverse declaration: derived =
+    # the closure within max_hops minus the asserted edges, plus the
+    # inverse image of every closed pair — nothing leaks across chains
+    chains = [(f"{c}{i}", "cites", f"{c}{i + 1}")
+              for c in "pq" for i in range(5)]
+    g2 = T(spark, chains + [("cites", "type", "transitive_property"),
+                            ("cited_by", "inverse_of", "cites")])
+    closed = {(f"{c}{i}", f"{c}{j}") for c in "pq"
+              for i in range(6) for j in range(i + 1, min(i + 3, 6))}
+    want = ({(s, "cites", o) for s, o in closed}
+            - {(s, p, o) for s, p, o in chains}) \
+        | {(o, "cited_by", s) for s, o in closed}
+    assert spo_set(kq.owl_extend(g2, max_hops=2,
+                                 derived_only=True)) == want
 
 
 # --- update_graph ----------------------------------------------------------

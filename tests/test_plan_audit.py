@@ -538,3 +538,19 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
     # and the result is right (pruning must not drop rows)
     got = {r.pk: r.s for r in q.collect()}
     assert set(got) == {3, 7}
+
+
+def test_plan_report_names_registered_queries():
+    """Every query `tools/plan_report.py` writes into PLANS.md is in the
+    registry, so renaming a query cannot break the report unnoticed.
+    Loads the script without a Spark session."""
+    import importlib.util
+    import os
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "tools",
+                        "plan_report.py")
+    spec = importlib.util.spec_from_file_location("plan_report", path)
+    report = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(report)
+    missing = [name for name, _ in report.SHOW
+               if name not in queries.QUERIES]
+    assert report.SHOW and not missing, missing

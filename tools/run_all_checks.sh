@@ -3,9 +3,8 @@
 #   1. pytest suite (unit + golden + property + plan-audit + resume)
 #   2. the KG-construction benchmark's own tests (kgbench/)
 #   3. Spark-vs-DuckDB oracle parity at sf0.01 (the driver's gate)
-#   4. bench.py (throughput + attached scaling evidence)
-# Optional slow extras (pass --full): sf0.001 oracle parity, the
-# two-parallelism scaling run, and the multi-executor scaling run.
+# Optional slow extras (pass --full): sf0.001 oracle parity and the
+# multi-executor scaling run (bench_scaling_cluster.py).
 # Every step runs even when an earlier one fails, so one failing gate
 # never hides the result of a later one; the script exits non-zero and
 # names every failed step.
@@ -26,14 +25,10 @@ step() {
 step "pytest" python -m pytest tests/ -q
 step "kgbench tests" python3 -m pytest kgbench -q
 step "oracle parity (sf0.01)" python tools/check_oracles.py /root/testdata/sf0.01
-step "bench" env SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-    python bench.py
 
 if [ "$1" = "--full" ]; then
     step "oracle parity (sf0.001)" \
         python tools/check_oracles.py /root/testdata/sf0.001
-    step "scaling local[8] vs local[32]" \
-        python bench_scaling.py 32768 /tmp/scaling_8_32.json 8 32
     step "scaling 1 vs 4 executors (local-cluster)" \
         python bench_scaling_cluster.py 32768 /tmp/scaling_lc.json 1 2
 fi
