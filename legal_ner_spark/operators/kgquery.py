@@ -6,8 +6,9 @@ re-expressed as triples per SURVEY §1.2).  A KG platform also needs the
 CONSUMER side — the operators a user points at the finished graph:
 
 - ``bgp_match``: SPARQL-style basic-graph-pattern matching — conjunctive
-  triple patterns with shared variables — compiled to selectivity-ordered
-  equi-joins over predicate-pushed scans of the triple table, with
+  triple patterns with shared variables — compiled to one hub shuffle for
+  a small star or chain group, else to selectivity-ordered equi-joins
+  over predicate-pushed scans of the triple table, with
   OPTIONAL (left join), MINUS (per-pattern anti join), FILTER EXISTS /
   NOT EXISTS (conjunctive sub-group semi/anti join), VALUES (scan-level
   In filters), and FILTER expressions.
@@ -40,8 +41,9 @@ CONSUMER side — the operators a user points at the finished graph:
   aggregates, violations as rows.
 
 Scale shape: everything here is pure DataFrame filter/equi-join/aggregate.
-Pattern scans are `pred = literal` filters that reach the parquet scan as
-PushedFilters; join order comes from per-predicate row counts — read from
+Pattern scans are `pred = literal` filters (`pred IN (…)` for a hub group)
+that reach the parquet scan as PushedFilters; join order and the hub-plan
+choice come from per-predicate row counts — read from
 the ``_pred_counts.json`` a published triple table stores beside its data
 when the input is a bare scan of such tables (see `plans/publish.py`),
 else from a ≤|preds|-row predicate-count probe (the same broadcast-stats
@@ -103,6 +105,122 @@ def _apply_values(pdf: DataFrame, pvars, vmap: dict) -> DataFrame:
     return pdf
 
 
+def _join_tree(compiled, srcs, broadcast_rows: int,
+               allow_product: bool) -> tuple[DataFrame, list]:
+    """The required patterns' greedy left-deep join tree: cheapest
+    connected pattern next, sides estimated ≤ ``broadcast_rows``
+    broadcast.  Returns the bindings and their variables."""
+    order = sorted(range(len(compiled)), key=lambda i: compiled[i][0])
+    done: set[int] = set()
+    first = order[0]
+    _, out_vars, cur = compiled[first]
+    out_vars = list(out_vars)
+    done.add(first)
+    # a delta-pinned start keeps the ACCUMULATING binding side delta-sized
+    # through every join — hint it broadcast so the store patterns stream
+    # through BroadcastHashJoins unshuffled (scan-only cost per leg);
+    # without the hint Catalyst sees an unknown-size side and shuffles
+    # the store on every hop
+    cur_small = srcs[first] is not None
+    while len(done) < len(compiled):
+        nxt = None
+        for i in order:
+            if i in done:
+                continue
+            if set(compiled[i][1]) & set(out_vars):
+                nxt = i
+                break
+        if nxt is None:
+            if not allow_product:
+                raise ValueError(
+                    "disconnected pattern group (cartesian product); pass "
+                    "allow_product=True to run it anyway")
+            nxt = next(i for i in order if i not in done)
+        est, pvars, pdf = compiled[nxt]
+        shared = [v for v in out_vars if v in pvars]
+        if est <= broadcast_rows:
+            pdf = F.broadcast(pdf)
+        elif cur_small:
+            cur = F.broadcast(cur)
+        cur = cur.join(pdf, on=shared, how="inner") if shared \
+            else cur.crossJoin(pdf)
+        out_vars += [v for v in pvars if v not in out_vars]
+        done.add(nxt)
+    return cur, out_vars
+
+
+def _hub_var(pats) -> str | None:
+    """The variable a star or chain group shares: every pattern (≥ 2,
+    each with a constant non-path predicate) binds it exactly once, in
+    its subject or object, and every other variable occurs once in the
+    group.  None when the group has no such hub."""
+    if len(pats) < 2 or any(p[1] is None or _is_var(p[1])
+                            or _is_path_expr(p[1]) for p in pats):
+        return None
+    ends = [{_var_name(t) for t in (p[0], p[2]) if _is_var(t)}
+            for p in pats]
+    common = set.intersection(*ends)
+    if len(common) != 1:
+        return None
+    hub = common.pop()
+    seen = [_var_name(t) for p in pats for t in (p[0], p[2], p[3])
+            if _is_var(t)]
+    others = [v for v in seen if v != hub]
+    if len(seen) - len(others) != len(pats) or \
+            len(set(others)) != len(others):
+        return None
+    return hub
+
+
+def _hub_match(triples: DataFrame, pats, hub: str,
+               distinct: bool) -> DataFrame:
+    """Bindings of a star/chain group around ``hub`` in one shuffle: one
+    ``pred IN (…)`` scan; one generate emitting, per pattern ``i`` a
+    triple matches (a triple can match several), the hub and a value
+    ``v<i>`` holding the pattern's other variables; one ``groupBy(hub)``
+    collecting each ``v<i>``; then one ``explode`` per slot, chained, so
+    a group's cross product streams out a row at a time (an empty slot
+    yields nothing) and no value holds more than one slot's collection —
+    a hot hub's product can be far larger than its input.  Sets make
+    the output DISTINCT by construction; lists (``distinct=False``)
+    keep the join's multiplicities.  The structure is SQL text over
+    internal column names and the (identifier) variable names, because
+    every PySpark Column call costs ~1 ms of Python-side planning and
+    that is most of a small query's wall time; only pattern constants
+    are literal Columns."""
+    n = len(pats)
+    arms, fields = [], [f"hub AS `{hub}`"]
+    for i, p in enumerate(pats):
+        hub_col = "subj" if _is_var(p[0]) and _var_name(p[0]) == hub \
+            else "obj"
+        cond = F.col("pred") == F.lit(p[1])
+        own = []
+        for c, t in zip(_TERM_COLS, p):
+            if _is_var(t) and c != hub_col:
+                own.append(f"'{_var_name(t)}', {c}")
+                fields.append(f"a{i}.`{_var_name(t)}` AS `{_var_name(t)}`")
+            elif t is not None and c != "pred" and not _is_var(t):
+                cond = cond & (F.col(c) == F.lit(t))
+        # the other slots' values are untyped NULLs that array() widens;
+        # a null hub matches nothing, as in a join
+        val = f"named_struct({', '.join(own)})" if own else "true"
+        slots = ", ".join(f"'v{j}', " + (val if j == i else "NULL")
+                          for j in range(n))
+        arms.append(F.when(cond, F.expr(
+            f"IF({hub_col} IS NULL, NULL, "
+            f"named_struct('hub', {hub_col}, {slots}))")))
+    agg = "collect_set" if distinct else "collect_list"
+    out = (triples.filter(F.col("pred").isin(sorted({p[1] for p in pats})))
+           .select(F.inline(F.array(*arms)))
+           .groupBy("hub")
+           .agg(*[F.expr(f"{agg}(v{i}) AS _s{i}") for i in range(n)]))
+    for i in range(n):
+        out = out.selectExpr("hub", *[f"a{j}" for j in range(i)],
+                             f"explode(_s{i}) AS a{i}",
+                             *[f"_s{j}" for j in range(i + 1, n)])
+    return out.selectExpr(*fields)
+
+
 def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
               exists=(), not_exists=(),
               values: dict | None = None, filters=(),
@@ -126,11 +244,27 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
     bindings by default (SPARQL ``SELECT DISTINCT`` semantics — the
     natural contract over a set-semantics triple table).
 
-    Plan: each pattern compiles to a filtered projection of ``triples``
-    (bound terms become pushdown-able equality predicates), then patterns
-    join left-deep on their shared variables, cheapest-first.  Cost comes
-    from a per-predicate count probe — one tiny aggregate whose result is
-    ≤ |distinct preds| rows — discounted per additional bound term;
+    Plan: a pattern's cost is its predicate's row count — stored with a
+    published table, else probed (see ``pred_stats``) — divided by 100
+    per bound term beyond the predicate.  A STAR or CHAIN group runs as
+    one hub shuffle: ≥ 2 required patterns with constant predicates,
+    all binding one hub variable as subject or object, every other
+    variable occurring once, each pattern costed ≤ ``broadcast_rows``,
+    and no OPTIONAL / MINUS / EXISTS / VALUES / FILTER / ``sources`` /
+    ``subqueries`` / path pattern.  It is one ``pred IN (…)`` scan, one
+    generate emitting each pattern slot a triple fills, one
+    ``groupBy(hub)`` collecting each slot's values (a set, or a list
+    with ``distinct=False`` so multiplicities equal the join's), and one
+    chained ``explode`` per slot that streams each group's cross
+    product: 2 Spark jobs.  Its rows are distinct by construction, so
+    no DISTINCT exchange follows unless ``select`` drops a variable.
+    The bound keeps one hub's collected input no larger than what the
+    join plan broadcasts to every task (its output, like the join's, is
+    the product of the hub's fan-outs); ``broadcast_rows=0`` always
+    takes the join plan.  Any other group
+    compiles each pattern to a filtered projection of ``triples`` (bound
+    terms become pushdown-able equality predicates) and joins them
+    left-deep on their shared variables, cheapest first;
     estimated-small sides get a broadcast hint (AQE still has the final
     word).  Patterns that share no variable with the accumulated join are
     a cartesian product and raise unless ``allow_product=True``.
@@ -181,7 +315,8 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
     after the joins and before DISTINCT — Catalyst then pushes each one
     as deep as its referenced variables allow, so a single-variable
     filter still lands on that pattern's scan without this compiler
-    doing anything.  Expressions must reference declared variables only.
+    doing anything; a filtered group therefore always takes the join
+    plan.  Expressions must reference declared variables only.
 
     ``pred_stats`` (``{pred: row_count}``) overrides the counts.  Without
     it, a bare scan of published triple tables (``read_triples``, a
@@ -280,6 +415,15 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
         else _pred_counts(triples)
     total = sum(pred_counts.values()) or 1
 
+    def _est(p):
+        est = float(total)
+        if not _is_var(p[1]) and p[1] is not None:
+            est = float(pred_counts.get(p[1], 0))
+        # every bound term beyond the predicate sharpens the estimate;
+        # the factor is crude but monotone, which is all ordering needs
+        n_bound = sum(t is not None and not _is_var(t) for t in p)
+        return est / (100.0 ** max(0, n_bound - (0 if _is_var(p[1]) else 1)))
+
     def _compile(p, src=None):
         # property-path predicate (``part_of/same_as?``, ``same_as+``,
         # ``(a|^b){1,2}`` …): the pattern's relation is the evaluated
@@ -325,10 +469,6 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
                    else named or 1.0)
             return est, list(seen_vars), df.select(*proj)
         df = triples if src is None else src
-        est = float(total)
-        if not _is_var(p[1]) and p[1] is not None:
-            est = float(pred_counts.get(p[1], 0))
-        n_bound = 0
         seen_vars: dict[str, str] = {}   # var name -> first column
         eq_pairs = []
         proj = []
@@ -344,20 +484,26 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
                     proj.append(F.col(col).alias(v))
             else:
                 df = df.filter(F.col(col) == F.lit(term))
-                n_bound += 1
         for a, b in eq_pairs:
             df = df.filter(F.col(a) == F.col(b))
-        # every bound term beyond the predicate sharpens the estimate;
-        # the factor is crude but monotone, which is all ordering needs
-        est = est / (100.0 ** max(0, n_bound - (0 if _is_var(p[1]) else 1)))
-        if src is not None:          # delta-pinned: smallest, joins first
-            est = 0.0
+        # delta-pinned: smallest, joins first
+        est = 0.0 if src is not None else _est(p)
         return est, list(seen_vars), df.select(*proj)
 
     if sources is not None and len(sources) != len(pats):
         raise ValueError("sources must be parallel to patterns")
     srcs = sources or [None] * len(pats)
-    compiled = [_compile(p, s) for p, s in zip(pats, srcs)]
+    # a star/chain group whose patterns all fit under the broadcast bound
+    # is one hub shuffle instead of a join tree (see `_hub_match`)
+    hub = None
+    if not (opats or mpats or exists or not_exists or values or filters
+            or subqueries or sources is not None) and broadcast_rows > 0:
+        hub = _hub_var(pats)
+        if hub is not None and any(_est(p) > broadcast_rows for p in pats):
+            hub = None
+    # the hub plan's bindings are distinct by construction
+    unique = hub is not None
+    compiled = [] if unique else [_compile(p, s) for p, s in zip(pats, srcs)]
     ocompiled = [_compile(p) for p in opats]
     mcompiled = [_compile(p) for p in mpats]
 
@@ -381,46 +527,14 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
             for est, pvars, pdf in compiled]
 
     declared = []           # projection order = first appearance in patterns
-    for _, pvars, _ in compiled + ocompiled:
-        declared += [v for v in pvars if v not in declared]
-
-    # greedy left-deep join order: cheapest connected pattern next
-    order = sorted(range(len(compiled)), key=lambda i: compiled[i][0])
-    done: set[int] = set()
-    first = order[0]
-    est0, out_vars, cur = compiled[first]
-    out_vars = list(out_vars)
-    done.add(first)
-    # a delta-pinned start keeps the ACCUMULATING binding side delta-sized
-    # through every join — hint it broadcast so the store patterns stream
-    # through BroadcastHashJoins unshuffled (scan-only cost per leg);
-    # without the hint Catalyst sees an unknown-size side and shuffles
-    # the store on every hop
-    cur_small = srcs[first] is not None
-    while len(done) < len(compiled):
-        nxt = None
-        for i in order:
-            if i in done:
-                continue
-            if set(compiled[i][1]) & set(out_vars):
-                nxt = i
-                break
-        if nxt is None:
-            if not allow_product:
-                raise ValueError(
-                    "disconnected pattern group (cartesian product); pass "
-                    "allow_product=True to run it anyway")
-            nxt = next(i for i in order if i not in done)
-        est, pvars, pdf = compiled[nxt]
-        shared = [v for v in out_vars if v in pvars]
-        if est <= broadcast_rows:
-            pdf = F.broadcast(pdf)
-        elif cur_small:
-            cur = F.broadcast(cur)
-        cur = cur.join(pdf, on=shared, how="inner") if shared \
-            else cur.crossJoin(pdf)
-        out_vars += [v for v in pvars if v not in out_vars]
-        done.add(nxt)
+    for t in (t for p in pats + opats for t in p if _is_var(t)):
+        if _var_name(t) not in declared:
+            declared.append(_var_name(t))
+    if unique:
+        cur, out_vars = _hub_match(triples, pats, hub, distinct), declared[:]
+    else:
+        cur, out_vars = _join_tree(compiled, srcs, broadcast_rows,
+                                   allow_product)
 
     # OPTIONAL patterns: left joins in caller order, anchored or refused
     for est, pvars, pdf in ocompiled:
@@ -524,7 +638,7 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
                     f"group_by names undeclared variable ?{n} "
                     f"(declared: {declared})")
             keys.append(n)
-        if distinct:
+        if distinct and not unique:
             # set-semantics default: aggregate the DISTINCT binding set
             cur = cur.distinct()
         aggs = []
@@ -554,7 +668,8 @@ def bgp_match(triples: DataFrame, patterns, *, optional=(), minus=(),
                     f"(declared: {declared})")
             names.append(n)
         cur = cur.select(*names)
-    if distinct and not grouped:
+        unique = unique and set(out_vars) <= set(names)
+    if distinct and not grouped and not unique:
         cur = cur.distinct()
     if order_by:
         keys = []
@@ -615,10 +730,10 @@ def bgp_union(triples: DataFrame, groups, *, distinct: bool = True,
     unioned solution set under ``bgp_match``'s rules (OFFSET without
     ORDER BY refused).
 
-    Plan: each branch compiles independently (selectivity-ordered
-    equi-joins over predicate-pushed scans); the union is Spark's
-    zero-shuffle ``Union`` node, so the only added cost is the final
-    DISTINCT's hash aggregate over the combined solutions.  Branch
+    Plan: each branch compiles independently (a hub shuffle or
+    selectivity-ordered equi-joins, as ``bgp_match`` picks); the union
+    is Spark's zero-shuffle ``Union`` node, so the only added cost is
+    the final DISTINCT's hash aggregate over the combined solutions.  Branch
     solution modifiers are refused — the spec applies modifiers to the
     whole query, not per-branch."""
     if not groups:
@@ -1134,8 +1249,8 @@ def construct(triples: DataFrame, body, head, *, values: dict | None = None,
     Head terms are variables (must be bound by the body — an unbound
     head variable is a rule bug and is refused, not nulled) or literal
     strings.  Multiple head templates share ONE body match: the plan is
-    the body's join tree + a union of constant-width projections, so a
-    k-template rule costs one match, not k."""
+    the body's ``bgp_match`` plan + a union of constant-width
+    projections, so a k-template rule costs one match, not k."""
     b = bgp_match(triples, body, optional=optional, minus=minus,
                   values=values, **bgp_kwargs)
     return _instantiate_templates(b, _norm_templates(head))

@@ -5177,7 +5177,7 @@ def o_kg_media_align():
     return f"""
 WITH media AS (
   SELECT doc_id, s.kind AS kind, s.media_ref AS media_ref,
-         s."offset"::BIGINT AS pos
+         s."offset"::BIGINT AS pos, row_number() OVER () AS span_no
   FROM (SELECT doc_id, unnest(spans) AS s FROM {_KG_SQL_SRC}
         WHERE rec_type = 'doc')
   WHERE s.kind <> 'text'
@@ -5189,7 +5189,7 @@ j AS (
   SELECT m.doc_id, m.media_ref, m.kind, m.pos,
          n.ent_id, n.label, n.sc, abs(n.sc - m.pos) AS dist,
          row_number() OVER (
-           PARTITION BY m.doc_id, m.media_ref, m.pos
+           PARTITION BY m.doc_id, m.span_no
            ORDER BY abs(n.sc - m.pos),
                     CASE WHEN n.sc <= m.pos THEN 0 ELSE 1 END,
                     n.ent_id) AS rn
@@ -8326,9 +8326,13 @@ def q_kg_bgp_star(spark, sf_dir):
         ?d decided_by ?court .  ?d has_judge ?judge .
         ?d cites_precedent ?p
 
-    compiled by ``kgquery.bgp_match`` to selectivity-ordered equi-joins
-    over predicate-pushed scans of the triple table (join order from a
-    ≤9-row predicate-count probe; small patterns broadcast)."""
+    compiled by ``kgquery.bgp_match`` to one hub shuffle around ``?d``:
+    one predicate-pushed ``pred IN (…)`` scan, one ``groupBy(d)``
+    collecting each pattern's values, and one chained ``explode`` per
+    pattern streaming each group's cross product — no join, no
+    broadcast, no DISTINCT (the pattern sizes come from a
+    ≤9-row predicate-count probe; a pattern above ``broadcast_rows``
+    would take the join plan)."""
     from .operators import kgquery
     tri = ops.triples(_kg_records_parquet(spark, sf_dir))
     return kgquery.bgp_match(tri, [("?d", "decided_by", "?court"),
@@ -8392,7 +8396,11 @@ def q_kg_bgp_chain(spark, sf_dir):
     """BGP CHAIN through a shared object variable — alias co-reference
     pairs: ``?m same_as ?canon . ?m2 same_as ?canon`` with the
     ``?m < ?m2`` half-matrix cut applied as a plain DataFrame filter on
-    the returned bindings (the layer composes with ordinary Spark)."""
+    the returned bindings (the layer composes with ordinary Spark).
+    Both patterns hang off the hub ``?canon``, so ``bgp_match`` runs one
+    hub shuffle: each ``same_as`` triple fills both slots of its
+    object's group, and the group's cross product, streamed by one
+    ``explode`` per slot, is the pairs — no self-join."""
     from .operators import kgquery
     tri = ops.triples(_kg_records_parquet(spark, sf_dir))
     b = kgquery.bgp_match(tri, [("?m", "same_as", "?canon"),

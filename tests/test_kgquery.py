@@ -3,6 +3,9 @@ BGP matching, bounded property paths, same_as resolution, constraint
 profiles — semantics pinned on hand-built graphs plus a brute-force BFS
 cross-check and a plan audit (equi-joins only, predicate filters pushed)."""
 
+import random
+from collections import Counter
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -407,6 +410,101 @@ def test_bgp_pred_filter_reaches_parquet_scan(spark, tmp_path):
     out = kgquery.bgp_match(tri, [("?s", "p1", "?o")])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(pred), EqualTo(pred,p1)" in plan
+
+
+def _py_bgp(rows, pats, select=None):
+    """Multiset of a BGP's bindings over (s, p, o, doc) rows by nested
+    loops, one column per variable in first-appearance order (or per
+    ``select`` variable)."""
+    sols = [{}]
+    for p in pats:
+        nxt = []
+        for b in sols:
+            for row in rows:
+                b2, ok = dict(b), True
+                for term, val in zip(p, row):
+                    if term is None:
+                        continue
+                    if term.startswith("?"):
+                        ok = ok and b2.setdefault(term, val) == val
+                    else:
+                        ok = ok and term == val
+                if ok:
+                    nxt.append(b2)
+        sols = nxt
+    names = select or list(dict.fromkeys(
+        t for p in pats for t in p if t and t.startswith("?")))
+    return Counter(tuple(b[n] for n in names) for b in sols)
+
+
+# (patterns, select): hub in subject, in object, in mixed positions, one
+# predicate filling two slots, constant terms, a doc variable, a pattern
+# no triple matches, and a projection that drops a variable
+HUB_GROUPS = [
+    ([("?h", "p", "?a"), ("?h", "q", "?b")], None),
+    ([("?a", "p", "?h"), ("?b", "q", "?h")], None),
+    ([("?x", "p", "?h"), ("?h", "q", "?y")], None),
+    ([("?m", "p", "?c"), ("?m2", "p", "?c")], None),
+    ([("?h", "p", "n1"), ("n2", "q", "?h"), ("?h", "r", "?z", "?g")], None),
+    ([("?h", "p", "?a"), ("?h", "absent", "?b")], None),
+    ([("?x", "p", "?h"), ("?h", "q", "?y")], ["?h", "?y"]),
+]
+
+
+def test_bgp_hub_plan_fuzz_equals_join_plan_and_python(spark):
+    """Random small graphs, with (s, p, o) rows repeated under another
+    doc_id: every star/chain group gives the same bindings through the
+    hub plan (as a set, and as a multiset with ``distinct=False``), the
+    left-deep join plan (``broadcast_rows=0``, as a multiset) and a
+    Python nested-loop evaluation."""
+    rng = random.Random(11)
+    nodes = [f"n{i}" for i in range(5)]
+    for _ in range(2):
+        rows = sorted({(rng.choice(nodes), rng.choice("pqr"),
+                        rng.choice(nodes), rng.choice(["d0", "d1"]))
+                       for _ in range(rng.randint(10, 30))})
+        rows += [r[:3] + ("d9",) for r in rows[:4]]
+        tri = _triples(spark, rows).cache()
+        for pats, select in HUB_GROUPS:
+            want = _py_bgp(rows, pats, select)
+            for distinct, plan_kw in ((True, {}), (False, {}),
+                                      (False, {"broadcast_rows": 0})):
+                out = kgquery.bgp_match(tri, pats, select=select,
+                                        distinct=distinct, **plan_kw)
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                assert ("Join" in plan) == bool(plan_kw), plan
+                got = Counter(tuple(r) for r in out.collect())
+                assert got == (Counter(set(want)) if distinct else want), \
+                    (pats, select, distinct, plan_kw, rows)
+        tri.unpersist()
+
+
+@pytest.mark.parametrize("shape", ["chain", "star"])
+def test_bgp_hub_plan_streams_a_hot_hub(spark, shape):
+    """One hub whose cross product dwarfs its input — 300 aliases of one
+    canon are 90,000 chain bindings; 3 × 40 fan-outs (each row repeated
+    under a second doc_id, ``distinct=False``) are 512,000 star rows.
+    Each slot is its own generator, so no value holds the product, and
+    the hub plan's multiset equals the join plan's."""
+    if shape == "chain":
+        rows = [(f"m{i}", "p", "c0", "d0") for i in range(300)]
+        pats, distinct, want = [("?m", "p", "?c"), ("?m2", "p", "?c")], \
+            True, 300 * 300 + 5
+    else:
+        rows = [("h0", p, f"{p}{i}", d) for p in "qrs" for i in range(40)
+                for d in ("d0", "d1")]
+        pats, distinct, want = [("?h", "q", "?a"), ("?h", "r", "?b"),
+                                ("?h", "s", "?c")], False, 80 ** 3 + 5
+    rows += [(f"x{i}", "p", f"c{i + 1}", "d0") for i in range(5)]
+    rows += [(f"h{i + 1}", p, f"y{i}", "d0") for i in range(5) for p in "qrs"]
+    tri = _triples(spark, rows)
+    hub = kgquery.bgp_match(tri, pats, distinct=distinct)
+    join = kgquery.bgp_match(tri, pats, distinct=distinct, broadcast_rows=0)
+    plan = hub._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "flatten" not in plan, plan
+    assert plan.count("Generate explode") == len(pats), plan
+    assert hub.count() == want == join.count()
+    assert hub.exceptAll(join).isEmpty() and join.exceptAll(hub).isEmpty()
 
 
 # ----------------------------------------------------------- delta match

@@ -17,6 +17,9 @@ from legal_ner_spark.sources import corpus as src
 from jobs.incremental_kg import ingest_batch, read_triples
 
 STAR = [("?d", "decided_by", "?court"), ("?d", "has_judge", "?judge")]
+# the benchmark's reader set
+KG_STAR = STAR + [("?d", "cites_precedent", "?p")]
+KG_CHAIN = [("?m", "same_as", "?canon"), ("?m2", "same_as", "?canon")]
 
 
 def _probe(df):
@@ -30,6 +33,14 @@ def _star_rows(spo):
         by[p][s].add(o)
     return {(d, c, j) for d, courts in by["decided_by"].items()
             for c in courts for j in by["has_judge"].get(d, ())}
+
+
+def _chain_rows(spo):
+    by = defaultdict(set)
+    for s, p, o in spo:
+        if p == "same_as":
+            by[o].add(s)
+    return {(m, c, m2) for c, ms in by.items() for m in ms for m2 in ms}
 
 
 @pytest.fixture(scope="module")
@@ -130,3 +141,25 @@ def test_stored_counts_answers_equal_python(spark, kg_root):
         tri.select("subj", "pred", "obj")) == stored
     twice = publish.stored_pred_counts(tri.unionByName(tri))
     assert twice == {p: 2 * n for p, n in stored.items()}
+
+
+@pytest.mark.parametrize("shape", ["star", "chain"])
+def test_snapshot_star_and_chain_take_two_jobs(spark, kg_root, count_jobs,
+                                               shape):
+    """The benchmark's star and chain over ``read_triples`` are each one
+    hub shuffle: a map stage and a result stage, no count probe, no
+    broadcast, no DISTINCT stage."""
+    root, spo = kg_root
+    tri = read_triples(spark, root)
+    pats = KG_STAR if shape == "star" else KG_CHAIN
+    rows, n_jobs = count_jobs(
+        lambda: kgquery.bgp_match(tri, pats).collect())
+    assert n_jobs <= 2
+    got = {tuple(r) for r in rows}
+    assert len(got) == len(rows)
+    if shape == "star":
+        want = {(d, c, j, p) for d, c, j in _star_rows(spo)
+                for s, pr, p in spo if s == d and pr == "cites_precedent"}
+    else:
+        want = _chain_rows(spo)
+    assert want and got == want

@@ -554,3 +554,26 @@ def test_plan_report_names_registered_queries():
     missing = [name for name, _ in report.SHOW
                if name not in queries.QUERIES]
     assert report.SHOW and not missing, missing
+
+
+def test_bgp_star_is_one_hub_exchange(spark):
+    """A star whose patterns all fit under ``broadcast_rows`` is one hub
+    shuffle: exactly one hash exchange, keyed on the hub, with no
+    broadcast, no join and no DISTINCT exchange.  The same star with one
+    pattern estimated above the bound keeps the join tree."""
+    import re
+    from legal_ner_spark.operators import kgquery
+    tri = spark.createDataFrame(
+        [("d1", "decided_by", "SC", "d1"), ("d1", "has_judge", "J1", "d1"),
+         ("d1", "cites_precedent", "P1", "d1")],
+        "subj string, pred string, obj string, doc_id string")
+    star = [("?d", "decided_by", "?court"), ("?d", "has_judge", "?judge"),
+            ("?d", "cites_precedent", "?p")]
+    stats = {"decided_by": 1, "has_judge": 1, "cites_precedent": 1}
+    p = physical(kgquery.bgp_match(tri, star, pred_stats=stats))
+    assert p.count("Exchange") == 1, p
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#", p) == ["hub"], p
+    assert "Join" not in p, p
+    hot = physical(kgquery.bgp_match(
+        tri, star, pred_stats={**stats, "cites_precedent": 10**6}))
+    assert "Join" in hot and "hashpartitioning(hub" not in hot, hot

@@ -247,14 +247,11 @@ def test_skyline_2d_empty_and_single(spark):
         == [(1, 5, 5)]
 
 
-def test_nearest_mention_align_ties_and_edges(spark):
-    """Hand-built doc: media at 10 with mentions at 5 and 15
-    (equidistant → prefer the PRECEDING mention); two mentions at the
-    same offset (→ min ent_id); media before all mentions (→ next
-    side); media-only doc drops out."""
+def _align_records(spark, rows):
+    """Records for `nearest_mention_align` from ``("doc", doc_id,
+    [(kind, media_ref, offset), ...])`` and ``("men", doc_id,
+    start_char, ent_id, label)`` tuples."""
     from pyspark.sql import Row, types as T
-    from legal_ner_spark.operators import multimodal
-
     span_t = T.ArrayType(T.StructType([
         T.StructField("kind", T.StringType()),
         T.StructField("text", T.StringType()),
@@ -267,27 +264,34 @@ def test_nearest_mention_align_ties_and_edges(spark):
         T.StructField("start_char", T.IntegerType()),
         T.StructField("ent_id", T.IntegerType()),
         T.StructField("label", T.StringType())])
+    out = []
+    for r in rows:
+        if r[0] == "doc":
+            out.append(Row(doc_id=r[1], rec_type="doc",
+                           spans=[{"kind": k, "text": "", "media_ref": m,
+                                   "offset": o} for k, m, o in r[2]],
+                           start_char=None, ent_id=None, label=None))
+        else:
+            out.append(Row(doc_id=r[1], rec_type="mention", spans=None,
+                           start_char=r[2], ent_id=r[3], label=r[4]))
+    return spark.createDataFrame(out, schema)
 
-    def doc(did, media):
-        return Row(doc_id=did, rec_type="doc",
-                   spans=[{"kind": k, "text": "", "media_ref": r,
-                           "offset": o} for k, r, o in media],
-                   start_char=None, ent_id=None, label=None)
 
-    def men(did, sc, eid, lab):
-        return Row(doc_id=did, rec_type="mention", spans=None,
-                   start_char=sc, ent_id=eid, label=lab)
-
-    rows = [
-        doc("d1", [("image", "m://a", 10), ("scan", "m://b", 2)]),
-        men("d1", 5, 0, "COURT"), men("d1", 15, 1, "STATUTE"),
+def test_nearest_mention_align_ties_and_edges(spark):
+    """Hand-built doc: media at 10 with mentions at 5 and 15
+    (equidistant → prefer the PRECEDING mention); two mentions at the
+    same offset (→ min ent_id); media before all mentions (→ next
+    side); media-only doc drops out."""
+    from legal_ner_spark.operators import multimodal
+    recs = _align_records(spark, [
+        ("doc", "d1", [("image", "m://a", 10), ("scan", "m://b", 2)]),
+        ("men", "d1", 5, 0, "COURT"), ("men", "d1", 15, 1, "STATUTE"),
         # same offset twins: min ent_id must win
-        doc("d2", [("image", "m://c", 8)]),
-        men("d2", 8, 3, "JUDGE"), men("d2", 8, 2, "COURT"),
+        ("doc", "d2", [("image", "m://c", 8)]),
+        ("men", "d2", 8, 3, "JUDGE"), ("men", "d2", 8, 2, "COURT"),
         # media-only doc: no alignment row at all
-        doc("d3", [("audio", "m://d", 1)]),
-    ]
-    recs = spark.createDataFrame(rows, schema)
+        ("doc", "d3", [("audio", "m://d", 1)]),
+    ])
     got = {(r.doc_id, r.media_ref): (r.ent_id, r.label, r.dist)
            for r in multimodal.nearest_mention_align(recs).collect()}
     assert got == {
@@ -295,6 +299,29 @@ def test_nearest_mention_align_ties_and_edges(spark):
         ("d1", "m://b"): (0, "COURT", 3),   # before all: next side
         ("d2", "m://c"): (2, "COURT", 0),   # same-sc twins: min ent_id
     }
+
+
+def test_media_align_oracle_keeps_identical_spans(spark, tmp_path):
+    """Two identical media spans (same doc, media_ref and offset) are
+    two alignment rows, in `nearest_mention_align` and in the
+    ``kg_media_align`` DuckDB oracle alike."""
+    duckdb = pytest.importorskip("duckdb")
+    from legal_ner_spark import queries
+    from legal_ner_spark.operators import multimodal
+    recs = _align_records(spark, [
+        ("doc", "d1", [("image", "m://a", 10), ("image", "m://a", 10),
+                       ("scan", "m://b", 30)]),
+        ("men", "d1", 5, 0, "COURT"), ("men", "d1", 25, 1, "STATUTE"),
+    ])
+    path = str(tmp_path / "recs")
+    recs.write.parquet(path)
+    got = sorted(tuple(r) for r in multimodal.nearest_mention_align(
+        recs).collect())
+    sql = queries.o_kg_media_align().replace(
+        queries._KG_SQL_SRC, f"read_parquet('{path}/*.parquet')")
+    want = sorted(tuple(r) for r in duckdb.connect().execute(sql).fetchall())
+    assert got == want
+    assert got.count(("d1", "m://a", "image", 10, 0, "COURT", 5, 5)) == 2
 
 
 def test_containment_pairs_asymmetric(spark):

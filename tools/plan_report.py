@@ -93,9 +93,12 @@ SHOW = [
     ("source_quota_sample", "per-domain cap: radix-cell prefix sums + "
                             "boundary-cell-only ranking — no per-key "
                             "window over a hot domain"),
-    ("kg_bgp_star", "BGP compile: selectivity-ordered equi-joins, "
-                    "pred literal pushed to the triple scan, small "
-                    "patterns broadcast"),
+    ("kg_bgp_star", "BGP star: one hub exchange, no broadcast, no "
+                    "DISTINCT — pred IN pushed to the triple scan, one "
+                    "groupBy(hub) collect, one chained explode per slot"),
+    ("kg_bgp_chain", "BGP chain: one hub exchange, no broadcast, no "
+                     "DISTINCT — each same_as triple fills both slots "
+                     "of its object's group, no self-join"),
     ("kg_bgp_minus", "SPARQL MINUS as a BroadcastHashJoin LeftAnti "
                      "on the shared variable"),
     ("kg_bgp_groupagg", "SPARQL GROUP BY + HAVING: partial+final "
@@ -111,8 +114,8 @@ SHOW = [
                         "truncated per hop"),
     ("kg_path_seq", "sequence path: one pred-pushed equi-join per step, "
                     "inverse step as a projection swap"),
-    ("kg_construct_rule", "CONSTRUCT: body join tree + constant-width "
-                          "head projection"),
+    ("kg_construct_rule", "CONSTRUCT: body match (one hub shuffle for "
+                          "this chain) + constant-width head projection"),
     ("kg_export_ntriples", "N-Triples sink: codegen'd string expressions "
                            "off the scan, label leg one distinct"),
     ("kg_rdfs_entail", "RDFS entailment: the ontology compiled into "
