@@ -105,27 +105,25 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
     checkpointed edges, anti-joins the visited set, and stops when the
     frontier empties — rounds = eccentricity, work per round =
     O(frontier × avg degree), the textbook Pregel shape expressed as
-    DataFrame ops.  ``checkpoint_dir`` = durable truncation (cluster
-    mode), same contract as the CC/PageRank loops."""
-    from ..plans.checkpoint import Truncator
+    DataFrame ops (`delta_fixpoint`: only each frontier is truncated).
+    ``checkpoint_dir`` = durable truncation (cluster mode), same
+    contract as the CC/PageRank loops."""
+    from ..plans.checkpoint import Truncator, delta_fixpoint
     trunc = Truncator(checkpoint_dir)
     sym = trunc(edges.select("src", "dst")
                 .union(edges.select(F.col("dst").alias("src"),
                                     F.col("src").alias("dst"))), "bfs_edges")
-    visited = trunc(sources.select("node").distinct()
-                    .withColumn("distance", F.lit(0)), "bfs_r0")
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        nxt = (sym.join(frontier.select(F.col("node").alias("f")),
-                        sym.src == F.col("f"))
-               .select(F.col("dst").alias("node")).distinct()
-               .join(visited.select("node"), "node", "left_anti")
-               .withColumn("distance", F.lit(depth)))
-        frontier = trunc(nxt, "bfs_frontier")
-        if frontier.limit(1).count() == 0:
-            break
-        visited = trunc(visited.unionByName(frontier), "bfs_visited")
-    return visited
+
+    def step(frontier, seen, depth):
+        return (sym.join(frontier.select(F.col("node").alias("f")),
+                         sym.src == F.col("f"))
+                .select(F.col("dst").alias("node")).distinct()
+                .withColumn("distance", F.lit(depth)))
+
+    return delta_fixpoint(
+        trunc(sources.select("node").distinct()
+              .withColumn("distance", F.lit(0)), "bfs_r0"),
+        step, ["node"], range(1, max_depth + 1), trunc, tag="bfs_f")
 
 
 def landmark_distances(edges: DataFrame, landmarks: DataFrame, *,
@@ -144,32 +142,28 @@ def landmark_distances(edges: DataFrame, landmarks: DataFrame, *,
     Same frontier shape as `bfs_distances`, keyed by (root, node):
     each round joins the frontier against the edges once, distincts the
     (root, dst) pairs, anti-joins the visited set — work
-    O(frontier × avg degree) per round, lineage truncated per round
-    (durable under ``checkpoint_dir``)."""
-    from ..plans.checkpoint import Truncator
+    O(frontier × avg degree) per round, only the frontier truncated
+    (`delta_fixpoint`; durable under ``checkpoint_dir``)."""
+    from ..plans.checkpoint import Truncator, delta_fixpoint
     trunc = Truncator(checkpoint_dir)
     e = edges.select("src", "dst")
     if not directed:
         e = e.unionByName(e.select(F.col("dst").alias("src"),
                                    F.col("src").alias("dst")))
     e = trunc(e, "lmd_edges")
-    visited = trunc(landmarks.select(F.col("node").alias("root"))
-                    .distinct()
-                    .select("root", F.col("root").alias("node"))
-                    .withColumn("distance", F.lit(0)), "lmd_r0")
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        nxt = (frontier.select("root", F.col("node").alias("src"))
-               .join(e, "src")
-               .select("root", F.col("dst").alias("node")).distinct()
-               .join(visited.select("root", "node"), ["root", "node"],
-                     "left_anti")
-               .withColumn("distance", F.lit(depth)))
-        frontier = trunc(nxt, f"lmd_f{depth}")
-        if frontier.isEmpty():
-            break
-        visited = trunc(visited.unionByName(frontier), f"lmd_v{depth}")
-    return visited
+
+    def step(frontier, seen, depth):
+        return (frontier.select("root", F.col("node").alias("src"))
+                .join(e, "src")
+                .select("root", F.col("dst").alias("node")).distinct()
+                .withColumn("distance", F.lit(depth)))
+
+    return delta_fixpoint(
+        trunc(landmarks.select(F.col("node").alias("root")).distinct()
+              .select("root", F.col("root").alias("node"))
+              .withColumn("distance", F.lit(0)), "lmd_r0"),
+        step, ["root", "node"], range(1, max_depth + 1), trunc,
+        tag="lmd_f")
 
 
 def shortest_paths(edges: DataFrame, sources: DataFrame, *,

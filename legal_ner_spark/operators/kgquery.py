@@ -57,10 +57,13 @@ unless the caller explicitly opts in.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans import publish
+from ..plans.checkpoint import Truncator, delta_fixpoint
 
 __all__ = ["bgp_match", "bgp_match_delta", "property_path", "path_edges",
            "path_sequence", "construct", "closure", "to_ntriples",
@@ -75,6 +78,7 @@ __all__ = ["bgp_match", "bgp_match_delta", "property_path", "path_edges",
            "rdfs_rules", "graph_diff"]
 
 _TERM_COLS = ("subj", "pred", "obj", "doc_id")
+_SPO = ["subj", "pred", "obj"]
 
 
 def _pred_counts(triples: DataFrame) -> dict:
@@ -824,8 +828,8 @@ def property_path(edges: DataFrame, max_hops: int, *, min_hops: int = 1,
 
     One (frontier.dst = edges.src) shuffle per hop; the frontier is the
     set of NEWLY reached pairs only (anti-join against everything seen),
-    so a dense core is expanded once, not once per hop.  Lineage is
-    truncated per hop via the shared ``Truncator`` (durable under
+    so a dense core is expanded once, not once per hop.  Only each hop's
+    new pairs are truncated (`delta_fixpoint`; durable under
     ``checkpoint_dir`` — the cluster-safe mode).  Result size is the
     true bounded-reachability relation; that is the answer's size, not a
     plan artifact — callers bound it with ``max_hops``.
@@ -834,7 +838,6 @@ def property_path(edges: DataFrame, max_hops: int, *, min_hops: int = 1,
         raise ValueError("max_hops must be >= 1")
     if not 1 <= min_hops <= max_hops:
         raise ValueError("need 1 <= min_hops <= max_hops")
-    from ..plans.checkpoint import Truncator
     trunc = Truncator(checkpoint_dir)
 
     e = edges.select("src", "dst")
@@ -842,23 +845,16 @@ def property_path(edges: DataFrame, max_hops: int, *, min_hops: int = 1,
         e = e.union(e.select(F.col("dst").alias("src"),
                              F.col("src").alias("dst")))
     e = trunc(e.distinct(), "pp_edges")
+    nxt = e.select(F.col("src").alias("m"), F.col("dst").alias("ndst"))
 
-    reach = trunc(e.withColumn("hops", F.lit(1)), "pp_h1")
-    frontier = reach.select("src", "dst")
-    for k in range(2, max_hops + 1):
-        nxt = (frontier.join(e.select(F.col("src").alias("m"), "dst")
-                             .withColumnRenamed("dst", "ndst"),
-                             frontier.dst == F.col("m"))
-               .select("src", F.col("ndst").alias("dst"))
-               .distinct())
-        new = trunc(nxt.join(reach.select("src", "dst"),
-                             on=["src", "dst"], how="left_anti"),
-                    f"pp_h{k}")
-        if new.isEmpty():
-            break
-        reach = trunc(reach.unionByName(
-            new.withColumn("hops", F.lit(k))), f"pp_r{k}")
-        frontier = new
+    def step(frontier, seen, k):
+        return (frontier.join(nxt, frontier.dst == F.col("m"))
+                .select("src", F.col("ndst").alias("dst")).distinct()
+                .withColumn("hops", F.lit(k)))
+
+    reach = delta_fixpoint(e.withColumn("hops", F.lit(1)), step,
+                           ["src", "dst"], range(2, max_hops + 1), trunc,
+                           tag="pp_h")
     return reach.filter(F.col("hops") >= min_hops)
 
 
@@ -1810,7 +1806,6 @@ def owl_extend(triples: DataFrame, *, type_pred: str = "type",
     closure stays distributed, because it runs over INSTANCE edges
     (corpus-sized) of the declared predicates.
     """
-    from ..plans.checkpoint import Truncator
     trunc = Truncator(checkpoint_dir)
 
     decl_rows = (triples.filter(
@@ -1875,7 +1870,7 @@ def owl_extend(triples: DataFrame, *, type_pred: str = "type",
     # shared pred-keyed semi-naive closure of every declared-transitive
     # predicate's INSTANCE edges (rows of other predicates never enter)
     if not tra_set:
-        e = base.where(F.lit(False)).select(
+        reach = base.where(F.lit(False)).select(
             F.col("pred"), F.col("subj").alias("src"),
             F.col("obj").alias("dst"))
     else:
@@ -1883,24 +1878,18 @@ def owl_extend(triples: DataFrame, *, type_pred: str = "type",
                   .select("pred", F.col("subj").alias("src"),
                           F.col("obj").alias("dst"))
                   .distinct(), "owl_edges")
-    reach = e
-    frontier = e
-    if tra_set:
-        for k in range(2, max_hops + 1):
-            nxt = (frontier.join(
-                e.select(F.col("pred").alias("p2"),
-                         F.col("src").alias("m"),
-                         F.col("dst").alias("ndst")),
-                (frontier.dst == F.col("m"))
-                & (frontier.pred == F.col("p2")))
-                .select("pred", "src", F.col("ndst").alias("dst"))
-                .distinct())
-            new = trunc(nxt.join(reach, on=["pred", "src", "dst"],
-                                 how="left_anti"), f"owl_h{k}")
-            if new.isEmpty():
-                break
-            reach = trunc(reach.unionByName(new), f"owl_r{k}")
-            frontier = new
+        nxt = e.select(F.col("pred").alias("p2"), F.col("src").alias("m"),
+                       F.col("dst").alias("ndst"))
+
+        def step(frontier, seen, k):
+            return (frontier.join(nxt, (frontier.dst == F.col("m"))
+                                  & (frontier.pred == F.col("p2")))
+                    .select("pred", "src", F.col("ndst").alias("dst"))
+                    .distinct())
+
+        reach = delta_fixpoint(e, step, ["pred", "src", "dst"],
+                               range(2, max_hops + 1), trunc,
+                               tag="owl_h")
     closed = reach.select(F.col("src").alias("subj"), "pred",
                           F.col("dst").alias("obj"))
 
@@ -2110,6 +2099,12 @@ def validate_shapes(triples: DataFrame, shapes) -> DataFrame:
 
 # --- Datalog rule programs ----------------------------------------------------
 
+def _null_doc(df3: DataFrame) -> DataFrame:
+    """A 3-tuple fact table as a store: derived facts carry null
+    ``doc_id``."""
+    return df3.withColumn("doc_id", F.lit(None).cast("string"))
+
+
 def materialize_rules(triples: DataFrame, rules, *, max_rounds: int = 16,
                       checkpoint_dir: str | None = None,
                       derived_only: bool = False) -> DataFrame:
@@ -2144,26 +2139,29 @@ def materialize_rules(triples: DataFrame, rules, *, max_rounds: int = 16,
 
     Scale shape: per round, each k-pattern rule costs the delta
     matcher's k pinned legs (delta side broadcast, store side scanned
-    pred-pushed, shuffle O(|new facts|)); per-round lineage is truncated
-    via the shared ``Truncator`` (durable under ``checkpoint_dir``).
-    Predicate stats are probed once per round and shared across rules.
+    pred-pushed, shuffle O(|new facts|)); each round truncates only its
+    new facts (`delta_fixpoint`, durable under ``checkpoint_dir``).
+    Predicate stats are probed once, over the asserted store, and kept
+    current by adding each round's ≤|preds|-row count of its new facts
+    — the same aggregate that tells the loop it has reached fixpoint.
     """
-    from ..plans.checkpoint import Truncator
     trunc = Truncator(checkpoint_dir)
     compiled = _compile_rules(rules)
 
-    known3 = trunc(triples.select("subj", "pred", "obj").distinct(),
-                   "rules_known0")
-    full = known3.withColumn("doc_id", F.lit(None).cast("string"))
+    known3 = trunc(triples.select(*_SPO).distinct(), "rules_known0")
+    full = _null_doc(known3)
+    stats = _pred_counts(full)
 
     new = (_rule_heads(compiled,
                        lambda body, v, f:
-                       bgp_match(full, body, values=v, filters=f))
-           .join(known3, on=["subj", "pred", "obj"], how="left_anti"))
+                       bgp_match(full, body, values=v, filters=f,
+                                 pred_stats=stats))
+           .join(known3, on=_SPO, how="left_anti"))
     new = trunc(new, "rules_d0")
-    derived = _rules_seminaive(compiled, known3, new, trunc, max_rounds)
+    derived = _rules_seminaive(compiled, known3, new, trunc, max_rounds,
+                               stats)
 
-    derived = derived.withColumn("doc_id", F.lit(None).cast("string"))
+    derived = _null_doc(derived)
     if derived_only:
         return derived
     return triples.select("subj", "pred", "obj", "doc_id").unionByName(
@@ -2199,40 +2197,56 @@ def _compile_rules(rules):
     return compiled
 
 
-def _rule_heads(compiled, match_fn):
-    """Union of every rule's instantiated heads under one matcher."""
-    out = None
-    for body, heads, values, filters in compiled:
-        b = match_fn(body, values, filters)
-        h = _instantiate_templates(b, heads).select("subj", "pred", "obj")
-        out = h if out is None else out.unionByName(h)
-    return out.distinct()
+def _rule_heads(compiled, match_fn, store=None, stats=None):
+    """Distinct union of every rule's instantiated heads under one
+    matcher, ``match_fn(body, values, filters)``.  ``compiled`` holds
+    monotone rules (`_compile_rules`) or stratified ones
+    (`_compile_rules_neg`).  A stratified rule's MINUS patterns are
+    applied over ``store`` through `_apply_minus`; an aggregate rule is
+    always one whole evaluation over ``store`` (`_eval_rule_once`).
+    ``stats`` is ``store``'s ``{pred: rows}``."""
+    out = []
+    for r in compiled:
+        body, heads, mpats, values, filters, aggspec = \
+            r if len(r) == 6 else (r[0], r[1], (), r[2], r[3], None)
+        if aggspec is not None:
+            b = _eval_rule_once(store, body, mpats, values, filters,
+                                aggspec, stats)
+        else:
+            b = match_fn(body, values, filters)
+            if mpats:
+                b = _apply_minus(b, store, mpats, stats)
+        out.append(_instantiate_templates(b, heads)
+                   .select(*_SPO))
+    return reduce(DataFrame.unionByName, out).distinct()
 
 
-def _rules_seminaive(compiled, known3, new, trunc, max_rounds,
-                     derived=None):
+def _rules_seminaive(compiled, known3, new, trunc, max_rounds, stats,
+                     tag="rules_d"):
     """The shared semi-naive continuation: given the known 3-tuple set
-    and this round's new facts, run delta rounds to fixpoint (or
-    ``max_rounds``) and return everything derived (``derived`` seeds
-    the accumulator — `materialize_rules` seeds with round 0's facts,
-    the incremental entry point with the batch round's)."""
-    derived = new if derived is None else derived
-    for k in range(1, max_rounds + 1):
-        if new.isEmpty():
-            break
-        known3 = trunc(known3.unionByName(new), f"rules_known{k}")
-        full = known3.withColumn("doc_id", F.lit(None).cast("string"))
-        delta = new.withColumn("doc_id", F.lit(None).cast("string"))
-        stats = _pred_counts(full)
-        new = (_rule_heads(compiled,
+    and the truncated new facts (disjoint from it), run delta rounds to
+    fixpoint (or ``max_rounds``) and return ``new`` plus everything
+    derived after it.  ``stats`` is ``known3``'s ``{pred: rows}``; it is
+    updated in place by each delta's counts, so on return it covers
+    ``known3`` and the result."""
+    def probe(d):
+        counts = publish.count_preds(d)
+        for p, n in counts.items():
+            stats[p] = stats.get(p, 0) + n
+        return bool(counts)
+
+    def step(delta, seen, k):
+        full = _null_doc(seen)
+        d4 = _null_doc(delta)
+        return _rule_heads(compiled,
                            lambda body, v, f:
-                           bgp_match_delta(full, delta, body, values=v,
-                                           filters=f, pred_stats=stats))
-               .join(known3, on=["subj", "pred", "obj"],
-                     how="left_anti"))
-        new = trunc(new, f"rules_d{k}")
-        derived = trunc(derived.unionByName(new), f"rules_all{k}")
-    return derived
+                           bgp_match_delta(full, d4, body, values=v,
+                                           filters=f, pred_stats=stats),
+                           full, stats)
+
+    return delta_fixpoint(new, step, _SPO,
+                          range(1, max_rounds + 1), trunc, known=known3,
+                          probe=probe, tag=tag)
 
 
 def materialize_rules_delta(full: DataFrame, delta: DataFrame, rules, *,
@@ -2261,24 +2275,22 @@ def materialize_rules_delta(full: DataFrame, delta: DataFrame, rules, *,
     in ``full``'s prior portion derives nothing new (the anti-join
     absorbs re-derivations), so the result is empty and an append of it
     is a no-op."""
-    from ..plans.checkpoint import Truncator
     trunc = Truncator(checkpoint_dir)
     compiled = _compile_rules(rules)
 
-    known3 = trunc(full.select("subj", "pred", "obj").distinct(),
-                   "rulesd_known0")
-    full4 = known3.withColumn("doc_id", F.lit(None).cast("string"))
-    delta4 = (delta.select("subj", "pred", "obj").distinct()
-              .withColumn("doc_id", F.lit(None).cast("string")))
+    known3 = trunc(full.select(*_SPO).distinct(), "rulesd_known0")
+    full4 = _null_doc(known3)
+    delta4 = _null_doc(delta.select(*_SPO).distinct())
     stats = _pred_counts(full4)
     new = (_rule_heads(compiled,
                        lambda body, v, f:
                        bgp_match_delta(full4, delta4, body, values=v,
                                        filters=f, pred_stats=stats))
-           .join(known3, on=["subj", "pred", "obj"], how="left_anti"))
+           .join(known3, on=_SPO, how="left_anti"))
     new = trunc(new, "rulesd_d0")
-    derived = _rules_seminaive(compiled, known3, new, trunc, max_rounds)
-    return derived.withColumn("doc_id", F.lit(None).cast("string"))
+    derived = _rules_seminaive(compiled, known3, new, trunc, max_rounds,
+                               stats)
+    return _null_doc(derived)
 
 
 def materialize_rules_retract(asserted: DataFrame, derived: DataFrame,
@@ -2319,65 +2331,55 @@ def materialize_rules_retract(asserted: DataFrame, derived: DataFrame,
     Same monotone-only contract as the rest of the rule machinery —
     which DRed itself requires: with negation, deleting a fact could
     ADD answers, and neither phase enumerates those."""
-    from ..plans.checkpoint import Truncator
     trunc = Truncator(checkpoint_dir)
     compiled = _compile_rules(rules)
 
-    a3 = trunc(asserted.select("subj", "pred", "obj").distinct(),
-               "dred_a3")
-    drv3 = trunc(derived.select("subj", "pred", "obj").distinct(),
-                 "dred_drv3")
-    del3 = deleted.select("subj", "pred", "obj").distinct()
+    a3 = trunc(asserted.select(*_SPO).distinct(), "dred_a3")
+    drv3 = trunc(derived.select(*_SPO).distinct(), "dred_drv3")
+    del3 = deleted.select(*_SPO).distinct()
     old_fix3 = trunc(a3.unionByName(del3).unionByName(drv3).distinct(),
                      "dred_oldfix")
-    old_full4 = old_fix3.withColumn("doc_id", F.lit(None).cast("string"))
+    old_full4 = _null_doc(old_fix3)
     stats = _pred_counts(old_full4)
 
-    # phase 1: over-delete
-    d = trunc(del3.join(a3, on=["subj", "pred", "obj"], how="left_anti"),
-              "dred_d0")
-    endangered = d
-    for k in range(1, max_rounds + 1):
-        if d.isEmpty():
-            break
-        d4 = d.withColumn("doc_id", F.lit(None).cast("string"))
-        cand = _rule_heads(compiled,
-                           lambda body, v, f:
-                           bgp_match_delta(old_full4, d4, body, values=v,
-                                           filters=f, pred_stats=stats))
-        d = (cand.join(drv3, on=["subj", "pred", "obj"], how="left_semi")
-             .join(a3, on=["subj", "pred", "obj"], how="left_anti")
-             .join(endangered, on=["subj", "pred", "obj"],
-                   how="left_anti"))
-        d = trunc(d, f"dred_d{k}")
-        endangered = trunc(endangered.unionByName(d), f"dred_end{k}")
+    # phase 1: over-delete — only derived, no-longer-asserted heads
+    # can leave
+    def endanger(d, seen, k):
+        d4 = _null_doc(d)
+        return (_rule_heads(compiled,
+                            lambda body, v, f:
+                            bgp_match_delta(old_full4, d4, body, values=v,
+                                            filters=f, pred_stats=stats))
+                .join(drv3, on=_SPO, how="left_semi")
+                .join(a3, on=_SPO, how="left_anti"))
 
-    survivors3 = trunc(old_fix3.join(endangered,
-                                     on=["subj", "pred", "obj"],
-                                     how="left_anti"), "dred_surv")
-    kept_derived = drv3.join(endangered, on=["subj", "pred", "obj"],
-                             how="left_anti")
+    d0 = trunc(del3.join(a3, on=_SPO, how="left_anti"), "dred_d0")
+    endangered = delta_fixpoint(d0, endanger, _SPO,
+                                range(1, max_rounds + 1), trunc,
+                                tag="dred_d")
+
+    survivors3 = trunc(old_fix3.join(endangered, on=_SPO, how="left_anti"),
+                       "dred_surv")
+    kept_derived = drv3.join(endangered, on=_SPO, how="left_anti")
 
     # phase 2: re-derive (only if some endangered fact could come back)
     if endangered.isEmpty():
         recovered = None
     else:
-        surv4 = survivors3.withColumn("doc_id",
-                                      F.lit(None).cast("string"))
+        surv4 = _null_doc(survivors3)
+        sstats = _pred_counts(surv4)
         redo = (_rule_heads(compiled,
                             lambda body, v, f:
-                            bgp_match(surv4, body, values=v, filters=f))
-                .join(endangered, on=["subj", "pred", "obj"],
-                      how="left_semi"))
+                            bgp_match(surv4, body, values=v, filters=f,
+                                      pred_stats=sstats))
+                .join(endangered, on=_SPO, how="left_semi"))
         redo = trunc(redo, "dred_redo0")
         recovered = _rules_seminaive(compiled, survivors3, redo, trunc,
-                                     max_rounds)
+                                     max_rounds, sstats)
 
     out = kept_derived if recovered is None \
         else kept_derived.unionByName(recovered)
-    return (out.join(a3, on=["subj", "pred", "obj"], how="left_anti")
-            .distinct()
-            .withColumn("doc_id", F.lit(None).cast("string")))
+    return _null_doc(out.join(a3, on=_SPO, how="left_anti").distinct())
 
 
 def update_graph_maintain(asserted: DataFrame, derived: DataFrame,
@@ -2427,36 +2429,36 @@ def update_graph_maintain(asserted: DataFrame, derived: DataFrame,
 
     # delete half: retract what actually leaves the base
     kept = asserted.select("subj", "pred", "obj", "doc_id")
-    drv = derived.select("subj", "pred", "obj").distinct()
+    drv = derived.select(*_SPO).distinct()
     if dels is not None:
-        deleted = (dels.select("subj", "pred", "obj").distinct()
-                   .join(asserted.select("subj", "pred", "obj"),
-                         on=["subj", "pred", "obj"], how="left_semi")
+        deleted = (dels.select(*_SPO).distinct()
+                   .join(asserted.select(*_SPO),
+                         on=_SPO, how="left_semi")
                    .withColumn("doc_id", F.lit(None).cast("string")))
-        kept = kept.join(deleted.select("subj", "pred", "obj"),
-                         on=["subj", "pred", "obj"], how="left_anti")
+        kept = kept.join(deleted.select(*_SPO),
+                         on=_SPO, how="left_anti")
         drv = materialize_rules_retract(
             kept, derived, deleted, rules, max_rounds=max_rounds,
-            checkpoint_dir=checkpoint_dir).select("subj", "pred", "obj")
+            checkpoint_dir=checkpoint_dir).select(*_SPO)
 
     # insert half: set-semantic fresh rows, then the insertion delta
     new_asserted = kept
     if ins is not None:
-        fresh = (ins.select("subj", "pred", "obj").distinct()
-                 .join(kept.select("subj", "pred", "obj"),
-                       on=["subj", "pred", "obj"], how="left_anti")
+        fresh = (ins.select(*_SPO).distinct()
+                 .join(kept.select(*_SPO),
+                       on=_SPO, how="left_anti")
                  .withColumn("doc_id", F.lit(None).cast("string")))
         new_asserted = kept.unionByName(fresh)
-        drv4 = drv.withColumn("doc_id", F.lit(None).cast("string"))
+        drv4 = _null_doc(drv)
         full = new_asserted.unionByName(drv4)
         new = materialize_rules_delta(
             full, fresh, rules, max_rounds=max_rounds,
-            checkpoint_dir=checkpoint_dir).select("subj", "pred", "obj")
+            checkpoint_dir=checkpoint_dir).select(*_SPO)
         drv = drv.unionByName(new)
 
     new_derived = (drv.distinct()
-                   .join(new_asserted.select("subj", "pred", "obj"),
-                         on=["subj", "pred", "obj"], how="left_anti")
+                   .join(new_asserted.select(*_SPO),
+                         on=_SPO, how="left_anti")
                    .withColumn("doc_id", F.lit(None).cast("string")))
     return new_asserted, new_derived
 
@@ -2692,15 +2694,14 @@ def materialize_rules_stratified(triples: DataFrame, rules, *,
 
     Evaluation runs the strata lowest-first; each stratum is a MONOTONE
     program over the store extended with every lower stratum's derived
-    facts, so the shared semi-naive machinery applies: round 0 matches
-    via `bgp_match` (its ``minus`` arg), delta rounds via
-    `bgp_match_delta` on the positive body with the stratum's MINUS
-    patterns applied by `_apply_minus` afterwards.  That split is sound
-    precisely BECAUSE of stratification — a negated predicate's
-    extension is complete and frozen before its stratum starts (facts
-    added within a stratum carry that stratum's head predicates, which
-    no same-stratum MINUS may name), so the anti-join is
-    round-invariant.
+    facts, so the shared semi-naive machinery applies: every round
+    matches the positive body (`bgp_match` in round 0, `bgp_match_delta`
+    after it) and applies the stratum's MINUS patterns by `_apply_minus`
+    afterwards.  That split is sound precisely BECAUSE of
+    stratification — a negated predicate's extension is complete and
+    frozen before its stratum starts (facts added within a stratum carry
+    that stratum's head predicates, which no same-stratum MINUS may
+    name), so the anti-join is round-invariant.
 
     Scale shape: identical to `materialize_rules` per stratum (delta
     legs broadcast, store scanned pred-pushed, shuffle O(new facts));
@@ -2712,62 +2713,38 @@ def materialize_rules_stratified(triples: DataFrame, rules, *,
 
     Derived facts carry null ``doc_id``; ``derived_only=True`` returns
     just them."""
-    from ..plans.checkpoint import Truncator
     trunc = Truncator(checkpoint_dir)
     compiled = _compile_rules_neg(rules)
     rule_levels, _ = _rule_strata(compiled)
     n_levels = max(rule_levels) + 1
 
-    known3 = trunc(triples.select("subj", "pred", "obj").distinct(),
-                   "strat_known")
-    derived_all = None
+    known3 = trunc(triples.select(*_SPO).distinct(), "strat_known")
+    stats = _pred_counts(_null_doc(known3))
+    derived_all = []
     for lv in range(n_levels):
         sub = [c for c, rl in zip(compiled, rule_levels) if rl == lv]
         if not sub:
             continue
-        full = known3.withColumn("doc_id", F.lit(None).cast("string"))
-        new = None
-        for body, heads, mpats, v, f, aggspec in sub:
-            b = _eval_rule_once(full, body, mpats, v, f, aggspec)
-            h = _instantiate_templates(b, heads).select(
-                "subj", "pred", "obj")
-            new = h if new is None else new.unionByName(h)
-        new = (new.distinct()
-               .join(known3, on=["subj", "pred", "obj"], how="left_anti"))
+        full = _null_doc(known3)
+        new = (_rule_heads(sub,
+                           lambda body, v, f:
+                           bgp_match(full, body, values=v, filters=f,
+                                     pred_stats=stats), full, stats)
+               .join(known3, on=_SPO, how="left_anti"))
         new = trunc(new, f"strat{lv}_d0")
-        derived = new
         # aggregate rules are complete after round 0: every input is
         # strictly below this stratum and frozen, and nothing in this
         # stratum consumes their heads (the leveling forbids it)
         loop_rules = [c for c in sub if c[5] is None]
-        for k in range(1, max_rounds + 1):
-            if not loop_rules or new.isEmpty():
-                break
-            known3 = trunc(known3.unionByName(new), f"strat{lv}_known{k}")
-            full = known3.withColumn("doc_id", F.lit(None).cast("string"))
-            delta = new.withColumn("doc_id", F.lit(None).cast("string"))
-            stats = _pred_counts(full)
-            new = None
-            for body, heads, mpats, v, f, _ in loop_rules:
-                b = bgp_match_delta(full, delta, body, values=v,
-                                    filters=f, pred_stats=stats)
-                if mpats:
-                    b = _apply_minus(b, full, mpats, stats)
-                h = _instantiate_templates(b, heads).select(
-                    "subj", "pred", "obj")
-                new = h if new is None else new.unionByName(h)
-            new = (new.distinct()
-                   .join(known3, on=["subj", "pred", "obj"],
-                         how="left_anti"))
-            new = trunc(new, f"strat{lv}_d{k}")
-            derived = trunc(derived.unionByName(new), f"strat{lv}_all{k}")
-        known3 = trunc(known3.unionByName(derived).distinct(),
-                       f"strat{lv}_close")
-        derived_all = derived if derived_all is None \
-            else derived_all.unionByName(derived)
+        derived = _rules_seminaive(loop_rules, known3, new, trunc,
+                                   max_rounds if loop_rules else 0, stats,
+                                   f"strat{lv}_d")
+        # derived is distinct and disjoint from known3 (each delta is
+        # anti-joined against everything known before it)
+        known3 = known3.unionByName(derived)
+        derived_all.append(derived)
 
-    derived_all = (derived_all.distinct()
-                   .withColumn("doc_id", F.lit(None).cast("string")))
+    derived_all = _null_doc(reduce(DataFrame.unionByName, derived_all))
     if derived_only:
         return derived_all
     return triples.select("subj", "pred", "obj", "doc_id").unionByName(
@@ -2822,15 +2799,10 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
     Within a stratum every negated predicate is frozen (strictly lower
     level), so `_apply_minus` stays round-invariant exactly as in
     `materialize_rules_stratified`."""
-    from ..plans.checkpoint import Truncator
     trunc = Truncator(checkpoint_dir)
     compiled = _compile_rules_neg(rules)
     rule_levels, pred_level = _rule_strata(compiled)
     n_levels = max(rule_levels) + 1
-    SPO = ["subj", "pred", "obj"]
-
-    def four(df3):
-        return df3.withColumn("doc_id", F.lit(None).cast("string"))
 
     def pin_pattern(m, body):
         # A MINUS atom appended to the body as a pinned positive
@@ -2849,15 +2821,15 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
             out.append(t)
         return tuple(out)
 
-    base_new = trunc(asserted.select(*SPO).distinct(), "sm_base")
-    d_ins = trunc(inserts.select(*SPO).distinct()
-                  .join(base_new, on=SPO, how="left_semi"), "sm_ins")
-    d_del = trunc(deletes.select(*SPO).distinct()
-                  .join(base_new, on=SPO, how="left_anti"), "sm_del")
-    v_old = trunc(base_new.join(d_ins, on=SPO, how="left_anti")
+    base_new = trunc(asserted.select(*_SPO).distinct(), "sm_base")
+    d_ins = trunc(inserts.select(*_SPO).distinct()
+                  .join(base_new, on=_SPO, how="left_semi"), "sm_ins")
+    d_del = trunc(deletes.select(*_SPO).distinct()
+                  .join(base_new, on=_SPO, how="left_anti"), "sm_del")
+    v_old = trunc(base_new.join(d_ins, on=_SPO, how="left_anti")
                   .unionByName(d_del).distinct(), "sm_vold")
     v_new = base_new
-    drv3 = trunc(derived.select(*SPO).distinct(), "sm_drv")
+    drv3 = trunc(derived.select(*_SPO).distinct(), "sm_drv")
 
     p_new_all = None
     for lv in range(n_levels):
@@ -2871,7 +2843,8 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
                       for h in heads]
         p_old = trunc(drv3.filter(F.col("pred").isin(lv_preds)),
                       f"sm{lv}_pold")
-        if d_ins.isEmpty() and d_del.isEmpty():
+        has_ins, has_del = not d_ins.isEmpty(), not d_del.isEmpty()
+        if not has_ins and not has_del:
             p_new_all = p_old if p_new_all is None \
                 else p_new_all.unionByName(p_old)
             v_old = trunc(v_old.unionByName(p_old).distinct(),
@@ -2886,22 +2859,20 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
             if ag_preds else p_old
         f_old3 = trunc(v_old.unionByName(p_old).distinct(),
                        f"sm{lv}_fold")
-        f_old4 = four(f_old3)
+        f_old4 = _null_doc(f_old3)
         so = _pred_counts(f_old4)
-        di4, dd4 = four(d_ins), four(d_del)
+        di4, dd4 = _null_doc(d_ins), _null_doc(d_del)
 
         # ---- endangered seed: deleted same-pred base facts + bindings
         # losing a positive atom or GAINING a negated one
-        cand = None
+        cand = []
+        if has_del and sub_na:
+            cand.append(_rule_heads(
+                sub_na, lambda body, v, f: bgp_match_delta(
+                    f_old4, dd4, body, values=v, filters=f,
+                    pred_stats=so), f_old4, so))
         for body, heads, mpats, v, f, _ in sub_na:
-            if not dd4.isEmpty():
-                b = bgp_match_delta(f_old4, dd4, body, values=v,
-                                    filters=f, pred_stats=so)
-                if mpats:
-                    b = _apply_minus(b, f_old4, mpats, so)
-                h = _instantiate_templates(b, heads).select(*SPO)
-                cand = h if cand is None else cand.unionByName(h)
-            if mpats and not di4.isEmpty():
+            if mpats and has_ins:
                 for i, m in enumerate(mpats):
                     b = bgp_match(f_old4, list(body) + [pin_pattern(
                         m, body)], values=v, filters=f, pred_stats=so,
@@ -2909,91 +2880,67 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
                     rest = [x for j, x in enumerate(mpats) if j != i]
                     if rest:
                         b = _apply_minus(b, f_old4, rest, so)
-                    h = _instantiate_templates(b, heads).select(*SPO)
-                    cand = h if cand is None else cand.unionByName(h)
+                    cand.append(_instantiate_templates(b, heads)
+                                .select(*_SPO))
         e = d_del.filter(F.col("pred").isin(head_preds))
-        if cand is not None:
-            e = e.unionByName(
-                cand.distinct().join(p_old_na, on=SPO, how="left_semi"))
+        if cand:
+            e = e.unionByName(reduce(DataFrame.unionByName, cand).distinct()
+                              .join(p_old_na, on=_SPO, how="left_semi"))
         e = trunc(e.distinct(), f"sm{lv}_e0")
 
         # ---- endangered propagation (over-delete, O(endangered)/round)
-        d = e
-        for k in range(1, max_rounds + 1):
-            if d.isEmpty():
-                break
-            d4 = four(d)
-            cand = _rule_heads(
-                [(b_, h_, v_, f_) for b_, h_, _, v_, f_, _ in sub_na],
-                lambda body, v, f:
-                bgp_match_delta(f_old4, d4, body, values=v, filters=f,
-                                pred_stats=so))
-            d = (cand.join(p_old_na, on=SPO, how="left_semi")
-                 .join(e, on=SPO, how="left_anti"))
-            d = trunc(d, f"sm{lv}_e{k}")
-            e = trunc(e.unionByName(d), f"sm{lv}_eall{k}")
+        # over the positive bodies only, an over-estimate DRed allows
+        pos_rules = [(b_, h_, v_, f_) for b_, h_, _, v_, f_, _ in sub_na]
 
-        p_kept = trunc(p_old_na.join(e, on=SPO, how="left_anti")
-                       .join(v_new, on=SPO, how="left_anti"),
+        def endanger(d, seen, k):
+            d4 = _null_doc(d)
+            return _rule_heads(
+                pos_rules, lambda body, v, f: bgp_match_delta(
+                    f_old4, d4, body, values=v, filters=f, pred_stats=so)
+            ).join(p_old_na, on=_SPO, how="left_semi")
+
+        if sub_na:
+            e = delta_fixpoint(e, endanger, _SPO, range(1, max_rounds + 1),
+                               trunc, tag=f"sm{lv}_e")
+        has_e = bool(sub_na) and not e.isEmpty()
+
+        p_kept = trunc(p_old_na.join(e, on=_SPO, how="left_anti")
+                       .join(v_new, on=_SPO, how="left_anti"),
                        f"sm{lv}_kept")
         f_surv3 = trunc(v_new.unionByName(p_kept).distinct(),
                         f"sm{lv}_surv")
-        f_surv4 = four(f_surv3)
+        f_surv4 = _null_doc(f_surv3)
         sn = _pred_counts(f_surv4)
 
         # ---- (re)derivation seeds over the NEW store
-        seeds = None
+        seeds = []
+        if has_e:
+            seeds.append(_rule_heads(sub_na, lambda body, v, f: bgp_match(
+                f_surv4, body, values=v, filters=f, pred_stats=sn),
+                f_surv4, sn).join(e, on=_SPO, how="left_semi"))
+        if has_ins and sub_na:
+            seeds.append(_rule_heads(
+                sub_na, lambda body, v, f: bgp_match_delta(
+                    f_surv4, di4, body, values=v, filters=f,
+                    pred_stats=sn), f_surv4, sn))
         for body, heads, mpats, v, f, _ in sub_na:
-            if not e.isEmpty():
-                b = bgp_match(f_surv4, body, values=v, filters=f,
-                              pred_stats=sn)
-                if mpats:
-                    b = _apply_minus(b, f_surv4, mpats, sn)
-                h = (_instantiate_templates(b, heads).select(*SPO)
-                     .join(e, on=SPO, how="left_semi"))
-                seeds = h if seeds is None else seeds.unionByName(h)
-            if not di4.isEmpty():
-                b = bgp_match_delta(f_surv4, di4, body, values=v,
-                                    filters=f, pred_stats=sn)
-                if mpats:
-                    b = _apply_minus(b, f_surv4, mpats, sn)
-                h = _instantiate_templates(b, heads).select(*SPO)
-                seeds = h if seeds is None else seeds.unionByName(h)
-            if mpats and not dd4.isEmpty():
+            if mpats and has_del:
                 for i, m in enumerate(mpats):
                     b = bgp_match(f_surv4, list(body) + [pin_pattern(
                         m, body)], values=v, filters=f, pred_stats=sn,
                                   sources=[None] * len(body) + [dd4])
                     b = _apply_minus(b, f_surv4, mpats, sn)
-                    h = _instantiate_templates(b, heads).select(*SPO)
-                    seeds = h if seeds is None else seeds.unionByName(h)
-        if seeds is None:
+                    seeds.append(_instantiate_templates(b, heads)
+                                 .select(*_SPO))
+        if not seeds:
             gained = p_kept.limit(0)
         else:
-            seeds = trunc(seeds.distinct()
-                          .join(f_surv3, on=SPO, how="left_anti"),
-                          f"sm{lv}_seed")
             # ---- semi-naive re-admission/insertion loop
-            known3, new, gained = f_surv3, seeds, seeds
-            for k in range(1, max_rounds + 1):
-                if new.isEmpty():
-                    break
-                known3 = trunc(known3.unionByName(new), f"sm{lv}_k{k}")
-                full4 = four(known3)
-                delta4 = four(new)
-                st = _pred_counts(full4)
-                new = None
-                for body, heads, mpats, v, f, _ in sub_na:
-                    b = bgp_match_delta(full4, delta4, body, values=v,
-                                        filters=f, pred_stats=st)
-                    if mpats:
-                        b = _apply_minus(b, full4, mpats, st)
-                    h = _instantiate_templates(b, heads).select(*SPO)
-                    new = h if new is None else new.unionByName(h)
-                new = (new.distinct()
-                       .join(known3, on=SPO, how="left_anti"))
-                new = trunc(new, f"sm{lv}_n{k}")
-                gained = trunc(gained.unionByName(new), f"sm{lv}_g{k}")
+            seeds = trunc(reduce(DataFrame.unionByName, seeds).distinct()
+                          .join(f_surv3, on=_SPO, how="left_anti"),
+                          f"sm{lv}_seed")
+            gained = _rules_seminaive(sub_na, f_surv3, seeds, trunc,
+                                      max_rounds, sn, f"sm{lv}_n")
 
         # ---- aggregate rules: inputs are strictly below this
         # stratum, so a changed input means ONE wholesale re-aggregate
@@ -3001,13 +2948,9 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
         # aggregates) — incremental folding of aggregates is unsound
         # for min/max deletes and not worth the split for the rest
         new_ag = None
-        for body, heads, mpats, v, f, aggspec in sub_ag:
-            b = _eval_rule_once(four(v_new), body, mpats, v, f, aggspec)
-            h = _instantiate_templates(b, heads).select(*SPO)
-            new_ag = h if new_ag is None else new_ag.unionByName(h)
-        if new_ag is not None:
-            new_ag = trunc(new_ag.distinct()
-                           .join(v_new, on=SPO, how="left_anti"),
+        if sub_ag:
+            new_ag = trunc(_rule_heads(sub_ag, None, _null_doc(v_new))
+                           .join(v_new, on=_SPO, how="left_anti"),
                            f"sm{lv}_ag")
 
         p_new = p_kept.unionByName(gained)
@@ -3020,26 +2963,25 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
         # ---- propagate this stratum's own output diffs upward,
         # cancelling insert/delete pairs (a fact that moved between
         # base and derived is no visible change to higher strata)
-        dp_ins = gained.join(p_old_na, on=SPO, how="left_anti")
-        dp_del = (e.join(p_old_na, on=SPO, how="left_semi")
-                  .join(p_new, on=SPO, how="left_anti"))
+        dp_ins = gained.join(p_old_na, on=_SPO, how="left_anti")
+        dp_del = (e.join(p_old_na, on=_SPO, how="left_semi")
+                  .join(p_new, on=_SPO, how="left_anti"))
         if new_ag is not None:
             dp_ins = dp_ins.unionByName(
-                new_ag.join(p_old_ag, on=SPO, how="left_anti"))
+                new_ag.join(p_old_ag, on=_SPO, how="left_anti"))
             dp_del = dp_del.unionByName(
-                p_old_ag.join(new_ag, on=SPO, how="left_anti"))
+                p_old_ag.join(new_ag, on=_SPO, how="left_anti"))
         raw_ins = d_ins.unionByName(dp_ins).distinct()
         raw_del = d_del.unionByName(dp_del).distinct()
-        d_ins = trunc(raw_ins.join(raw_del, on=SPO, how="left_anti"),
+        d_ins = trunc(raw_ins.join(raw_del, on=_SPO, how="left_anti"),
                       f"sm{lv}_di")
-        d_del = trunc(raw_del.join(raw_ins, on=SPO, how="left_anti"),
+        d_del = trunc(raw_del.join(raw_ins, on=_SPO, how="left_anti"),
                       f"sm{lv}_dd")
         v_old = trunc(v_old.unionByName(p_old).distinct(), f"sm{lv}_vo")
         v_new = trunc(v_new.unionByName(p_new).distinct(), f"sm{lv}_vn")
 
-    return (p_new_all.join(base_new, on=SPO, how="left_anti")
-            .distinct()
-            .withColumn("doc_id", F.lit(None).cast("string")))
+    return _null_doc(p_new_all.join(base_new, on=_SPO, how="left_anti")
+                     .distinct())
 
 
 def goal_rules(rules, goal_pred: str):

@@ -1,4 +1,5 @@
-"""Lineage truncation for the iterative tier (CC, PageRank, near-dedup).
+"""Lineage truncation for the iterative tier (CC, PageRank, near-dedup,
+fixpoints), and the one delta loop every semi-naive operator runs.
 
 Iterative DataFrame algorithms grow their logical plan every round; some
 truncation device is mandatory or analysis time explodes.  Two tiers:
@@ -13,11 +14,21 @@ truncation device is mandatory or analysis time explodes.  Two tiers:
   a tiny (id, label) table per round.
 
 ``Truncator`` hands out UNIQUE paths per call — a round-trip must never
-overwrite the path the incoming plan is still reading from.
+overwrite the path the incoming plan is still reading from.  Numbering
+skips any path that already exists, so two calls that share a
+``checkpoint_dir`` never overwrite each other's rounds either (the
+results of a fixpoint are unions of its round-trips, read lazily).
+
+``delta_fixpoint`` is the semi-naive loop shared by the Datalog rule
+programs, DRed over-deletion, property paths, the OWL transitive
+frontier and the BFS operators: a round truncates only its new delta,
+and the known set and the result stay unions of those truncated leaves,
+so a round's cost follows its delta, not the store.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 
@@ -35,10 +46,16 @@ class Truncator:
         if self.checkpoint_dir is None:
             ck = df.localCheckpoint(eager=True)
             return _reset_stats(ck)
-        self._n += 1
-        path = f"{self.checkpoint_dir}/{self._n:04d}_{tag}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+        while True:
+            self._n += 1
+            path = f"{self.checkpoint_dir}/{self._n:04d}_{tag}"
+            try:
+                df.write.mode("errorifexists").parquet(path)
+            except AnalysisException as e:
+                if e.getCondition() != "PATH_ALREADY_EXISTS":
+                    raise
+                continue
+            return df.sparkSession.read.parquet(path)
 
 
 def _reset_stats(ck: DataFrame) -> DataFrame:
@@ -70,3 +87,42 @@ def _reset_stats(ck: DataFrame) -> DataFrame:
         return DataFrame(new_jdf, spark)
     except Exception:  # pragma: no cover - depends on Spark internals
         return ck
+
+
+def delta_fixpoint(delta: DataFrame, step, keys, rounds, trunc: Truncator,
+                   *, tag: str, known: DataFrame | None = None,
+                   probe=None) -> DataFrame:
+    """Run a semi-naive delta loop and return the seed ``delta`` plus
+    every round's new delta.
+
+    ``delta`` is the truncated seed; ``known`` (optional) is what was
+    known before it, disjoint from it.  ``probe(delta)`` runs once on
+    the seed and once on each round's delta, and the loop stops at the
+    first falsy answer or when ``rounds`` runs out.  In round ``k`` the
+    known set first grows by the current delta; ``step(delta, seen, k)``
+    returns candidate rows, where ``seen`` is that known set projected
+    to ``keys``; the candidates whose ``keys`` are not in ``seen``,
+    truncated, are the next delta.
+
+    Only the delta is ever truncated.  ``seen`` and the result are
+    unions of truncated leaves, so no round copies, re-truncates or
+    probes anything store-sized.  ``probe`` defaults to an emptiness
+    test; Datalog callers pass one that adds the delta's ``{pred:
+    rows}`` to their running statistics, which is also the emptiness
+    test."""
+    if probe is None:
+        def probe(d):
+            return not d.isEmpty()
+    seen = None if known is None else known.select(*keys)
+    out = delta
+    live = probe(delta)
+    for k in rounds:
+        if not live:
+            break
+        d = delta.select(*keys)
+        seen = d if seen is None else seen.unionByName(d)
+        delta = trunc(step(delta, seen, k).join(seen, list(keys),
+                                                "left_anti"), f"{tag}{k}")
+        out = out.unionByName(delta)
+        live = probe(delta)
+    return out

@@ -90,3 +90,16 @@ def test_truncator_durable_rounds_write_distinct_paths(spark, tmp_path):
     import os
     dirs = sorted(os.listdir(tmp_path))
     assert dirs == ["0001_step", "0002_step"]
+
+
+def test_truncators_sharing_a_dir_never_overwrite(spark, tmp_path):
+    """Two calls that share a ``checkpoint_dir`` each number their
+    round-trips from 1; the second must skip the first's paths, whose
+    results may still be read lazily (a fixpoint's result is a union of
+    its round-trips)."""
+    import os
+    a = Truncator(str(tmp_path))(spark.range(3), "step")
+    b = Truncator(str(tmp_path))(spark.range(5), "step")
+    assert sorted(r.id for r in a.collect()) == [0, 1, 2]
+    assert b.count() == 5
+    assert sorted(os.listdir(tmp_path)) == ["0001_step", "0002_step"]

@@ -327,17 +327,36 @@ ANC_PROG = [
 ]
 
 
-def test_rules_ancestor_fixpoint(spark):
+def test_rules_ancestor_fixpoint(spark, tmp_path):
     # a 6-node chain: the linear-recursive program needs 5 semi-naive
-    # rounds; the fixpoint is all 15 ordered pairs
+    # rounds; the fixpoint is all 15 ordered pairs — in both truncation
+    # modes (durable: the known set is a union of parquet round-trips)
     g = T(spark, [("n%d" % i, "parent", "n%d" % (i + 1))
                   for i in range(5)])
-    out = kq.materialize_rules(g, ANC_PROG, derived_only=True)
-    anc = {(r.subj, r.obj) for r in out.filter("pred = 'anc'").collect()}
     want = {("n%d" % i, "n%d" % j)
             for i in range(5) for j in range(i + 1, 6)}
-    assert anc == want
-    assert out.count() == len(want)  # nothing but anc facts derived
+    for ckpt in (None, str(tmp_path / "ckpt")):
+        out = kq.materialize_rules(g, ANC_PROG, derived_only=True,
+                                   checkpoint_dir=ckpt)
+        anc = {(r.subj, r.obj)
+               for r in out.filter("pred = 'anc'").collect()}
+        assert anc == want
+        assert out.count() == len(want)  # nothing but anc facts derived
+
+
+def test_rules_round_jobs_follow_the_delta(spark, count_jobs):
+    # a 12-edge ancestor chain takes 12 semi-naive rounds; a round
+    # truncates and counts only its new facts, so the whole program
+    # stays within ~12 jobs a round (a round that also copied and
+    # probed the growing store took ~15, 188-193 in all)
+    g = T(spark, [("n%d" % i, "parent", "n%d" % (i + 1))
+                  for i in range(12)])
+    want = 12 * 13 // 2
+    for run in (kq.materialize_rules, kq.materialize_rules_stratified):
+        n, jobs = count_jobs(
+            lambda: run(g, ANC_PROG, derived_only=True).count())
+        assert n == want
+        assert jobs <= 155, (run.__name__, jobs)
 
 
 def test_rules_agree_with_closure(spark):
@@ -572,15 +591,17 @@ def test_rdfs_incremental_via_rules(spark, rdfs_graph):
 
 # --- materialize_rules_retract (DRed deletion maintenance) --------------------
 
-def _dred_check(spark, base_rows, del_rows, prog):
+def _dred_check(spark, base_rows, del_rows, prog, checkpoint_dir=None):
     """retract(asserted, derived, deleted) ∪ asserted must equal the
     from-scratch fixpoint over the post-delete base."""
     base = T(spark, base_rows)
     dele = T(spark, del_rows)
     kept = base.join(dele.select("subj", "pred", "obj"),
                      on=["subj", "pred", "obj"], how="left_anti")
-    drv = kq.materialize_rules(base, prog, derived_only=True)
-    new_drv = kq.materialize_rules_retract(kept, drv, dele, prog)
+    drv = kq.materialize_rules(base, prog, derived_only=True,
+                               checkpoint_dir=checkpoint_dir)
+    new_drv = kq.materialize_rules_retract(kept, drv, dele, prog,
+                                           checkpoint_dir=checkpoint_dir)
     got = spo_set(kept) | spo_set(new_drv)
     want = spo_set(kq.materialize_rules(kept, prog))
     assert got == want
@@ -589,17 +610,19 @@ def _dred_check(spark, base_rows, del_rows, prog):
     return spo_set(new_drv)
 
 
-def test_dred_chain_cut(spark):
+def test_dred_chain_cut(spark, tmp_path):
     # cutting the middle edge of a 6-node chain must drop exactly the
-    # cross-cut ancestor pairs
+    # cross-cut ancestor pairs, in both truncation modes
     edges = [("n%d" % i, "parent", "n%d" % (i + 1)) for i in range(5)]
-    new_drv = _dred_check(spark, edges, [edges[2]], ANC_PROG)
-    anc = {(s, o) for s, p, o in new_drv if p == "anc"}
     want = ({("n%d" % i, "n%d" % j) for i in range(3)
              for j in range(i + 1, 3)}
             | {("n%d" % i, "n%d" % j) for i in range(3, 6)
                for j in range(i + 1, 6)})
-    assert anc == want
+    for ckpt in (None, str(tmp_path / "ckpt")):
+        new_drv = _dred_check(spark, edges, [edges[2]], ANC_PROG,
+                              checkpoint_dir=ckpt)
+        anc = {(s, o) for s, p, o in new_drv if p == "anc"}
+        assert anc == want
 
 
 def test_dred_alternative_derivation_survives(spark):

@@ -568,14 +568,16 @@ def _brute_pairs(edges, max_hops, symmetric):
 
 
 @pytest.mark.parametrize("symmetric", [False, True])
-def test_property_path_matches_brute_bfs(spark, symmetric):
+def test_property_path_matches_brute_bfs(spark, symmetric, tmp_path):
     edges = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"),   # 4-cycle
              ("b", "e"), ("x", "y")]
     e = spark.createDataFrame(edges, "src string, dst string")
-    got = {(r.src, r.dst): r.hops
-           for r in kgquery.property_path(e, 3, symmetric=symmetric)
-           .collect()}
-    assert got == _brute_pairs(edges, 3, symmetric)
+    for ckpt in (None, str(tmp_path / "ckpt")):
+        got = {(r.src, r.dst): r.hops
+               for r in kgquery.property_path(e, 3, symmetric=symmetric,
+                                              checkpoint_dir=ckpt)
+               .collect()}
+        assert got == _brute_pairs(edges, 3, symmetric)
 
 
 def test_property_path_cycle_reaches_self(spark):

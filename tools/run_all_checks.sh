@@ -1,6 +1,7 @@
 #!/bin/bash
 # One-command reproduction of every round gate, in order:
-#   1. pytest suite (unit + golden + property + plan-audit + resume)
+#   1. pytest suite (unit + golden + property + plan-audit + resume),
+#      run as the ROADMAP tier-1 command
 #   2. the KG-construction benchmark's own tests (kgbench/)
 #   3. Spark-vs-DuckDB oracle parity at sf0.01 (the driver's gate)
 # Optional slow extras (pass --full): sf0.001 oracle parity and the
@@ -22,7 +23,11 @@ step() {
     fi
 }
 
-step "pytest" python -m pytest tests/ -q
+# the tier-1 command from ROADMAP.md: its time limit, and no .pytest_cache
+step "pytest" env SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" \
+    SPARK_LOCAL_DIRS=/tmp/spark-local timeout -k 10 2670 \
+    python -m pytest tests/ -q --continue-on-collection-errors \
+    -p no:cacheprovider
 step "kgbench tests" python3 -m pytest kgbench -q
 step "oracle parity (sf0.01)" python tools/check_oracles.py /root/testdata/sf0.01
 
