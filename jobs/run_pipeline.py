@@ -17,6 +17,12 @@ arrays ride through the Arrow stage onto the records' doc rows unchanged.
 omitted); a given corpus keeps its scan splits.  The triples table is
 written by ``sources.corpus.write_triples`` (partitioned by pred).
 
+Local usage: ``python jobs/run_pipeline.py --out <dir> --master 'local[4]'``.
+Run this way, ``session.get_spark`` launches the driver JVM itself and maps
+the class-data-sharing archive in ``~/.cache/legal_ner_spark`` (the first
+such run on a host records it as the JVM exits).  Under ``spark-submit``
+the driver JVM already runs, so ``get_spark`` leaves it untouched.
+
 The job is resumable: re-submitting with the same --out skips completed
 buckets via the lineage ledger (plans/ledger.py).  Model weights (production
 spaCy pipeline) ship via --archives and load lazily per executor; the

@@ -4,7 +4,7 @@ space."""
 
 import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from legal_ner_spark.core.docmodel import Doc, filter_spans, levenshtein
 from legal_ner_spark.core.preamble import (convert_upper_case_to_title,
@@ -100,8 +100,15 @@ def test_check_stat_total_and_deterministic(text):
 
 @settings(max_examples=100, deadline=None)
 @given(TEXT)
+@example(", 0")
 def test_norm_idempotent(text):
-    assert _norm(_norm(text)) == _norm(text)
+    # _norm is the reference's normalization byte for byte: it collapses
+    # whitespace before it drops commas, so it is not idempotent
+    # (_norm(", 0") == " 0").  What holds: no comma survives, and a second
+    # pass only collapses the whitespace a dropped comma left behind.
+    once = _norm(text)
+    assert "," not in once
+    assert _norm(once) == " ".join(once.split())
 
 
 @settings(max_examples=30, deadline=None)
