@@ -11,8 +11,9 @@ atomic snapshot in which
     rows, with no join and no recompute from the corpus (equivalence to
     full recompute is pinned by tests/test_incremental_kg.py);
   - the batch is EXTRACTED ONCE: its triple table is written first,
-    and the predicate counts and the degree delta are computed from
-    the written table, never by re-running extraction;
+    its predicate counts ride that write as observed metrics, and the
+    degree delta is computed from the written table, never by
+    re-running extraction;
   - every triple table carries its ``{pred: rows}`` counts in
     ``_pred_counts.json`` (`plans/publish.py`), so a reader of
     ``read_triples`` plans its joins without a count probe;
@@ -46,11 +47,12 @@ import argparse
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from legal_ner_spark.core.extract import PREDICATES  # noqa: E402
 from legal_ner_spark.operators import extract as ops  # noqa: E402
 from legal_ner_spark.plans import publish  # noqa: E402
 from legal_ner_spark.schema import TRIPLES_SCHEMA  # noqa: E402
@@ -111,10 +113,11 @@ def ingest_batch(spark: SparkSession, root: str, corpus: DataFrame,
     """Extract one batch and publish the next snapshot.  Returns the new
     manifest.
 
-    The extraction runs once, into the batch triple table; its
-    predicate counts (stored beside it) and the ``kg_degrees`` delta
-    are computed from the written table.  Write order: batch data →
-    counts → ``kg_degrees`` → manifest flip."""
+    The extraction runs once, into the batch triple table.  Its
+    predicate counts (stored beside it) are observed metrics of that
+    write, and the ``kg_degrees`` delta is computed from the written
+    table.  Write order: batch data → counts → ``kg_degrees`` →
+    manifest flip."""
     man = publish.current_manifest(root)
     prev_batches = sorted(
         t for t in (man["tables"] if man else {})
@@ -131,10 +134,21 @@ def ingest_batch(spark: SparkSession, root: str, corpus: DataFrame,
 
     bpath = os.path.join(root, bname, f"snap={snapshot_id}")
     publish.drop_pred_counts(bpath)
-    ops.triples(ops.extract_records(corpus)).write.mode(
-        "overwrite").parquet(bpath)
+    # the write has no shuffle, so the observation runs in its result
+    # stage, where Spark applies each task's update exactly once
+    obs = Observation()
+    ops.triples(ops.extract_records(corpus)).observe(
+        obs, F.count(F.lit(1)).alias("_rows"),
+        *[F.count_if(F.col("pred") == p).alias(p) for p in PREDICATES]
+    ).write.mode("overwrite").parquet(bpath)
+    counts = dict(obs.get)
+    n_rows = counts.pop("_rows")
+    counts = {p: n for p, n in counts.items() if n}
     tri = read_batches(spark, [bpath])
-    publish.write_pred_counts(bpath, publish.count_preds(tri))
+    if sum(counts.values()) != n_rows:
+        # a null or foreign predicate: count the written table
+        counts = publish.count_preds(tri)
+    publish.write_pred_counts(bpath, counts)
 
     rows = degree_rows(tri)
     if replay and carried:

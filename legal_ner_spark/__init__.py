@@ -24,6 +24,13 @@ synth.py     deterministic synthetic corpus generator (BASELINE.json input_hint
              shape); ``synthetic_corpus`` distributes it via mapInPandas,
              seeded per doc_id.  End-to-end KG construction is
              ``operators.extract.extract_records`` → ``triples``.
+zipcache.py  stat-gated zip importer cache invalidation (CPython < 3.12),
+             installed on import: Python workers stop re-reading their
+             zip archives at the start of every task.
 """
+
+from . import zipcache
+
+zipcache.install()
 
 __version__ = "0.1.0"

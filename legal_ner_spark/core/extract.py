@@ -27,6 +27,10 @@ ROLE_PREDICATES = {
     'LAWYER': 'has_lawyer',
 }
 
+# every predicate _emit can produce
+PREDICATES = ('cites_precedent', 'same_as', 'part_of', 'decided_by',
+              *ROLE_PREDICATES.values(), 'mentions')
+
 
 @dataclass
 class Mention:

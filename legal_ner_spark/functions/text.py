@@ -42,9 +42,10 @@ def statute_canon(col: Column) -> Column:
 
 def normalize_entity_text(col: Column) -> Column:
     """`' '.join(t.split()).lower().replace(',', '')`
-    (postprocessing_utils.py:224-226)."""
+    (postprocessing_utils.py:224-226).  Whitespace runs collapse to one
+    space before the trim, which strips spaces only."""
     return F.lower(F.regexp_replace(
-        F.regexp_replace(F.trim(col), r'\s+', ' '), ',', ''))
+        F.trim(F.regexp_replace(col, r'\s+', ' ')), ',', ''))
 
 
 def precedent_citation(col: Column) -> Column:

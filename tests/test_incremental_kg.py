@@ -205,17 +205,47 @@ def test_stored_counts_equal_probe_through_lifecycle(spark, tmp_path,
     check()
 
 
+def test_predicates_list_every_emitted_predicate():
+    """``PREDICATES`` (the ingest's observed counts) is exactly the set
+    of predicates extraction emits over a synthetic corpus."""
+    from legal_ner_spark.core.extract import PREDICATES, extract_document
+    seen = set()
+    for i in range(60):
+        d = synth.gen_doc(i)
+        r = extract_document(d["doc_id"], synth.assemble_text(d["spans"]))
+        seen.update(t[1] for t in r.triples)
+    assert seen == set(PREDICATES)
+
+
+def test_unobserved_predicate_falls_back_to_probe(spark, tmp_path, corpora,
+                                                  monkeypatch):
+    """When the observed counts miss rows (a predicate outside
+    ``PREDICATES``), the stored counts come from the count probe and stay
+    exact."""
+    import jobs.incremental_kg as ikg
+    monkeypatch.setattr(ikg, "PREDICATES",
+                        tuple(p for p in ikg.PREDICATES if p != "mentions"))
+    _, b1, _ = corpora
+    root = str(tmp_path / "kg")
+    ingest_batch(spark, root, b1, "day1")
+    (path,) = _batch_paths(root)
+    counts = publish.read_pred_counts(path)
+    assert counts["mentions"] > 0
+    assert counts == _probe(spark.read.parquet(path))
+
+
 def test_snapshot_reads_submit_no_job(spark, tmp_path, corpora, count_jobs):
     """read_triples is one pinned-schema relation (no schema-inference
     job per batch table) and its predicate counts come from the stored
-    files (no probe job).  An ingest onto a published snapshot folds
-    ``kg_degrees`` with one aggregate and no join: at most 5 jobs."""
+    files (no probe job).  An ingest onto a published snapshot observes
+    its predicate counts on the batch write and folds ``kg_degrees``
+    with one aggregate and no join: at most 3 jobs."""
     from legal_ner_spark.operators.kgquery import _pred_counts
     _, b1, b2 = corpora
     root = str(tmp_path / "kg")
     ingest_batch(spark, root, b1, "day1")
     _, n_ingest = count_jobs(lambda: ingest_batch(spark, root, b2, "day2"))
-    assert n_ingest <= 5
+    assert n_ingest <= 3
     tri, n_read = count_jobs(lambda: read_triples(spark, root))
     assert n_read == 0
     counts, n_counts = count_jobs(lambda: _pred_counts(tri))

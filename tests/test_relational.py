@@ -339,3 +339,17 @@ def test_containment_pairs_asymmetric(spark):
     j = dedup.ngram_jaccard_pairs(dedup.shingle_rows(docs),
                                   threshold=0.0).collect()
     assert j and j[0].jaccard < 0.8
+
+
+def test_normalize_entity_text_matches_core_norm(spark):
+    """The column form of the reference's text normalization equals the
+    core's ``_norm`` on every fixture, including tabs, newlines and
+    carriage returns at the ends."""
+    from legal_ner_spark.core.postprocess import _norm
+    from legal_ner_spark.functions.text import normalize_entity_text
+    from legal_ner_spark.queries import TEXT_FIXTURES
+    texts = TEXT_FIXTURES + ["\t\tA,  b\n", "\n", " \r x"]
+    got = dict(spark.createDataFrame([(t,) for t in texts], ["text"])
+               .select("text", normalize_entity_text(F.col("text")))
+               .collect())
+    assert got == {t: _norm(t) for t in texts}
