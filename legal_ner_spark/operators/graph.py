@@ -117,7 +117,7 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
     def step(frontier, seen, depth):
         return (sym.join(frontier.select(F.col("node").alias("f")),
                          sym.src == F.col("f"))
-                .select(F.col("dst").alias("node")).distinct()
+                .select(F.col("dst").alias("node"))
                 .withColumn("distance", F.lit(depth)))
 
     return delta_fixpoint(
@@ -140,8 +140,8 @@ def landmark_distances(edges: DataFrame, landmarks: DataFrame, *,
     technique.
 
     Same frontier shape as `bfs_distances`, keyed by (root, node):
-    each round joins the frontier against the edges once, distincts the
-    (root, dst) pairs, anti-joins the visited set — work
+    each round joins the frontier against the edges once, and the loop
+    distincts the (root, dst) pairs and anti-joins the visited set — work
     O(frontier × avg degree) per round, only the frontier truncated
     (`delta_fixpoint`; durable under ``checkpoint_dir``)."""
     from ..plans.checkpoint import Truncator, delta_fixpoint
@@ -155,7 +155,7 @@ def landmark_distances(edges: DataFrame, landmarks: DataFrame, *,
     def step(frontier, seen, depth):
         return (frontier.select("root", F.col("node").alias("src"))
                 .join(e, "src")
-                .select("root", F.col("dst").alias("node")).distinct()
+                .select("root", F.col("dst").alias("node"))
                 .withColumn("distance", F.lit(depth)))
 
     return delta_fixpoint(

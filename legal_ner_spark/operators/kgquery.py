@@ -849,7 +849,7 @@ def property_path(edges: DataFrame, max_hops: int, *, min_hops: int = 1,
 
     def step(frontier, seen, k):
         return (frontier.join(nxt, frontier.dst == F.col("m"))
-                .select("src", F.col("ndst").alias("dst")).distinct()
+                .select("src", F.col("ndst").alias("dst"))
                 .withColumn("hops", F.lit(k)))
 
     reach = delta_fixpoint(e.withColumn("hops", F.lit(1)), step,
@@ -870,11 +870,11 @@ def bgp_match_delta(full: DataFrame, delta: DataFrame, patterns, *,
     A new binding must use ≥1 delta triple, so the result is the union
     over pattern positions i of the match with pattern i pinned to the
     delta and every other pattern reading the full store (the delta
-    pattern sorts first in each leg's join order and broadcasts).  With
-    set semantics the legs may re-derive the same binding through two
-    delta atoms — the final DISTINCT absorbs it, and callers anti-join
-    against their stored bindings anyway (double-derivation is why this
-    needs no pre/post split).
+    pattern sorts first in each leg's join order and broadcasts).  Two
+    legs re-derive a binding that uses two delta atoms; one DISTINCT
+    over the legs' union absorbs it (double-derivation is why this needs
+    no pre/post split).  The rule loops take the legs' bag
+    (`_delta_legs`) and leave that DISTINCT to `delta_fixpoint`.
 
     Cost model, stated precisely: each leg's accumulating binding side
     stays delta-sized and is broadcast, so the store's pattern
@@ -912,13 +912,18 @@ def bgp_match_delta(full: DataFrame, delta: DataFrame, patterns, *,
                 "queries per batch instead")
     if pred_stats is None:
         pred_stats = _pred_counts(full)
-    out = None
-    for i in range(len(pats)):
-        srcs = [delta if j == i else None for j in range(len(pats))]
-        leg = bgp_match(full, pats, values=values, filters=filters,
-                        pred_stats=pred_stats, sources=srcs, **bgp_kwargs)
-        out = leg if out is None else out.unionByName(leg)
-    return out.distinct()
+    return _delta_legs(full, delta, pats, values=values, filters=filters,
+                       pred_stats=pred_stats, **bgp_kwargs).distinct()
+
+
+def _delta_legs(full, delta, pats, **kw) -> DataFrame:
+    """`bgp_match_delta`'s pinned legs, unioned as a bag: a binding
+    comes once per leg that derives it."""
+    n = len(pats)
+    return reduce(DataFrame.unionByName, [
+        bgp_match(full, pats, sources=[delta if j == i else None
+                                       for j in range(n)],
+                  distinct=False, **kw) for i in range(n)])
 
 
 def _step_edges(triples: DataFrame, step: str) -> DataFrame:
@@ -1249,7 +1254,7 @@ def construct(triples: DataFrame, body, head, *, values: dict | None = None,
     projections, so a k-template rule costs one match, not k."""
     b = bgp_match(triples, body, optional=optional, minus=minus,
                   values=values, **bgp_kwargs)
-    return _instantiate_templates(b, _norm_templates(head))
+    return _instantiate_templates(b, _norm_templates(head)).distinct()
 
 
 def _norm_templates(tpls, kind: str = "head"):
@@ -1268,7 +1273,8 @@ def _instantiate_templates(b: DataFrame, heads) -> DataFrame:
     table (shared by `construct` and `update_graph`): variables project
     the binding column, literals become constants; all templates share
     the ONE binding match — a union of constant-width projections over
-    the same join tree, so k templates cost one match, not k."""
+    the same join tree, so k templates cost one match, not k.  The
+    result is a bag: callers that need a set apply the DISTINCT."""
     bound = set(b.columns)
     out = None
     for h in heads:
@@ -1291,7 +1297,7 @@ def _instantiate_templates(b: DataFrame, heads) -> DataFrame:
         t = t.filter(F.col("subj").isNotNull() & F.col("pred").isNotNull()
                      & F.col("obj").isNotNull())
         out = t if out is None else out.unionByName(t)
-    return out.distinct()
+    return out
 
 
 def closure(triples: DataFrame, pred: str, *, symmetric: bool = False,
@@ -1884,8 +1890,7 @@ def owl_extend(triples: DataFrame, *, type_pred: str = "type",
         def step(frontier, seen, k):
             return (frontier.join(nxt, (frontier.dst == F.col("m"))
                                   & (frontier.pred == F.col("p2")))
-                    .select("pred", "src", F.col("ndst").alias("dst"))
-                    .distinct())
+                    .select("pred", "src", F.col("ndst").alias("dst")))
 
         reach = delta_fixpoint(e, step, ["pred", "src", "dst"],
                                range(2, max_hops + 1), trunc,
@@ -2139,8 +2144,9 @@ def materialize_rules(triples: DataFrame, rules, *, max_rounds: int = 16,
 
     Scale shape: per round, each k-pattern rule costs the delta
     matcher's k pinned legs (delta side broadcast, store side scanned
-    pred-pushed, shuffle O(|new facts|)); each round truncates only its
-    new facts (`delta_fixpoint`, durable under ``checkpoint_dir``).
+    pred-pushed, shuffle O(|new facts|)); the legs and rules union as a
+    bag that meets one DISTINCT, and each round truncates only its new
+    facts (`delta_fixpoint`, durable under ``checkpoint_dir``).
     Predicate stats are probed once, over the asserted store, and kept
     current by adding each round's ≤|preds|-row count of its new facts
     — the same aggregate that tells the loop it has reached fixpoint.
@@ -2152,12 +2158,8 @@ def materialize_rules(triples: DataFrame, rules, *, max_rounds: int = 16,
     full = _null_doc(known3)
     stats = _pred_counts(full)
 
-    new = (_rule_heads(compiled,
-                       lambda body, v, f:
-                       bgp_match(full, body, values=v, filters=f,
-                                 pred_stats=stats))
-           .join(known3, on=_SPO, how="left_anti"))
-    new = trunc(new, "rules_d0")
+    new = trunc(_rule_heads(compiled, full, stats).distinct()
+                .join(known3, on=_SPO, how="left_anti"), "rules_d0")
     derived = _rules_seminaive(compiled, known3, new, trunc, max_rounds,
                                stats)
 
@@ -2197,14 +2199,15 @@ def _compile_rules(rules):
     return compiled
 
 
-def _rule_heads(compiled, match_fn, store=None, stats=None):
-    """Distinct union of every rule's instantiated heads under one
-    matcher, ``match_fn(body, values, filters)``.  ``compiled`` holds
-    monotone rules (`_compile_rules`) or stratified ones
-    (`_compile_rules_neg`).  A stratified rule's MINUS patterns are
-    applied over ``store`` through `_apply_minus`; an aggregate rule is
-    always one whole evaluation over ``store`` (`_eval_rule_once`).
-    ``stats`` is ``store``'s ``{pred: rows}``."""
+def _rule_heads(compiled, store, stats=None, delta=None):
+    """Union (a bag) of every rule's instantiated heads, each body
+    matched over ``store`` by `bgp_match`, or, given ``delta``, by the
+    pinned legs of `_delta_legs`.  ``compiled`` holds monotone rules
+    (`_compile_rules`) or stratified ones (`_compile_rules_neg`).  A
+    stratified rule's MINUS patterns are applied over ``store`` through
+    `_apply_minus`; an aggregate rule is always one whole evaluation
+    over ``store`` (`_eval_rule_once`).  ``stats`` is ``store``'s
+    ``{pred: rows}``."""
     out = []
     for r in compiled:
         body, heads, mpats, values, filters, aggspec = \
@@ -2213,12 +2216,14 @@ def _rule_heads(compiled, match_fn, store=None, stats=None):
             b = _eval_rule_once(store, body, mpats, values, filters,
                                 aggspec, stats)
         else:
-            b = match_fn(body, values, filters)
+            kw = dict(values=values, filters=filters, pred_stats=stats)
+            b = bgp_match(store, body, distinct=False, **kw) \
+                if delta is None else _delta_legs(store, delta, body, **kw)
             if mpats:
                 b = _apply_minus(b, store, mpats, stats)
         out.append(_instantiate_templates(b, heads)
                    .select(*_SPO))
-    return reduce(DataFrame.unionByName, out).distinct()
+    return reduce(DataFrame.unionByName, out)
 
 
 def _rules_seminaive(compiled, known3, new, trunc, max_rounds, stats,
@@ -2236,13 +2241,8 @@ def _rules_seminaive(compiled, known3, new, trunc, max_rounds, stats,
         return bool(counts)
 
     def step(delta, seen, k):
-        full = _null_doc(seen)
-        d4 = _null_doc(delta)
-        return _rule_heads(compiled,
-                           lambda body, v, f:
-                           bgp_match_delta(full, d4, body, values=v,
-                                           filters=f, pred_stats=stats),
-                           full, stats)
+        return _rule_heads(compiled, _null_doc(seen), stats,
+                           _null_doc(delta))
 
     return delta_fixpoint(new, step, _SPO,
                           range(1, max_rounds + 1), trunc, known=known3,
@@ -2282,12 +2282,8 @@ def materialize_rules_delta(full: DataFrame, delta: DataFrame, rules, *,
     full4 = _null_doc(known3)
     delta4 = _null_doc(delta.select(*_SPO).distinct())
     stats = _pred_counts(full4)
-    new = (_rule_heads(compiled,
-                       lambda body, v, f:
-                       bgp_match_delta(full4, delta4, body, values=v,
-                                       filters=f, pred_stats=stats))
-           .join(known3, on=_SPO, how="left_anti"))
-    new = trunc(new, "rulesd_d0")
+    new = trunc(_rule_heads(compiled, full4, stats, delta4).distinct()
+                .join(known3, on=_SPO, how="left_anti"), "rulesd_d0")
     derived = _rules_seminaive(compiled, known3, new, trunc, max_rounds,
                                stats)
     return _null_doc(derived)
@@ -2345,11 +2341,7 @@ def materialize_rules_retract(asserted: DataFrame, derived: DataFrame,
     # phase 1: over-delete — only derived, no-longer-asserted heads
     # can leave
     def endanger(d, seen, k):
-        d4 = _null_doc(d)
-        return (_rule_heads(compiled,
-                            lambda body, v, f:
-                            bgp_match_delta(old_full4, d4, body, values=v,
-                                            filters=f, pred_stats=stats))
+        return (_rule_heads(compiled, old_full4, stats, _null_doc(d))
                 .join(drv3, on=_SPO, how="left_semi")
                 .join(a3, on=_SPO, how="left_anti"))
 
@@ -2368,18 +2360,16 @@ def materialize_rules_retract(asserted: DataFrame, derived: DataFrame,
     else:
         surv4 = _null_doc(survivors3)
         sstats = _pred_counts(surv4)
-        redo = (_rule_heads(compiled,
-                            lambda body, v, f:
-                            bgp_match(surv4, body, values=v, filters=f,
-                                      pred_stats=sstats))
-                .join(endangered, on=_SPO, how="left_semi"))
-        redo = trunc(redo, "dred_redo0")
+        redo = trunc(_rule_heads(compiled, surv4, sstats).distinct()
+                     .join(endangered, on=_SPO, how="left_semi"),
+                     "dred_redo0")
         recovered = _rules_seminaive(compiled, survivors3, redo, trunc,
                                      max_rounds, sstats)
 
+    # both parts are sets, and disjoint: recovered facts were endangered
     out = kept_derived if recovered is None \
         else kept_derived.unionByName(recovered)
-    return _null_doc(out.join(a3, on=_SPO, how="left_anti").distinct())
+    return _null_doc(out.join(a3, on=_SPO, how="left_anti"))
 
 
 def update_graph_maintain(asserted: DataFrame, derived: DataFrame,
@@ -2726,10 +2716,7 @@ def materialize_rules_stratified(triples: DataFrame, rules, *,
         if not sub:
             continue
         full = _null_doc(known3)
-        new = (_rule_heads(sub,
-                           lambda body, v, f:
-                           bgp_match(full, body, values=v, filters=f,
-                                     pred_stats=stats), full, stats)
+        new = (_rule_heads(sub, full, stats).distinct()
                .join(known3, on=_SPO, how="left_anti"))
         new = trunc(new, f"strat{lv}_d0")
         # aggregate rules are complete after round 0: every input is
@@ -2867,16 +2854,14 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
         # losing a positive atom or GAINING a negated one
         cand = []
         if has_del and sub_na:
-            cand.append(_rule_heads(
-                sub_na, lambda body, v, f: bgp_match_delta(
-                    f_old4, dd4, body, values=v, filters=f,
-                    pred_stats=so), f_old4, so))
+            cand.append(_rule_heads(sub_na, f_old4, so, dd4))
         for body, heads, mpats, v, f, _ in sub_na:
             if mpats and has_ins:
                 for i, m in enumerate(mpats):
                     b = bgp_match(f_old4, list(body) + [pin_pattern(
                         m, body)], values=v, filters=f, pred_stats=so,
-                                  sources=[None] * len(body) + [di4])
+                                  sources=[None] * len(body) + [di4],
+                                  distinct=False)
                     rest = [x for j, x in enumerate(mpats) if j != i]
                     if rest:
                         b = _apply_minus(b, f_old4, rest, so)
@@ -2884,7 +2869,7 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
                                 .select(*_SPO))
         e = d_del.filter(F.col("pred").isin(head_preds))
         if cand:
-            e = e.unionByName(reduce(DataFrame.unionByName, cand).distinct()
+            e = e.unionByName(reduce(DataFrame.unionByName, cand)
                               .join(p_old_na, on=_SPO, how="left_semi"))
         e = trunc(e.distinct(), f"sm{lv}_e0")
 
@@ -2893,11 +2878,8 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
         pos_rules = [(b_, h_, v_, f_) for b_, h_, _, v_, f_, _ in sub_na]
 
         def endanger(d, seen, k):
-            d4 = _null_doc(d)
-            return _rule_heads(
-                pos_rules, lambda body, v, f: bgp_match_delta(
-                    f_old4, d4, body, values=v, filters=f, pred_stats=so)
-            ).join(p_old_na, on=_SPO, how="left_semi")
+            return _rule_heads(pos_rules, f_old4, so, _null_doc(d)).join(
+                p_old_na, on=_SPO, how="left_semi")
 
         if sub_na:
             e = delta_fixpoint(e, endanger, _SPO, range(1, max_rounds + 1),
@@ -2915,20 +2897,17 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
         # ---- (re)derivation seeds over the NEW store
         seeds = []
         if has_e:
-            seeds.append(_rule_heads(sub_na, lambda body, v, f: bgp_match(
-                f_surv4, body, values=v, filters=f, pred_stats=sn),
-                f_surv4, sn).join(e, on=_SPO, how="left_semi"))
+            seeds.append(_rule_heads(sub_na, f_surv4, sn)
+                         .join(e, on=_SPO, how="left_semi"))
         if has_ins and sub_na:
-            seeds.append(_rule_heads(
-                sub_na, lambda body, v, f: bgp_match_delta(
-                    f_surv4, di4, body, values=v, filters=f,
-                    pred_stats=sn), f_surv4, sn))
+            seeds.append(_rule_heads(sub_na, f_surv4, sn, di4))
         for body, heads, mpats, v, f, _ in sub_na:
             if mpats and has_del:
                 for i, m in enumerate(mpats):
                     b = bgp_match(f_surv4, list(body) + [pin_pattern(
                         m, body)], values=v, filters=f, pred_stats=sn,
-                                  sources=[None] * len(body) + [dd4])
+                                  sources=[None] * len(body) + [dd4],
+                                  distinct=False)
                     b = _apply_minus(b, f_surv4, mpats, sn)
                     seeds.append(_instantiate_templates(b, heads)
                                  .select(*_SPO))
@@ -2949,7 +2928,7 @@ def materialize_rules_stratified_maintain(asserted: DataFrame,
         # for min/max deletes and not worth the split for the rest
         new_ag = None
         if sub_ag:
-            new_ag = trunc(_rule_heads(sub_ag, None, _null_doc(v_new))
+            new_ag = trunc(_rule_heads(sub_ag, _null_doc(v_new)).distinct()
                            .join(v_new, on=_SPO, how="left_anti"),
                            f"sm{lv}_ag")
 
