@@ -36,9 +36,11 @@ Local usage: ``python jobs/incremental_kg.py --corpus … --root …
 --snapshot-id …`` (``--master`` defaults to ``local[*]``).  Run this way,
 ``session.get_spark`` launches the driver JVM itself and maps the
 class-data-sharing archive in ``~/.cache/legal_ner_spark`` (the first such
-run on a host records it as the JVM exits), which cuts the fixed start-up
-cost that sits beside each batch.  Under ``spark-submit`` the driver JVM
-already runs, so ``get_spark`` leaves it untouched.
+run on a host records it as the JVM exits) and starts the Python workers
+from compiled pyspark bytecode kept there, which cuts the fixed start-up
+cost that sits beside each batch; it also puts the repo on the workers'
+``PYTHONPATH``, so the job runs from any directory.  Under ``spark-submit``
+the driver JVM already runs, so ``get_spark`` leaves it untouched.
 """
 
 from __future__ import annotations

@@ -18,9 +18,12 @@ omitted); a given corpus keeps its scan splits.  The triples table is
 written by ``sources.corpus.write_triples`` (partitioned by pred).
 
 Local usage: ``python jobs/run_pipeline.py --out <dir> --master 'local[4]'``.
-Run this way, ``session.get_spark`` launches the driver JVM itself and maps
+Run this way, ``session.get_spark`` launches the driver JVM itself: it maps
 the class-data-sharing archive in ``~/.cache/legal_ner_spark`` (the first
-such run on a host records it as the JVM exits).  Under ``spark-submit``
+such run on a host records it as the JVM exits), starts the Python workers
+from compiled pyspark bytecode kept there, and puts the repo on the
+workers' ``PYTHONPATH``, so the job runs from any directory.  Under
+``spark-submit``
 the driver JVM already runs, so ``get_spark`` leaves it untouched.
 
 The job is resumable: re-submitting with the same --out skips completed
@@ -56,13 +59,7 @@ def main() -> None:
     from legal_ner_spark.operators import extract as ops
     from legal_ner_spark.sources import corpus as src
 
-    # local-mode robustness when launched from outside the repo root: the
-    # driver's sys.path insert does not reach Python WORKERS — point them
-    # at the repo explicitly.  Cluster deployments ship the package via
-    # --py-files instead (Spark distributes and pathes it per executor).
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spark = get_spark(app_name="legal-ner-kg", master=args.master,
-                      extra_conf={"spark.executorEnv.PYTHONPATH": repo_root})
+    spark = get_spark(app_name="legal-ner-kg", master=args.master)
     cores = spark.sparkContext.defaultParallelism
     if args.corpus:
         # no repartition here: the ledger extracts on the scan's own

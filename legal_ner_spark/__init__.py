@@ -27,6 +27,10 @@ synth.py     deterministic synthetic corpus generator (BASELINE.json input_hint
 zipcache.py  stat-gated zip importer cache invalidation (CPython < 3.12),
              installed on import: Python workers stop re-reading their
              zip archives at the start of every task.
+daemon.py    Python worker daemon for local sessions: swaps Spark's
+             python/lib zips for a compiled cache directory, then runs
+             pyspark.daemon.  This package imports nothing but zipcache,
+             so pyspark is never imported before the swap.
 """
 
 from . import zipcache

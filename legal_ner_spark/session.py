@@ -35,6 +35,22 @@ when the master is not ``local*``; when a driver JVM already runs (under
 than 13 or its ``release`` file cannot be read; when the caller's JVM options
 already name ``-Xshare``, ``SharedArchiveFile`` or ``ArchiveClassesAtExit``;
 or when the cache is not writable.
+
+The Python half of a cold start is the worker daemons: Spark puts
+``$SPARK_HOME/python/lib/pyspark.zip`` (no ``.pyc``) first on each worker's
+path, so every daemon and every forked worker compiled pyspark from source.
+When ``get_spark`` launches a local driver JVM itself and the cache is
+writable, it sets ``spark.python.daemon.module`` to
+``legal_ner_spark.daemon``, which swaps those zips for a directory compiled
+once, ``$XDG_CACHE_HOME/legal_ner_spark/py-<key>`` (~42 MB; ``<key>`` hashes
+the zips and the interpreter's cache tag, and the directories of other keys
+are deleted).  A missing directory is built in a thread while the JVM
+launches (~2.6 s once); a daemon that finds it incomplete keeps the zips.
+Under a non-local master, an existing gateway or a caller's own
+``spark.python.daemon.module``, the stock ``pyspark.daemon`` runs.  For any
+``local*`` master, the directory holding this package is appended to the
+caller's ``spark.executorEnv.PYTHONPATH``, so workers import the engine
+(and the daemon module) whatever the working directory.
 """
 
 from __future__ import annotations
@@ -44,8 +60,11 @@ import hashlib
 import os
 import shutil
 import sys
+import threading
 
 from pyspark.sql import SparkSession
+
+from . import daemon
 
 # First four bytes of a complete JDK dynamic archive.  The JVM writes the
 # header last, so a dump cut short lacks them; mapping an archive whose body
@@ -55,6 +74,8 @@ _CDS_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit")
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                   "SPARK_CLASSPATH", "SPARK_PREPEND_CLASSES")
 _JAVA_OPTIONS_ENV = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
+# the directory holding the ``legal_ner_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "legal-ner-spark", master: str | None = None,
@@ -93,20 +114,67 @@ def get_spark(app_name: str = "legal-ner-spark", master: str | None = None,
     extra_conf = extra_conf or {}
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
+    if (master or "").startswith("local"):
+        caller = extra_conf.get("spark.executorEnv.PYTHONPATH")
+        if _PACKAGE_ROOT not in str(caller or "").split(os.pathsep):
+            builder = builder.config(
+                "spark.executorEnv.PYTHONPATH",
+                f"{caller}{os.pathsep}{_PACKAGE_ROOT}" if caller
+                else _PACKAGE_ROOT)
+    build = _bytecode_build(master, extra_conf)
+    if build is not None:
+        builder = builder.config("spark.python.daemon.module",
+                                 "legal_ner_spark.daemon")
     cds = _class_archive(master, extra_conf)
-    if cds is None:
-        return builder.getOrCreate()
-    java_options, conf_dir = cds
-    builder = builder.config("spark.driver.extraJavaOptions", java_options)
     saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = conf_dir
     try:
+        if cds is None:
+            return builder.getOrCreate()
+        java_options, conf_dir = cds
+        builder = builder.config("spark.driver.extraJavaOptions",
+                                 java_options)
+        os.environ["SPARK_CONF_DIR"] = conf_dir
         return builder.getOrCreate()
     finally:
+        if build is not None:
+            build.join()
         if saved is None:
             os.environ.pop("SPARK_CONF_DIR", None)
         else:
             os.environ["SPARK_CONF_DIR"] = saved
+
+
+def _launches_jvm(master: str | None) -> bool:
+    """Whether ``getOrCreate`` will launch a local driver JVM itself."""
+    from pyspark import SparkContext
+    return ((master or "").startswith("local")
+            and "PYSPARK_GATEWAY_PORT" not in os.environ
+            and SparkContext._gateway is None
+            and SparkContext._active_spark_context is None)
+
+
+def _bytecode_build(master: str | None, conf: dict
+                    ) -> threading.Thread | None:
+    """A started thread building the compiled pyspark directory that
+    ``legal_ner_spark.daemon`` swaps in, or None when the stock daemon is
+    kept (see the module docstring).  The build overlaps the JVM launch;
+    a worker daemon started before it completes keeps the zips."""
+    if not _launches_jvm(master) or "spark.python.daemon.module" in conf:
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+    cache = daemon.cache_dir()
+    lib = os.path.join(_find_spark_home(), "python", "lib")
+    try:
+        os.makedirs(cache, exist_ok=True)
+    except OSError:
+        return None
+    if (not os.access(cache, os.W_OK)
+            or daemon.compiled_dir(lib, cache) is None):
+        return None
+    build = threading.Thread(target=daemon.build, args=(lib, cache),
+                             name="pyspark-bytecode")
+    build.start()
+    return build
 
 
 def _class_archive(master: str | None, conf: dict
@@ -114,16 +182,12 @@ def _class_archive(master: str | None, conf: dict
     """The driver JVM options (the caller's ``spark.driver.extraJavaOptions``
     plus the archive flags) and the empty conf dir to launch with, or None
     when the archive does not apply (see the module docstring)."""
-    from pyspark import SparkContext
     from pyspark.find_spark_home import _find_spark_home
     caller = str(conf.get("spark.driver.extraJavaOptions", "")).strip()
     named = " ".join([caller, str(conf.get("spark.driver.defaultJavaOptions",
                                            ""))]
                      + [os.environ.get(k, "") for k in _JAVA_OPTIONS_ENV])
-    if (not (master or "").startswith("local")
-            or "PYSPARK_GATEWAY_PORT" in os.environ
-            or SparkContext._gateway is not None
-            or SparkContext._active_spark_context is not None
+    if (not _launches_jvm(master)
             or any(os.environ.get(k) for k in _CLASSPATH_ENV)
             or conf.get("spark.driver.extraClassPath")
             or os.environ.get("PYSPARK_SUBMIT_ARGS",
@@ -137,8 +201,7 @@ def _class_archive(master: str | None, conf: dict
         if java is None:
             return None
         jdk = os.path.dirname(os.path.dirname(os.path.realpath(java)))
-    cache = os.path.join(os.environ.get("XDG_CACHE_HOME")
-                         or os.path.expanduser("~/.cache"), "legal_ner_spark")
+    cache = daemon.cache_dir()
     conf_dir = os.path.join(cache, "conf")
     key = hashlib.sha256()
     try:

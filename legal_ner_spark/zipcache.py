@@ -15,6 +15,13 @@ no stamp yet reads once.  An archive rewritten on disk is still
 re-read.  Every engine UDF pickles a ``legal_ner_spark`` function by
 reference, so a worker installs this the first time it runs an engine
 task, and later tasks on the reused worker skip the re-reads.
+
+A local session that ``session.get_spark`` launches runs its workers under
+``legal_ner_spark.daemon``, which imports this package (and so installs
+this) before it forks any worker and swaps the pyspark and py4j zips for
+compiled directories: only the spark-core jar stays a zip on such a
+worker's path.  Cluster workers start under the stock ``pyspark.daemon``
+with every zip on their path, and still need this.
 """
 
 from __future__ import annotations

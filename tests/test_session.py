@@ -1,18 +1,24 @@
 """``session.get_spark``'s class-data-sharing archive: which flags it adds,
-when it adds none, and the two JDK behaviours its checks rest on.  The unit
-tests patch ``getOrCreate`` and start no Spark session."""
+when it adds none, and the two JDK behaviours its checks rest on; its
+compiled-pyspark worker daemon (``legal_ner_spark.daemon``): when it is
+named, how its cache directory is keyed, built and swapped in, and that the
+fixture session's workers import pyspark from it.  The unit tests patch
+``getOrCreate`` and start no Spark session."""
 
 import glob
 import os
 import shutil
 import subprocess
 import sys
+import zipfile
 
 import pytest
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-from legal_ner_spark import session
+from legal_ner_spark import daemon, session, synth
+from legal_ner_spark.core.extract import extract_document
+from legal_ner_spark.operators import extract as ops
 from legal_ner_spark.session import _CDS_MAGIC, _class_archive, get_spark
 
 CDS = ("SharedArchiveFile", "ArchiveClassesAtExit")
@@ -50,13 +56,15 @@ def env(monkeypatch, tmp_path):
 
 @pytest.fixture()
 def launches(monkeypatch):
-    """Replace ``getOrCreate``: each call records the driver JVM options and
-    the ``SPARK_CONF_DIR`` it would launch with."""
+    """Replace ``getOrCreate``: each call records the driver JVM options,
+    the ``SPARK_CONF_DIR`` it would launch with and all the builder's
+    options."""
     seen = []
 
     def fake(builder):
         seen.append((builder._options.get("spark.driver.extraJavaOptions"),
-                     os.environ.get("SPARK_CONF_DIR")))
+                     os.environ.get("SPARK_CONF_DIR"),
+                     dict(builder._options)))
         return "session"
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", fake)
     return seen
@@ -160,7 +168,7 @@ def test_gate_adds_no_flag_and_keeps_conf_dir(env, monkeypatch, launches,
     before = os.environ.get("SPARK_CONF_DIR")
     assert _class_archive(master, conf) is None
     assert get_spark(master=master, extra_conf=conf) == "session"
-    opts, conf_dir = launches[-1]
+    opts, conf_dir, _ = launches[-1]
     assert opts == conf.get("spark.driver.extraJavaOptions")
     assert conf_dir == before == os.environ.get("SPARK_CONF_DIR")
 
@@ -175,7 +183,7 @@ def test_conf_dir_swapped_for_the_launch_only(env, monkeypatch, launches,
     before = os.environ.get("SPARK_CONF_DIR")
     get_spark(master="local[2]",
               extra_conf={"spark.driver.extraJavaOptions": "-Da=1"})
-    opts, conf_dir = launches[-1]
+    opts, conf_dir, _ = launches[-1]
     assert opts.startswith("-Da=1 -XX:ArchiveClassesAtExit=")
     assert conf_dir == str(env / "cache" / "legal_ner_spark" / "conf")
     assert os.environ.get("SPARK_CONF_DIR") == before
@@ -234,3 +242,151 @@ def test_fixture_session_names_one_archive_flag(spark):
     assert conf.get("spark.sql.codegen.cache.maxEntries") == "5000"
     opts = conf.get("spark.driver.extraJavaOptions")
     assert sum(f"-XX:{name}=" in opts for name in CDS) == 1
+
+
+# ---------------------------------------------------------- worker daemon
+
+DAEMON = "spark.python.daemon.module"
+WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _spark_lib(env):
+    """Give the fake Spark home a ``python/lib`` with two small zips."""
+    lib = env / "spark" / "python" / "lib"
+    lib.mkdir(parents=True, exist_ok=True)
+    for name, pkg in [("pyspark.zip", "fakespark"),
+                      ("py4j-0.1-src.zip", "fakepy4j")]:
+        with zipfile.ZipFile(lib / name, "w") as zf:
+            zf.writestr(f"{pkg}/__init__.py", "X = 1\n")
+            zf.writestr(f"{pkg}/sub.py", "Y = 2\n")
+    return lib
+
+
+def _cache(env):
+    return str(env / "cache" / "legal_ner_spark")
+
+
+def test_local_launch_builds_and_names_the_daemon(env, launches):
+    lib = _spark_lib(env)
+    get_spark(master="local[2]")
+    options = launches[-1][2]
+    assert options[DAEMON] == "legal_ner_spark.daemon"
+    assert options[WORKER_PATH] == session._PACKAGE_ROOT
+    target, zips = daemon.compiled_dir(str(lib), _cache(env))
+    assert daemon.complete(target)
+    assert [os.path.basename(z) for z in zips] == ["py4j-0.1-src.zip",
+                                                   "pyspark.zip"]
+    tree = os.path.join(target, "pyspark", "fakespark")
+    assert sorted(os.listdir(tree)) == ["__init__.py", "__pycache__",
+                                        "sub.py"]
+    pyc = f"*.{sys.implementation.cache_tag}.pyc"
+    assert len(glob.glob(os.path.join(tree, "__pycache__", pyc))) == 2
+
+
+DAEMON_GATES = {
+    "cluster_master": lambda mp, t: "yarn",
+    "gateway_port": lambda mp, t: mp.setenv("PYSPARK_GATEWAY_PORT", "1"),
+    "gateway_running": lambda mp, t: mp.setattr(
+        SparkContext, "_gateway", object()),
+    "cache_unwritable": lambda mp, t: (
+        (t / "file").write_text("x"),
+        mp.setenv("XDG_CACHE_HOME", str(t / "file"))),
+    "caller_daemon": lambda mp, t: {DAEMON: "my.daemon"},
+}
+
+
+@pytest.mark.parametrize("gate", sorted(DAEMON_GATES))
+def test_gate_keeps_the_stock_daemon(env, monkeypatch, launches, gate):
+    _spark_lib(env)
+    out = DAEMON_GATES[gate](monkeypatch, env)
+    master = out if isinstance(out, str) else "local[2]"
+    conf = out if isinstance(out, dict) else {}
+    get_spark(master=master, extra_conf=conf)
+    assert launches[-1][2].get(DAEMON) == conf.get(DAEMON)
+    assert glob.glob(os.path.join(_cache(env), "py-*")) == []
+
+
+@pytest.mark.parametrize("master, caller, expected", [
+    ("local[2]", ["/a", "/b"], ["/a", "/b", "ROOT"]),
+    ("local[2]", ["ROOT", "/b"], ["ROOT", "/b"]),
+    ("local[2]", None, ["ROOT"]),
+    ("yarn", ["/a"], ["/a"]),
+    ("yarn", None, None),
+])
+def test_worker_pythonpath_keeps_the_caller_entries(env, launches, master,
+                                                    caller, expected):
+    def join(entries):
+        return os.pathsep.join(session._PACKAGE_ROOT if e == "ROOT" else e
+                               for e in entries)
+    conf = {} if caller is None else {WORKER_PATH: join(caller)}
+    get_spark(master=master, extra_conf=conf)
+    got = launches[-1][2].get(WORKER_PATH)
+    assert got == (None if expected is None else join(expected))
+
+
+def test_only_a_complete_directory_is_swapped_in(env):
+    lib = _spark_lib(env)
+    cache = _cache(env)
+    target, zips = daemon.compiled_dir(str(lib), cache)
+    # the trees without the completion marker, as a build cut short
+    for z in zips:
+        with zipfile.ZipFile(z) as zf:
+            zf.extractall(os.path.join(target, os.path.basename(z)[:-4]))
+    stock = ["/cwd", str(lib / "pyspark.zip"), str(lib / "py4j-0.1-src.zip"),
+             "/jar.jar"]
+    path = list(stock)
+    assert daemon.swap(path, cache) is None
+    assert path == stock
+
+    importers = [stock[1], os.path.join(stock[1], "fakespark", "")]
+    for k in importers:
+        sys.path_importer_cache[k] = None
+    try:
+        assert daemon.build(str(lib), cache) == target
+        assert daemon.swap(path, cache) == target
+        assert path == ["/cwd", os.path.join(target, "pyspark"),
+                        os.path.join(target, "py4j-0.1-src"), "/jar.jar"]
+        assert not any(k in sys.path_importer_cache for k in importers)
+    finally:
+        for k in importers:
+            sys.path_importer_cache.pop(k, None)
+
+
+def test_changed_zip_or_interpreter_gets_a_new_key(env, monkeypatch):
+    lib = _spark_lib(env)
+    cache = _cache(env)
+    old = daemon.build(str(lib), cache)
+    path = [str(lib / "pyspark.zip")]
+    st = os.stat(lib / "pyspark.zip")
+    os.utime(lib / "pyspark.zip", ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    new, _ = daemon.compiled_dir(str(lib), cache)
+    assert new != old
+    assert daemon.swap(list(path), cache) is None
+    assert daemon.build(str(lib), cache) == new
+    assert glob.glob(os.path.join(cache, "py-*")) == [new]
+    monkeypatch.setattr(sys.implementation, "cache_tag", "other-99")
+    assert daemon.compiled_dir(str(lib), cache)[0] != new
+    assert daemon.swap(list(path), cache) is None
+
+
+def test_fixture_session_workers_import_compiled_pyspark(spark):
+    cache = daemon.cache_dir()
+
+    def probe(_):
+        import pyspark
+        yield pyspark.__file__, list(sys.path)
+
+    [(pyspark_file, path)] = (spark.sparkContext.parallelize([0], 1)
+                              .mapPartitions(probe).collect())
+    assert pyspark_file.startswith(os.path.join(cache, "py-"))
+    lib = os.path.join("python", "lib", "")
+    assert [p for p in path if p.endswith(".zip") and lib in p] == []
+
+    recs = ops.extract_records(synth.synthetic_corpus(spark, 4,
+                                                      partitions=2))
+    got = {(r.doc_id, r.subj, r.pred, r.obj)
+           for r in ops.triples(recs).collect()}
+    docs = [synth.gen_doc(i) for i in range(4)]
+    expected = {(d["doc_id"],) + t for d in docs for t in extract_document(
+        d["doc_id"], synth.assemble_text(d["spans"])).triples}
+    assert got == expected
