@@ -21,10 +21,13 @@ Local usage: ``python jobs/run_pipeline.py --out <dir> --master 'local[4]'``.
 Run this way, ``session.get_spark`` launches the driver JVM itself: it maps
 the class-data-sharing archive in ``~/.cache/legal_ner_spark`` (the first
 such run on a host records it as the JVM exits), starts the Python workers
-from compiled pyspark bytecode kept there, and puts the repo on the
-workers' ``PYTHONPATH``, so the job runs from any directory.  Under
-``spark-submit``
-the driver JVM already runs, so ``get_spark`` leaves it untouched.
+from compiled pyspark bytecode kept there, sets the mode of each file and
+directory it writes in-process instead of forking ``chmod`` (a local file
+system compiled into a jar there), and puts the repo on the workers'
+``PYTHONPATH``, so the job runs from any directory.  Under ``spark-submit``
+the driver JVM already runs, so ``get_spark`` leaves it untouched.  The
+printed counts come from the ledger rows and the triple table's stored
+predicate counts; only an ``--out`` off the local disk counts them.
 
 The job is resumable: re-submitting with the same --out skips completed
 buckets via the lineage ledger (plans/ledger.py).  Model weights (production
@@ -55,7 +58,7 @@ def main() -> None:
 
     from legal_ner_spark.session import get_spark
     from legal_ner_spark import synth
-    from legal_ner_spark.plans import ledger
+    from legal_ner_spark.plans import ledger, publish
     from legal_ner_spark.operators import extract as ops
     from legal_ner_spark.sources import corpus as src
 
@@ -75,12 +78,25 @@ def main() -> None:
     records = ledger.read_all_records(spark, args.out)
     triples_path = os.path.join(args.out, "triples")
     src.write_triples(ops.triples(records), triples_path)
+    # the counts the run already stored: the ledger rows and the triple
+    # table's predicate counts; a count job only where none were stored
+    # (a non-local --out)
+    rows = ledger.completed_buckets(args.out)
+    records_dir = os.path.join(args.out, "records")
+    written = ({int(d.split("=", 1)[1]) for d in os.listdir(records_dir)
+                if d.startswith("bucket=")}
+               if os.path.isdir(records_dir) else None)
+    n_records = (sum(r["n_records"] for r in rows.values())
+                 if written is not None and written <= rows.keys()
+                 else records.count())
+    pred_counts = publish.read_pred_counts(triples_path)
+    n_triples = (sum(pred_counts.values()) if pred_counts is not None
+                 else spark.read.parquet(triples_path).count())
     summary = {
         "buckets_processed_this_run": processed,
-        "n_records": records.count(),
-        "n_triples": spark.read.parquet(triples_path).count(),
-        "ledger": {k: v["n_records"]
-                   for k, v in ledger.completed_buckets(args.out).items()},
+        "n_records": n_records,
+        "n_triples": n_triples,
+        "ledger": {k: v["n_records"] for k, v in rows.items()},
     }
     print(json.dumps(summary))
     spark.stop()

@@ -51,6 +51,29 @@ Under a non-local master, an existing gateway or a caller's own
 ``local*`` master, the directory holding this package is appended to the
 caller's ``spark.executorEnv.PYTHONPATH``, so workers import the engine
 (and the daemon module) whatever the working directory.
+
+Writes.  Without ``libhadoop.so``, Hadoop's local file system forks
+``/bin/chmod`` for every directory it creates and every file it opens (a
+data file, its ``.crc``, ``_SUCCESS``): ~4 ms each, run serially in the
+writing task.  When ``get_spark`` launches the driver JVM itself and every
+task runs in it (``local``, ``local[N]``, ``local[*]``, ``local[N,F]``;
+not ``local-cluster[...]``, whose executor JVMs would lack the class), it
+sets ``spark.hadoop.fs.file.impl`` to ``NioLocalFileSystem`` and puts its
+jar on ``spark.driver.extraClassPath``.  That checksummed local file system
+sets a mode that fits in 0777 with ``Files.setPosixFilePermissions`` and
+leaves every other case to the stock method, and keeps the rename rule of
+Hive's ``ProxyLocalFileSystem`` (the stock session's ``file:`` FS): the
+same files, sidecars and modes are written.  The jar is compiled once
+(~0.8 s) by the ``javac`` beside the ``java`` above into
+``$XDG_CACHE_HOME/legal_ner_spark/fs-<key>.jar``; ``<key>`` hashes the
+Java source, the JDK's ``release`` and the stat of Spark's
+``hadoop-client-api-*.jar`` (the only classpath ``javac`` gets), and the
+jars of other keys are deleted.  The archive key above gains the jar's, so
+a launch with the jar records and maps an archive of its own beside the
+one without it.  The stock file system stays when the caller sets either
+of those two confs (also through a non-default ``PYSPARK_SUBMIT_ARGS`` or
+``spark-defaults.conf``), when the cache is not writable, or when
+``javac`` is missing or fails.
 """
 
 from __future__ import annotations
@@ -58,9 +81,13 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
+import re
 import shutil
+import subprocess
 import sys
+import tempfile
 import threading
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -76,6 +103,13 @@ _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
 _JAVA_OPTIONS_ENV = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
 # the directory holding the ``legal_ner_spark`` package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the local file system that sets permissions in-process, and the masters
+# whose every task runs in the driver JVM (not ``local-cluster[...]``)
+_FS_SOURCE = os.path.join(_PACKAGE_ROOT, "legal_ner_spark",
+                          "NioLocalFileSystem.java")
+_FS_CLASS = "legal_ner_spark.NioLocalFileSystem"
+_FS_CONF = ("spark.hadoop.fs.file.impl", "spark.driver.extraClassPath")
+_IN_DRIVER_MASTER = re.compile(r"local(\[(\d+|\*)(,\d+)?\])?")
 
 
 def get_spark(app_name: str = "legal-ner-spark", master: str | None = None,
@@ -125,7 +159,11 @@ def get_spark(app_name: str = "legal-ner-spark", master: str | None = None,
     if build is not None:
         builder = builder.config("spark.python.daemon.module",
                                  "legal_ner_spark.daemon")
-    cds = _class_archive(master, extra_conf)
+    jar = _local_fs_jar(master, extra_conf)
+    if jar is not None:
+        builder = (builder.config("spark.driver.extraClassPath", jar)
+                   .config("spark.hadoop.fs.file.impl", _FS_CLASS))
+    cds = _class_archive(master, extra_conf, jar)
     saved = os.environ.get("SPARK_CONF_DIR")
     try:
         if cds is None:
@@ -177,11 +215,102 @@ def _bytecode_build(master: str | None, conf: dict
     return build
 
 
-def _class_archive(master: str | None, conf: dict
+def _jdk_home() -> str | None:
+    """``$JAVA_HOME``, else the JDK of the ``java`` on ``PATH``."""
+    jdk = os.environ.get("JAVA_HOME")
+    if not jdk:
+        java = shutil.which("java")
+        if java is None:
+            return None
+        jdk = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    return jdk
+
+
+def _spark_defaults_name(keys) -> bool:
+    """Whether the ``spark-defaults.conf`` the launch reads names a key."""
+    from pyspark.find_spark_home import _find_spark_home
+    conf_dir = (os.environ.get("SPARK_CONF_DIR")
+                or os.path.join(_find_spark_home(), "conf"))
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as fh:
+            text = fh.read()
+    except OSError:
+        return False
+    return any(k in text for k in keys)
+
+
+def _local_fs_jar(master: str | None, conf: dict) -> str | None:
+    """The jar of ``NioLocalFileSystem`` in the cache, compiled on first
+    use, or None when the stock local file system is kept (see the module
+    docstring).  The jar's key hashes the Java source, the JDK's
+    ``release`` and the Hadoop API jar it is compiled against."""
+    from pyspark.find_spark_home import _find_spark_home
+    if (not _launches_jvm(master) or not _IN_DRIVER_MASTER.fullmatch(master)
+            or any(k in conf for k in _FS_CONF)
+            or os.environ.get("PYSPARK_SUBMIT_ARGS",
+                              "pyspark-shell") != "pyspark-shell"
+            or _spark_defaults_name(_FS_CONF)):
+        return None
+    jdk = _jdk_home()
+    hadoop = glob.glob(os.path.join(_find_spark_home(), "jars",
+                                    "hadoop-client-api-*.jar"))
+    if jdk is None or len(hadoop) != 1:
+        return None
+    javac = os.path.join(jdk, "bin", "javac")
+    cache = daemon.cache_dir()
+    try:
+        with open(_FS_SOURCE, "rb") as fh:
+            key = hashlib.sha256(fh.read())
+        with open(os.path.join(jdk, "release"), "rb") as fh:
+            key.update(fh.read())
+        st = os.stat(hadoop[0])
+        key.update(repr((hadoop[0], st.st_size, st.st_mtime_ns)).encode())
+        os.makedirs(cache, exist_ok=True)
+        if not os.access(cache, os.W_OK):
+            return None
+    except OSError:
+        return None
+    jar = os.path.join(cache, f"fs-{key.hexdigest()[:24]}.jar")
+    if os.path.isfile(jar):
+        return jar
+    try:
+        with tempfile.TemporaryDirectory() as classes:
+            run = subprocess.run([javac, "-nowarn", "-cp", hadoop[0],
+                                  "-d", classes, _FS_SOURCE],
+                                 capture_output=True, timeout=300)
+            if run.returncode != 0:
+                return None
+            fd, tmp = tempfile.mkstemp(prefix=".fs-", suffix=".jar",
+                                       dir=cache)
+            try:
+                with os.fdopen(fd, "wb") as fh, \
+                        zipfile.ZipFile(fh, "w") as zf:
+                    for root, _, files in os.walk(classes):
+                        for f in sorted(files):
+                            full = os.path.join(root, f)
+                            zf.write(full, os.path.relpath(full, classes))
+                os.rename(tmp, jar)
+            finally:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+    except (OSError, subprocess.SubprocessError):
+        return None
+    for old in glob.glob(os.path.join(cache, "fs-*.jar")):
+        if old != jar:
+            try:
+                os.remove(old)
+            except OSError:
+                pass
+    return jar
+
+
+def _class_archive(master: str | None, conf: dict, jar: str | None = None
                    ) -> tuple[str, str] | None:
     """The driver JVM options (the caller's ``spark.driver.extraJavaOptions``
     plus the archive flags) and the empty conf dir to launch with, or None
-    when the archive does not apply (see the module docstring)."""
+    when the archive does not apply (see the module docstring).  ``jar``,
+    the local file system jar the launch puts on the classpath, is folded
+    into the archive's key."""
     from pyspark.find_spark_home import _find_spark_home
     caller = str(conf.get("spark.driver.extraJavaOptions", "")).strip()
     named = " ".join([caller, str(conf.get("spark.driver.defaultJavaOptions",
@@ -195,12 +324,9 @@ def _class_archive(master: str | None, conf: dict
             or any(flag in named for flag in _CDS_FLAGS)):
         return None
     spark_home = _find_spark_home()
-    jdk = os.environ.get("JAVA_HOME")
-    if not jdk:
-        java = shutil.which("java")
-        if java is None:
-            return None
-        jdk = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    jdk = _jdk_home()
+    if jdk is None:
+        return None
     cache = daemon.cache_dir()
     conf_dir = os.path.join(cache, "conf")
     key = hashlib.sha256()
@@ -218,15 +344,21 @@ def _class_archive(master: str | None, conf: dict
         modules = os.stat(os.path.join(jdk, "lib", "modules"))
         key.update(release + repr((jdk, modules.st_size, modules.st_mtime_ns))
                    .encode())
-        for jar in sorted(glob.glob(os.path.join(spark_home, "jars", "*.jar"))):
+        for path in sorted(glob.glob(os.path.join(spark_home, "jars",
+                                                  "*.jar"))):
+            st = os.stat(path)
+            key.update(repr((path, st.st_size, st.st_mtime_ns)).encode())
+        base = stem = key.hexdigest()[:24]
+        if jar:
             st = os.stat(jar)
-            key.update(repr((jar, st.st_size, st.st_mtime_ns)).encode())
+            stem += "-" + hashlib.sha256(repr(
+                (jar, st.st_size, st.st_mtime_ns)).encode()).hexdigest()[:12]
         os.makedirs(conf_dir, exist_ok=True)
         if os.listdir(conf_dir) or not os.access(cache, os.W_OK):
             return None
     except (OSError, IndexError, ValueError):
         return None
-    archive = os.path.join(cache, key.hexdigest()[:24] + ".jsa")
+    archive = os.path.join(cache, stem + ".jsa")
     try:
         with open(archive, "rb") as fh:
             complete = int.from_bytes(fh.read(4), sys.byteorder) == _CDS_MAGIC
@@ -237,7 +369,11 @@ def _class_archive(master: str | None, conf: dict
     else:
         flag = f"-XX:ArchiveClassesAtExit={archive}"
         for old in glob.glob(os.path.join(cache, "*.jsa")):
-            if old != archive:
+            # the archives of one JDK/Spark key with and without the jar
+            # are kept side by side; a new jar replaces the old jar's
+            name = os.path.basename(old)[:-len(".jsa")]
+            if name not in (stem, base) and not (
+                    jar is None and name.startswith(base + "-")):
                 try:
                     os.remove(old)
                 except OSError:

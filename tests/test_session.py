@@ -2,18 +2,23 @@
 when it adds none, and the two JDK behaviours its checks rest on; its
 compiled-pyspark worker daemon (``legal_ner_spark.daemon``): when it is
 named, how its cache directory is keyed, built and swapped in, and that the
-fixture session's workers import pyspark from it.  The unit tests patch
-``getOrCreate`` and start no Spark session."""
+fixture session's workers import pyspark from it; its in-process local file
+system (``NioLocalFileSystem``): when it is named, how its jar is keyed,
+and that it writes what the stock file system writes without forking
+``chmod``.  The unit tests patch ``getOrCreate`` and start no Spark
+session."""
 
 import glob
 import os
 import shutil
+import stat
 import subprocess
 import sys
 import zipfile
 
 import pytest
 from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from legal_ner_spark import daemon, session, synth
@@ -111,12 +116,18 @@ def test_recording_deletes_other_archives(env):
     assert str(stale) != path
 
 
-def _fake_jdk(root, release):
+def _fake_jdk(root, release, javac=None):
+    """A JDK directory with ``release`` and, given its shell body, a
+    ``bin/javac`` script."""
     jdk = root / "jdk"
     (jdk / "lib").mkdir(parents=True)
     (jdk / "lib" / "modules").write_bytes(b"m")
     if release is not None:
         (jdk / "release").write_text(release)
+    if javac is not None:
+        (jdk / "bin").mkdir()
+        (jdk / "bin" / "javac").write_text(f"#!/bin/sh\n{javac}\n")
+        (jdk / "bin" / "javac").chmod(0o755)
     return str(jdk)
 
 
@@ -390,3 +401,285 @@ def test_fixture_session_workers_import_compiled_pyspark(spark):
     expected = {(d["doc_id"],) + t for d in docs for t in extract_document(
         d["doc_id"], synth.assemble_text(d["spans"])).triples}
     assert got == expected
+
+
+# ------------------------------------------------ in-process file system
+
+FS_IMPL = "spark.hadoop.fs.file.impl"
+CLASSPATH = "spark.driver.extraClassPath"
+# the installed Spark's Hadoop API jar (the env fixture replaces SPARK_HOME)
+HADOOP_API = glob.glob(os.path.join(_find_spark_home(), "jars",
+                                    "hadoop-client-api-*.jar"))[0]
+HAS_JAVAC = os.path.exists(os.path.join(_jdk(), "bin", "javac"))
+
+
+def _hadoop_api(env, copy=False):
+    """Put the Hadoop API jar in the fake Spark home: a link, or a copy
+    whose stamp a test may change."""
+    dst = env / "spark" / "jars" / os.path.basename(HADOOP_API)
+    if copy:
+        shutil.copyfile(HADOOP_API, dst)
+    else:
+        dst.symlink_to(HADOOP_API)
+    return dst
+
+
+def _fs_jars(env):
+    return glob.glob(os.path.join(_cache(env), "fs-*.jar"))
+
+
+@pytest.mark.parametrize("master, in_driver", [
+    ("local", True), ("local[2]", True), ("local[*]", True),
+    ("local[4,3]", True), ("local[*,2]", True),
+    ("local-cluster[2,1,1024]", False), ("localhost", False),
+    ("local[x]", False), ("yarn", False)])
+def test_in_driver_masters(master, in_driver):
+    assert bool(session._IN_DRIVER_MASTER.fullmatch(master)) == in_driver
+
+
+@pytest.mark.skipif(not HAS_JAVAC, reason="the JDK has no javac")
+def test_local_launch_names_the_in_process_file_system(env, launches):
+    _hadoop_api(env)
+    get_spark(master="local[2]")
+    opts, _, options = launches[-1]
+    [jar] = _fs_jars(env)
+    assert options[FS_IMPL] == session._FS_CLASS
+    assert options[CLASSPATH] == jar
+    with zipfile.ZipFile(jar) as zf:
+        assert sorted(zf.namelist()) == [
+            "legal_ner_spark/NioLocalFileSystem$Raw.class",
+            "legal_ner_spark/NioLocalFileSystem.class"]
+    # the archive of a launch with the jar is its own
+    archive = [f for f in opts.split() if f.startswith("-XX:")][0]
+    assert archive.split("=", 1)[1] != _archive()
+
+
+FS_GATES = {
+    "no_javac": lambda mp, t: mp.setenv(
+        "JAVA_HOME", _fake_jdk(t, 'JAVA_VERSION="17.0.2"\n')),
+    "javac_fails": lambda mp, t: mp.setenv(
+        "JAVA_HOME", _fake_jdk(t, 'JAVA_VERSION="17.0.2"\n', "exit 1")),
+    "local_cluster": lambda mp, t: "local-cluster[2,1,1024]",
+    "cluster_master": lambda mp, t: "yarn",
+    "gateway_port": lambda mp, t: mp.setenv("PYSPARK_GATEWAY_PORT", "1"),
+    "gateway_running": lambda mp, t: mp.setattr(
+        SparkContext, "_gateway", object()),
+    "caller_fs": lambda mp, t: {
+        FS_IMPL: "org.apache.hadoop.fs.RawLocalFileSystem"},
+    "caller_classpath": lambda mp, t: {CLASSPATH: "/x.jar"},
+    "submit_args": lambda mp, t: mp.setenv(
+        "PYSPARK_SUBMIT_ARGS", "--driver-class-path /x.jar pyspark-shell"),
+    "defaults_file": lambda mp, t: (
+        t / "spark" / "conf" / "spark-defaults.conf").write_text(
+            "spark.driver.extraClassPath /x.jar\n"),
+    "cache_unwritable": lambda mp, t: (
+        (t / "file").write_text("x"),
+        mp.setenv("XDG_CACHE_HOME", str(t / "file"))),
+}
+
+
+@pytest.mark.parametrize("gate", sorted(FS_GATES))
+def test_gate_keeps_the_stock_file_system(env, monkeypatch, launches, gate):
+    _hadoop_api(env)
+    out = FS_GATES[gate](monkeypatch, env)
+    master = out if isinstance(out, str) else "local[2]"
+    conf = out if isinstance(out, dict) else {}
+    get_spark(master=master, extra_conf=conf)
+    options = launches[-1][2]
+    assert options.get(FS_IMPL) == conf.get(FS_IMPL)
+    assert options.get(CLASSPATH) == conf.get(CLASSPATH)
+    assert _fs_jars(env) == []
+
+
+@pytest.mark.skipif(not HAS_JAVAC, reason="the JDK has no javac")
+def test_changed_source_or_hadoop_jar_gets_a_new_jar(env, monkeypatch):
+    hadoop = _hadoop_api(env, copy=True)
+    first = session._local_fs_jar("local[2]", {})
+    built = os.stat(first).st_mtime_ns
+    assert session._local_fs_jar("local[2]", {}) == first
+    assert os.stat(first).st_mtime_ns == built
+    src = env / "src" / "NioLocalFileSystem.java"
+    src.parent.mkdir()
+    with open(session._FS_SOURCE, "rb") as fh:
+        src.write_bytes(fh.read() + b"// changed\n")
+    monkeypatch.setattr(session, "_FS_SOURCE", str(src))
+    second = session._local_fs_jar("local[2]", {})
+    assert second != first
+    assert _fs_jars(env) == [second]
+    st = os.stat(hadoop)
+    os.utime(hadoop, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    third = session._local_fs_jar("local[2]", {})
+    assert third not in (first, second)
+    assert _fs_jars(env) == [third]
+
+
+def test_archive_key_follows_the_jar(env):
+    jars = [env / "a.jar", env / "b.jar"]
+    for j in jars:
+        j.write_bytes(b"jar")
+
+    def archive(jar):
+        opts, _ = _class_archive("local[2]", {}, jar and str(jar))
+        return [f.split("=", 1)[1] for f in opts.split()
+                if f.startswith("-XX:")][0]
+    plain = archive(None)
+    a = archive(jars[0])
+    assert len({plain, a, archive(jars[1])}) == 3
+    assert os.path.basename(a).startswith(os.path.basename(plain)[:-4] + "-")
+    st = os.stat(jars[0])
+    os.utime(jars[0], ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    assert archive(jars[0]) != a
+
+
+def test_recording_keeps_the_archive_with_or_without_the_jar(env):
+    jar = env / "a.jar"
+    jar.write_bytes(b"jar")
+    cache = env / "cache" / "legal_ner_spark"
+    plain = _archive()
+    stem = os.path.basename(plain)[:-4]
+    magic = _CDS_MAGIC.to_bytes(4, sys.byteorder)
+    for name in [stem, stem + "-0123456789ab", "0123456789abcdef01234567"]:
+        (cache / f"{name}.jsa").write_bytes(magic)
+    opts, _ = _class_archive("local[2]", {}, str(jar))
+    assert "-XX:ArchiveClassesAtExit=" in opts
+    assert os.listdir(cache / "conf") == []
+    assert sorted(glob.glob(str(cache / "*.jsa"))) == [plain]
+    # the jar's archive, once written, survives a recording without it
+    with_jar = opts.split("-XX:ArchiveClassesAtExit=", 1)[1].split()[0]
+    with open(with_jar, "wb") as fh:
+        fh.write(magic)
+    os.remove(plain)
+    opts, _ = _class_archive("local[2]", {})
+    assert "-XX:ArchiveClassesAtExit=" + plain in opts
+    assert glob.glob(str(cache / "*.jsa")) == [with_jar]
+
+
+def _tree_modes(root):
+    return {os.path.relpath(os.path.join(d, n), root):
+            stat.S_IMODE(os.stat(os.path.join(d, n)).st_mode)
+            for d, dirs, files in os.walk(root) for n in dirs + files}
+
+
+def _local_fs(spark, cls):
+    jvm = spark._jvm
+    fs = cls()
+    fs.initialize(jvm.java.net.URI("file:///"),
+                  spark._jsc.hadoopConfiguration())
+    return fs
+
+
+@pytest.mark.skipif(not HAS_JAVAC, reason="the JDK has no javac")
+def test_fixture_session_writes_the_stock_layout(spark, tmp_path):
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+    assert fs.getClass().getName() == session._FS_CLASS
+    out = tmp_path / "t"
+    (spark.createDataFrame([(i, f"p{i % 3}") for i in range(12)],
+                           "x int, pred string")
+     .repartition(2).write.partitionBy("pred").parquet(str(out)))
+    modes = _tree_modes(out)
+    data = [p for p in modes if p.endswith(".parquet")]
+    crcs = [os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+            for p in data]
+    dirs = {"pred=p0", "pred=p1", "pred=p2"}
+    assert {os.path.dirname(p) for p in data} == dirs
+    assert set(modes) == (set(data) | set(crcs) | dirs
+                          | {"_SUCCESS", "._SUCCESS.crc"})
+    # Hadoop's default umask (022) applied to 0666 files, 0777 directories
+    assert {p: modes[p] for p in dirs} == dict.fromkeys(dirs, 0o755)
+    assert {m for p, m in modes.items() if p not in dirs} == {0o644}
+
+    Path = jvm.org.apache.hadoop.fs.Path
+    for name in "ab":
+        (tmp_path / name).write_text(name)
+    assert not fs.rename(Path(str(tmp_path / "a")), Path(str(tmp_path / "b")))
+    assert (tmp_path / "b").read_text() == "b"
+    assert fs.rename(Path(str(tmp_path / "a")), Path(str(tmp_path / "c")))
+
+
+@pytest.mark.skipif(not HAS_JAVAC, reason="the JDK has no javac")
+def test_set_permission_matches_the_stock_file_system(spark, tmp_path):
+    """Modes left by ``setPermission`` of Hive's ``ProxyLocalFileSystem``
+    (the stock ``file:`` FS, forking ``chmod``) and of the shim, on a
+    file, a directory, a sticky directory (above 0777: the shim forks too)
+    and a set-group-ID directory, which chmod's 4-digit mode keeps."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    FsPermission = jvm.org.apache.hadoop.fs.permission.FsPermission
+    cases = [("file", 0o644, "-rw-------"), ("file", 0o644, "-rwxr-x---"),
+             ("dir", 0o755, "drwx------"), ("dir", 0o755, "drwxrwxrwt"),
+             ("dir", 0o2775, "drwxr-xr-x")]
+    modes = {}
+    for side, cls in [("stock", jvm.org.apache.hadoop.hive.ql.io
+                       .ProxyLocalFileSystem),
+                      ("shim", getattr(jvm.legal_ner_spark,
+                                       "NioLocalFileSystem"))]:
+        fs = _local_fs(spark, cls)
+        for i, (kind, start, perm) in enumerate(cases):
+            p = tmp_path / side / str(i)
+            if kind == "dir":
+                p.mkdir(parents=True)
+            else:
+                p.parent.mkdir(parents=True, exist_ok=True)
+                p.write_text("x")
+            os.chmod(p, start)
+            fs.setPermission(Path(str(p)), FsPermission.valueOf(perm))
+        modes[side] = _tree_modes(tmp_path / side)
+    assert modes["shim"] == modes["stock"]
+    assert modes["shim"] == {"0": 0o600, "1": 0o750, "2": 0o700,
+                             "3": 0o1777, "4": 0o2755}
+
+
+NO_CHMOD_CHILD = """
+import sys
+from legal_ner_spark import synth
+from legal_ner_spark.session import get_spark
+from jobs.incremental_kg import ingest_batch
+out = sys.argv[1]
+spark = get_spark(master="local[2]", shuffle_partitions=2, extra_conf={
+    "spark.driver.extraJavaOptions": "-Xshare:auto"})
+jvm = spark._jvm
+print(jvm.org.apache.hadoop.fs.FileSystem.get(
+    jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+    .getClass().getName())
+(spark.createDataFrame([(i, f"p{i % 3}") for i in range(12)],
+                       "x int, pred string")
+ .write.partitionBy("pred").parquet(out + "/t"))
+ingest_batch(spark, out + "/kg", synth.synthetic_corpus(spark, 4, 2), "s1")
+sys.stdout.flush()
+# a stock setPermission: the logging chmod is the one the JVM runs
+stock = jvm.org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem()
+stock.initialize(jvm.java.net.URI("file:///"),
+                 spark._jsc.hadoopConfiguration())
+stock.setPermission(jvm.org.apache.hadoop.fs.Path(out + "/t"),
+                    jvm.org.apache.hadoop.fs.permission.FsPermission
+                    .valueOf("drwxr-xr-x"))
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(not HAS_JAVAC, reason="the JDK has no javac")
+def test_local_writes_and_ingest_fork_no_chmod(tmp_path):
+    """A local session with a logging ``chmod`` first on ``PATH``: a
+    partitioned write and an ``ingest_batch`` run none (the session maps
+    no class archive of its own, so it records none)."""
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    log = tmp_path / "chmod.log"
+    (bin_dir / "chmod").write_text(
+        f'#!/bin/sh\necho "$*" >> {log}\nexec {shutil.which("chmod")} "$@"\n')
+    (bin_dir / "chmod").chmod(0o755)
+    child_env = dict(os.environ, PATH=f"{bin_dir}{os.pathsep}"
+                     f"{os.environ.get('PATH', '')}",
+                     PYTHONPATH=session._PACKAGE_ROOT)
+    for k in ("PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET"):
+        child_env.pop(k, None)
+    run = subprocess.run([sys.executable, "-c", NO_CHMOD_CHILD,
+                          str(tmp_path / "out")],
+                         cwd=session._PACKAGE_ROOT, env=child_env,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[0] == session._FS_CLASS
+    assert log.read_text().split("\n")[:-1] == [
+        f"0755 {tmp_path / 'out' / 't'}"]
